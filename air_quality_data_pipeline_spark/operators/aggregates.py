@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..functions.exact import exact_sum, exact_sum_sql
 from ..registry import register
-from ..session import apply_engine_conf, scoped_persist
+from ..session import scoped_persist
 from ..tables import rebalance_for_map, table
 
 _AGG_COUNT_GRP_ORACLE = """
@@ -28,7 +28,6 @@ SELECT event_type, COUNT(*) AS cnt FROM events GROUP BY event_type
 @register("agg_count_grp", oracle=_AGG_COUNT_GRP_ORACLE, tags=("agg",))
 def agg_count_grp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group count (reference main.py:162-167's matches_count)."""
-    apply_engine_conf(spark)
     return (
         table(spark, sf_dir, "events")
         .groupBy("event_type")
@@ -46,7 +45,6 @@ FROM events GROUP BY user_id
 def agg_collect_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct-set accumulation (reference main.py:216's covered-set),
     canonicalized to a sorted CSV string so both engines hash identically."""
-    apply_engine_conf(spark)
     return (
         table(spark, sf_dir, "events")
         .groupBy("user_id")
@@ -63,7 +61,6 @@ FROM events GROUP BY event_type
 @register("agg_count_distinct", oracle=_AGG_COUNT_DISTINCT_ORACLE, tags=("agg",))
 def agg_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact distinct count (reference main.py:217's used_locations set)."""
-    apply_engine_conf(spark)
     return (
         table(spark, sf_dir, "events")
         .groupBy("event_type")
@@ -87,7 +84,6 @@ def agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate instead of the raw sketch: the exact count plus a within-5%
     flag (deterministic on fixed data — HLL++ hashing has no RNG); the
     DuckDB side recomputes exactly and hardcodes the flag true."""
-    apply_engine_conf(spark)
     return (
         table(spark, sf_dir, "events")
         .groupBy("event_type")
@@ -116,7 +112,6 @@ _AGG_GLOBAL_COUNT_ORACLE = "SELECT COUNT(*) AS n FROM lineitem"
 @register("agg_global_count", oracle=_AGG_GLOBAL_COUNT_ORACLE, tags=("agg",))
 def agg_global_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global count (reference main.py:305's len(all_rows))."""
-    apply_engine_conf(spark)
     return table(spark, sf_dir, "lineitem").agg(F.count(F.lit(1)).alias("n"))
 
 
@@ -133,7 +128,6 @@ HAVING COUNT(DISTINCT event_type) = 4
 def agg_superset(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Coverage gate: groups whose value-set covers the full allowlist
     (reference main.py:278's covered.issuperset(PARAMETERS))."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     return (
         ev.filter(F.col("event_type").isin("click", "view", "purchase", "error"))
@@ -161,7 +155,6 @@ GROUP BY l_returnflag, l_linestatus
 def agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """sum/avg/min/max hash aggregate (engine completeness beyond the
     reference, SURVEY §2.D note) — TPC-H Q1's shape."""
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag", "l_linestatus").agg(
         F.count(F.lit(1)).alias("cnt"),
@@ -186,7 +179,6 @@ GROUP BY ROLLUP(l_returnflag, l_linestatus)
 @register("agg_rollup", oracle=_AGG_ROLLUP_ORACLE, tags=("agg",))
 def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP hierarchical aggregate with grouping-id disambiguation."""
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     return li.rollup("l_returnflag", "l_linestatus").agg(
         F.grouping_id().alias("gid"),
@@ -207,7 +199,6 @@ GROUP BY CUBE(l_returnflag, l_linestatus)
 @register("agg_cube", oracle=_AGG_CUBE_ORACLE, tags=("agg",))
 def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE aggregate over all grouping-set combinations."""
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     return li.cube("l_returnflag", "l_linestatus").agg(
         F.grouping_id().alias("gid"),
@@ -233,7 +224,6 @@ def agg_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines compute index p*(n-1) with linear interpolation, so results are
     bit-exact. Exact percentiles require a per-group sort — fine on bounded
     groups; for 100 TB unbounded groups use agg_approx_quantiles."""
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.expr("percentile(l_quantity, 0.5D)").alias("p50_qty"),
@@ -260,7 +250,6 @@ def agg_approx_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact percentiles as value columns plus within-5% flags comparing the
     sketch against them (deterministic on fixed data); DuckDB recomputes
     exactly and hardcodes the flags true."""
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     agg = li.groupBy("l_returnflag").agg(
         F.expr("percentile(l_quantity, 0.5D)").alias("p50_qty"),
@@ -328,7 +317,6 @@ def agg_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-group scalar expression. The built-in ``corr()`` keeps float state
     whose result drifts with partition combine order; this formulation is
     bit-stable at any parallelism — on 32 cores or 1000 executors."""
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     q = li.select(
         "l_returnflag",
@@ -373,7 +361,6 @@ def agg_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     built-in ``mode()`` has engine-specific ties; the struct-max contract
     is portable and is the formulation that survives 100 TB (the heavy
     first aggregate keys on (group, value), so hot groups still spread)."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     c = ev.groupBy("event_type", "user_id").agg(F.count(F.lit(1)).alias("cnt"))
     s = F.struct("cnt", "user_id")
@@ -419,7 +406,6 @@ def agg_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     go through DECIMAL so combine order cannot perturb them. Spark's own
     ``histogram_numeric`` is an approximating sketch with engine-specific
     centroids; this fixed-grid formulation is portable and exact."""
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     b = li.select(
         F.expr(
@@ -456,7 +442,6 @@ def agg_sketch_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB's HLL is a different implementation, so cross-engine value
     equality is not defined; tests/test_properties.py asserts the estimate
     lands within 5%% of exact (standard error at lgK=12 is ~1.6%%)."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     daily = ev.groupBy(F.date_trunc("day", F.col("ts")).alias("day")).agg(
         F.hll_sketch_agg("user_id").alias("sk"),
@@ -510,7 +495,6 @@ def agg_argmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate, one exchange carrying a single (pair, key) cell per (task,
     group). The struct ordering value makes ties deterministic; at 100 TB
     this is the difference between one shuffle and two full fact scans."""
-    apply_engine_conf(spark)
     return (
         table(spark, sf_dir, "orders")
         .groupBy("o_custkey")
@@ -548,7 +532,6 @@ def agg_string_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     task arrival and is NOT stable across runs or cluster sizes, so any
     string-agg that skips the sort is silently nondeterministic at scale.
     Grouping cardinality bounds memory (per-group list, not per-partition)."""
-    apply_engine_conf(spark)
     nat = table(spark, sf_dir, "nation")
     reg = table(spark, sf_dir, "region")
     return (
@@ -619,7 +602,6 @@ def agg_skew_kurt(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries five BIGINT cells per (task, group), nothing more, at any
     scale. x^4 sums stay under 2^53 up to ~10^9 rows/group; beyond that the
     same query swaps BIGINT for DECIMAL(38,0) accumulators (as agg_corr)."""
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     q = li.select("l_returnflag", F.expr("CAST(floor(l_quantity) AS BIGINT)").alias("x"))
     s = q.groupBy("l_returnflag").agg(
@@ -661,7 +643,6 @@ def agg_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-merge shape as agg_sketch_union but exact, which is why the
     result is fully oracle-checkable against COUNT(DISTINCT). The
     n_events recount rides the first aggregate for free."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     buckets = ev.groupBy(
         "event_type", F.expr("bitmap_bucket_number(user_id)").alias("bkt")
@@ -696,7 +677,6 @@ def agg_any_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     per group, the cheapest possible exchange. Cast to INT for a portable
     hash contract (pandas bool vs int dtype). dq_rules is the applied
     composite; this pins the primitive itself."""
-    apply_engine_conf(spark)
     od = table(spark, sf_dir, "orders")
     return od.groupBy("o_orderpriority").agg(
         F.expr("CAST(bool_and(o_totalprice > 1000.0D) AS INT)").alias("all_over_1k"),
@@ -735,7 +715,6 @@ def agg_grouping_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-column bits. Same single Expand + hash-aggregate plan as agg_cube
     — GROUPING() reads the expand-generated bitmask for free, no extra
     pass."""
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     return (
         li.cube("l_returnflag", "l_linestatus").agg(
@@ -785,7 +764,6 @@ def agg_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     running averages are order-dependent; the two-power-sum form is
     associative, which is what makes it identical on any partitioning
     and in DuckDB."""
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     wx = F.col("l_extendedprice").cast("decimal(18,4)") * F.col("l_quantity").cast(
         "decimal(9,2)"
@@ -828,7 +806,6 @@ def agg_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     full scans by the metric count, which at 100 TB is the whole budget.
     Each FILTER predicate evaluates map-side, so partial aggregation
     still combines before the exchange."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     return ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_total"),
@@ -876,7 +853,6 @@ def agg_approx_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the count-equality audit. At 100 TB you keep the sketch and drop
     the exact branch; the fixture keeps both so correctness is
     value-hash-checkable."""
-    apply_engine_conf(spark)
     toks = table(spark, sf_dir, "documents").select(
         F.explode(F.split("text", " ")).alias("word")
     )
@@ -972,7 +948,6 @@ def agg_countmin_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the entire point of a sketch at 100 TB; the sketch then broadcasts to
     the constant-size probe panel. Hashes are the engine-portable md5 fold,
     so the full estimate path is value-checked cross-engine."""
-    apply_engine_conf(spark)
     # one-row-group fixture scans are 1 task; spread before the heavy
     # per-row map work (profiled single-task stage; see OPTIMIZATION_r10.md)
     li = rebalance_for_map(
@@ -1066,7 +1041,6 @@ def agg_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     key on event_type so the window exchange is reused. Per-cell terms are
     FLOOR-quantized to integer micro-nats before summation (order-free
     partials; the single ln() sees identical doubles in both engines)."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     cells = ev.groupBy(
         "event_type", F.hour("ts").cast("bigint").alias("hr")
@@ -1134,7 +1108,6 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-group sort is the cost — for unbounded groups at 100 TB switch to
     the approx_percentile sketch with the weight EXPANDED into the sketch
     (agg_approx_quantiles shows the accuracy-gate pattern)."""
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     base = li.select(
         F.col("l_returnflag").alias("grp"),
@@ -1204,7 +1177,6 @@ def agg_sketch_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The union sketch reuses the same scan via conditional NULLs — one
     pass, four aggregates, 1 output row at any input size."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     in_a = F.when(F.col("event_type") == "click", F.col("user_id"))
     in_b = F.when(F.col("event_type") == "purchase", F.col("user_id"))
@@ -1288,7 +1260,6 @@ def agg_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~10⁶; ANSI mode fails LOUDLY past that, and the remedy is casting the
     two sums to DECIMAL(38,0), exact in both engines), so the result is
     bit-identical on any partitioning."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     from pyspark.sql import Window
 
@@ -1366,7 +1337,6 @@ def agg_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL(20,4) idiom; the only float work is share division on
     exact-operand doubles and the FLOOR-pico-quantized share² terms
     (order-free partial sums)."""
-    apply_engine_conf(spark)
     from pyspark.sql import Window
 
     li = table(spark, sf_dir, "lineitem")
@@ -1471,7 +1441,6 @@ def agg_wilson_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     BIGINT cells; all the interval algebra is row-local arithmetic on
     the bounded cell table, with the single sqrt fed identical
     exact-ratio doubles in both engines (ROUND(9) for the ulp)."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     g = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -1578,7 +1547,6 @@ def agg_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     generator, never k unioned scans; the bounded bit table then joins
     the constant 96-row probe side. The exact anchor prunes its scan to
     the panel key range at the parquet reader."""
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     # spread only the bits build (k md5 bit positions per row, profiled
     # single-task); the exact anchor below keeps its pruned pushed-filter scan
@@ -1683,7 +1651,6 @@ def agg_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by the domain, broadcast at any corpus size. Every double
     divides exact operands; ROUND(9)/ROUND(6) absorb the sqrt/square
     ulp."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     dec = F.col("value").cast("decimal(18,9)")
     g = ev.groupBy("event_type").agg(
@@ -1783,7 +1750,6 @@ def agg_geomean(spark: SparkSession, sf_dir: str) -> DataFrame:
     is partition-order-free (a raw double SUM of ln terms would not be).
     Closing exp/divisions see exact operands; ROUND(6) absorbs the
     ulp."""
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     t = li.select(
         "l_returnflag",
@@ -1950,7 +1916,6 @@ def agg_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-partition window ever sees a value grain), joined back onto
     the cell table, and one moment aggregate closes. The fact table is
     scanned exactly once."""
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem").select(
         F.col("l_returnflag").alias("flag"),
         # explicit floor, NOT a bare bigint cast: Spark's double->bigint
@@ -2061,7 +2026,6 @@ def agg_mannwhitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts; ranking and the closing statistic are arithmetic on that
     dimension-bounded cell table. Nothing downstream of the first
     aggregate sees a fact-table row."""
-    apply_engine_conf(spark)
     li = (
         table(spark, sf_dir, "lineitem")
         .filter(F.col("l_returnflag").isin("A", "R"))
@@ -2175,7 +2139,6 @@ def agg_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum) cells, then the deviation pass with the k-row mean table
     broadcast back onto the scan; both aggregates are map-side
     combinable and the exchanges carry cells, not rows."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events").select(
         "event_type", F.floor(F.col("value") * 1000000.0).cast("bigint").alias("v")
     )
@@ -2281,7 +2244,6 @@ def agg_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     — 300 pairs — and is grain-bounded, never corpus-bounded, the same
     bounded-panel discipline as llm_rouge_n. The closing row is scalar
     arithmetic."""
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem").select(
         "l_partkey",
         F.floor(F.col("l_quantity") * 100.0).cast("bigint").alias("xq"),
@@ -2386,7 +2348,6 @@ def agg_theil(spark: SparkSession, sf_dir: str) -> DataFrame:
     grain; the |nations|-row totals broadcast back onto that cell table;
     one more cell-grain aggregate closes. Nothing after the first
     collapse touches a lineitem row."""
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem").select(
         "l_suppkey",
         F.floor(F.col("l_extendedprice") * 100.0).cast("bigint").alias("cents"),
@@ -2479,7 +2440,6 @@ def agg_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     grain discipline); every window rides that dimension-sized table.
     A continuous-valued column would first bucket to micro-units,
     bounding the grain at 10^6 cells per group."""
-    apply_engine_conf(spark)
     from pyspark.sql import Window
 
     li = table(spark, sf_dir, "lineitem")
@@ -2569,7 +2529,6 @@ def agg_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     x statuses| cell grain (15 cells at any SF); margins, the micro-
     quantized order-free chi-squared sum, and the closing scalar all ride
     broadcast joins over that constant-size table. One fact scan total."""
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     obs = scoped_persist(
         orders.groupBy(
@@ -2668,7 +2627,6 @@ def agg_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
     margins and the total broadcast back onto that constant-size table;
     the fact is scanned exactly once and no exchange after the collapse
     carries event-grain rows."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     obs = scoped_persist(
         ev.groupBy(
@@ -2779,7 +2737,6 @@ def agg_cohens_d(spark: SparkSession, sf_dir: str) -> DataFrame:
     |status x flag| grain (4 cells); the conditional pivot and the whole
     effect-size formula run on that constant-size table. One fact scan,
     one tiny exchange."""
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag").isin("R", "N"))
     centi = F.floor(F.col("l_quantity") * 100.0).cast("bigint")
     m = li.groupBy(
@@ -2866,7 +2823,6 @@ def agg_topn_other(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ONE map-side collapse to the |categories| grain; the
     1-row total broadcasts back; the fold and re-aggregate ride the
     dimension-sized cell table. The fact is scanned once."""
-    apply_engine_conf(spark)
     part = table(spark, sf_dir, "part")
     c = scoped_persist(
         part.groupBy(F.col("p_type").alias("category")).agg(
@@ -2977,7 +2933,6 @@ def agg_levene(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the map-side-combined cell collapse. The between-group sum is
     evaluated on a k-row table (k = 5 types) after exact-integer inputs,
     so its double arithmetic is partition-count-independent."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     cells = ev.groupBy(
         "event_type",
@@ -3147,7 +3102,6 @@ def agg_jackknife_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-free (DECIMAL(38,0) squares — no int64 overflow through
     sf100). Two corpus passes, zero corpus-keyed shuffles beyond the
     3-cell aggregate."""
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     rows_q = li.select(
         "l_returnflag",
@@ -3303,7 +3257,6 @@ def agg_bayes_shrink(spark: SparkSession, sf_dir: str) -> DataFrame:
     are a second pass over the |brands| cell table with micro-quantized
     terms (order-free); shrinkage is row-local algebra on that same cell
     table. The fact is scanned once."""
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem").select("l_partkey", "l_quantity")
     part = table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     j = li.join(F.broadcast(part), li.l_partkey == part.p_partkey).select(
@@ -3425,7 +3378,6 @@ def agg_circular_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     then quantized to exact nano-units), so the resultant reduces to ONE
     map-side-combined integer sum per type; atan2/sqrt/ln run on the
     k-row cell table."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     frac = (
         F.hour("ts") * 3600 + F.minute("ts") * 60 + F.second("ts").cast("bigint")
@@ -3506,7 +3458,6 @@ def agg_chao1(spark: SparkSession, sf_dir: str) -> DataFrame:
     frequency-of-frequency reduction is a second map-side-combined
     aggregate on the vocabulary-grain table. Bias-corrected chao1
     (f2+1 denominator) stays finite when no doubletons exist."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     w = (
         docs.select(
@@ -3627,7 +3578,6 @@ def agg_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     not B*N rows. Replicate means are exact integer ratios; the SE
     variance runs on nano-quantized integers (DECIMAL(38,0) squares), so
     the interval is partition-count-independent."""
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", F.floor(F.col("l_quantity")).cast("bigint").alias("qty"),
         "l_returnflag",
@@ -3763,7 +3713,6 @@ def agg_tail_contrib(spark: SparkSession, sf_dir: str) -> DataFrame:
     8-row per-range totals); the 1-row threshold broadcasts into a
     second map-side-combined counting pass per brand. No
     single-partition window ever sees the value grain."""
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     cents_col = F.floor(F.col("l_extendedprice") * 100.0 + 0.5).cast("bigint")
     cells = li.groupBy(cents_col.alias("cents")).agg(
@@ -3903,7 +3852,6 @@ def agg_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integers; the weighted median rides a cumulative window over
     the bounded pair table in half-unit integers (lo+hi order stats, no
     interpolated double until the final /4.0 under ROUND(9))."""
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     cells = li.groupBy(
         "l_returnflag",
@@ -4019,7 +3967,6 @@ def agg_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     supports collapse to the <= |brands|^2 = 625-cell grain and the
     25-row item-support table broadcasts back onto pairs.
     Confidence/lift divide exact BIGINTs."""
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     pt = table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     baskets = (
@@ -4158,7 +4105,6 @@ def agg_ols2(spark: SparkSession, sf_dir: str) -> DataFrame:
     moments cancel their n^2 factors inside the Cramer ratios — doubles
     enter only at the final division, the same IEEE op tree DuckDB runs,
     det and variance nullif-guarded."""
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     pt = table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     u = li.join(F.broadcast(pt), li.l_partkey == pt.p_partkey).select(

@@ -41,7 +41,7 @@ from ..functions.text import (
     tokens_spark,
 )
 from ..registry import register
-from ..session import apply_engine_conf, scoped_persist, set_compute_dense_floor
+from ..session import COMPUTE_DENSE, scoped_persist
 from ..tables import rebalance_for_map, table
 
 # --- llm_exact_dedup ---------------------------------------------------------
@@ -58,7 +58,6 @@ def llm_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup by content digest: group on sha2(text, 256), keep the
     minimum doc_id as canonical. The shuffle key is the 32-byte digest, not
     the document — at 100 TB the exchange carries hashes, not text."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     return (
         docs.groupBy(F.sha2("text", 256).alias("text_hash"))
@@ -127,7 +126,14 @@ WHERE CAST(n_inter AS DOUBLE) / (n_a + n_b - n_inter) >= 0.6
 """
 
 
-@register("llm_minhash_dedup", oracle=_MINHASH_ORACLE, tags=("llm", "dedup"))
+# AQE's byte-based coalescing folded the bucket pair expansion onto ONE
+# core (0.66 s task) and the array-intersect verify onto FOUR (3.4 s CPU)
+# at sf0.1 — the shuffled bytes are MBs but the per-row compute is heavy
+# (guide §2: compute-blind coalescing). COMPUTE_DENSE keeps those stages
+# wide; at cluster scale they carry GBs and the floor never binds.
+@register(
+    "llm_minhash_dedup", oracle=_MINHASH_ORACLE, tags=("llm", "dedup"), confs=COMPUTE_DENSE
+)
 def llm_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash near-dup detection, fully engine-portable: tokens are hashed
     once per document (md5-fold, functions/hashing.py), 3-gram shingle
@@ -138,17 +144,6 @@ def llm_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Every synthesized near-dup (doc + copy-minus-last-token) must surface;
     random cross-doc pairs are killed by the Jaccard gate.
     """
-    apply_engine_conf(spark)
-    # AQE's byte-based coalescing folded the bucket pair expansion onto ONE
-    # core (0.66 s task) and the array-intersect verify onto FOUR (3.4 s
-    # CPU) at sf0.1 — the shuffled bytes are MBs but the per-row compute is
-    # heavy (guide §2: compute-blind coalescing). Lowering the coalesce
-    # floor for this query keeps those stages wide; at cluster scale the
-    # stages carry GBs and the floor is never the binding constraint.
-    # Derivation + build→execute sequencing contract: session.py
-    # set_compute_dense_floor. Restored by the next query's
-    # apply_engine_conf.
-    set_compute_dense_floor(spark)
     docs = table(spark, sf_dir, "documents")
     corpus = docs.select("doc_id", "text").unionByName(
         docs.select(
@@ -178,7 +173,7 @@ def llm_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sort-spill bytes (profiled at sf10: the array exchange + its
     # sort-merge spill, 5.98 G write / 11.7 G disk spill, is what ran
     # sf30 out of local disk — not the persist at 0.41 G, not the band
-    # bucket exchange at 1.05 G; scripts/profile_minhash.py).
+    # bucket exchange at 1.05 G; per-stage shuffle/spill profile).
     shingled = hashed.select(
         "doc_id",
         F.array_distinct(
@@ -292,7 +287,6 @@ def llm_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     each of 24 bit positions; the sign vector is folded back into one bigint.
     Near-dup docs differ in few bits (Hamming distance) — pair search then
     bands the fingerprint bytes, same pattern as llm_minhash_dedup."""
-    apply_engine_conf(spark)
     docs = rebalance_for_map(table(spark, sf_dir, "documents"), spark)
     tok = docs.select(
         "doc_id",
@@ -339,7 +333,6 @@ def llm_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact n-gram Jaccard similarity join on a bounded subset (doc_id <
     100): the ground-truth variant MinHash approximates. The pairwise stage
     is the explicit O(n²)-capable path — bounded input by construction."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
     sub = docs.select(
         "doc_id", F.array_distinct(F.expr(shingles_spark(tokens_spark("text")))).alias("sh")
@@ -371,7 +364,6 @@ def llm_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHashLSH near-dup join via Spark MLlib (HashingTF → MinHashLSH →
     approxSimilarityJoin) — the battle-tested scale path. Rows-only check:
     MLlib's hash family is JVM-specific, unverifiable cross-engine."""
-    apply_engine_conf(spark)
     from pyspark.ml.feature import HashingTF, MinHashLSH
 
     docs = table(spark, sf_dir, "documents")
@@ -434,7 +426,12 @@ FROM reach GROUP BY a
 """
 
 
-@register("llm_dedup_clusters", oracle=_CLUSTERS_ORACLE, tags=("llm", "dedup", "iterative"))
+@register(
+    "llm_dedup_clusters",
+    oracle=_CLUSTERS_ORACLE,
+    tags=("llm", "dedup", "iterative"),
+    confs=COMPUTE_DENSE,  # builds on llm_minhash_dedup
+)
 def llm_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the MinHash near-dup pairs — the step that
     turns pairwise matches into dedup decisions (keep one canonical doc per
@@ -447,7 +444,6 @@ def llm_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     same fixpoint via DuckDB's recursive transitive closure, so the
     iterative implementation is verified against closed-form reachability.
     """
-    apply_engine_conf(spark)
     pairs = llm_minhash_dedup(spark, sf_dir).select("doc_a", "doc_b")
     und = pairs.unionByName(
         pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
@@ -518,7 +514,6 @@ def llm_incr_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     text keys as '' (can't collide with any real 64-hex digest); the
     oracle applies the same coalesce so both engines agree by
     construction."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     batch = docs.filter(F.col("doc_id") % 10 == 7).select(
         "doc_id", F.coalesce(F.sha2("text", 256), F.lit("")).alias("text_hash")
@@ -591,7 +586,6 @@ def llm_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     result stays bounded; the full cleaned text is one concat_ws away.
     This is the dedup C4 applies before training (three-sentence / line
     dedup) — the reference has no analog (north-star mandate)."""
-    apply_engine_conf(spark)
     docs = rebalance_for_map(table(spark, sf_dir, "documents"), spark)
     t = docs.select(
         "doc_id",
@@ -705,7 +699,6 @@ def llm_dedup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     and because both branches are deterministic portable hashing, the
     audit itself is oracle-checked exactly. The all-pairs join is bounded
     by the literal panel cap, so audit cost is constant at any sf."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents").filter(F.col("doc_id") < _AUDIT_DOCS)
     corpus = docs.select("doc_id", "text").unionByName(
         docs.select(
@@ -811,7 +804,6 @@ def llm_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     text never moves. This is the policy layer the hash-dedup family
     (llm_exact_dedup drops later copies; minhash clusters report pairs)
     deliberately leaves out."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     return docs.groupBy(
         F.md5(F.expr("substring(text, 1, 40)")).alias("cluster_key")
@@ -885,7 +877,6 @@ def llm_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the digest aggregate is the only big shuffle and it is
     map-side combinable. Coverage arithmetic is all-integer until the
     final division, so the result is engine-exact."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     corpus = docs.select("doc_id", "text").unionAll(
         docs.filter(F.col("doc_id") % 3 == 0).select(
@@ -984,7 +975,6 @@ def llm_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratic tail explicit — the production path at 100 TB is the same
     candidates-then-verify recipe with LSH candidates (llm_minhash_dedup)
     feeding this exact containment verify."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
     sub = docs.select(
         "doc_id",
@@ -1091,7 +1081,16 @@ WHERE bit_count(xor(f_a, f_b)) <= {_SH2_HAMMING_MAX}
 """
 
 
-@register("llm_simhash_neardup", oracle=_SIMHASH_NEARDUP_ORACLE, tags=("llm", "dedup"))
+# the bucket pair-expansion + hamming verify stage reads < 1 MB of
+# (band, bv) buckets but runs nested per-bucket transforms — AQE's
+# byte-based coalescing folded it onto ONE task (0.92 s CPU at sf0.1,
+# profiled r11). Same compute-blind-coalescing fix as llm_minhash_dedup.
+@register(
+    "llm_simhash_neardup",
+    oracle=_SIMHASH_NEARDUP_ORACLE,
+    tags=("llm", "dedup"),
+    confs=COMPUTE_DENSE,
+)
 def llm_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-duplicate PAIRS via banded-Hamming LSH — the production
     simhash dedup loop (llm_simhash stops at fingerprints): 60-bit
@@ -1106,13 +1105,6 @@ def llm_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture scale, and the documented production widening (64-bit fp,
     4 x 16 bands) is the same plan with different constants. Near-dups
     synthesized as drop-last-token twins, as in llm_minhash_dedup."""
-    apply_engine_conf(spark)
-    # the bucket pair-expansion + hamming verify stage reads < 1 MB of
-    # (band, bv) buckets but runs nested per-bucket transforms — AQE's
-    # byte-based coalescing folded it onto ONE task (0.92 s CPU at sf0.1,
-    # profiled r11). Same compute-blind-coalescing fix as
-    # llm_minhash_dedup; restored by the next query's apply_engine_conf.
-    set_compute_dense_floor(spark)
     docs = table(spark, sf_dir, "documents")
     corpus = docs.select("doc_id", "text").unionByName(
         docs.select(
@@ -1248,7 +1240,6 @@ def llm_cross_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bulk of bucket volume at corpus scale, never exist. The eval
     side is tiny and could broadcast; the plan keeps the symmetric form
     so the same query serves eval panels of any size."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     corpus = docs.select("doc_id", "text", F.lit(0).alias("side")).unionByName(
         docs.filter(F.col("doc_id") < _XDEDUP_EVAL_DOCS).select(
@@ -1361,7 +1352,6 @@ def llm_prefix_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries (digest, doc_id, 8-token prefix) — never the document; the
     aggregate combines map-side and the HAVING prunes singleton groups
     before any row leaves the final aggregation."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     p = (
         docs.filter(F.col("text").isNotNull())
@@ -1439,7 +1429,6 @@ def llm_lsh_tune(spark: SparkSession, sf_dir: str) -> DataFrame:
     deliberately capped); the probability algebra is per-row projection
     work. Tuning at 100 TB = running this panel on a sampled slice, which
     is exactly what the bound expresses."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
     sub = docs.select(
         "doc_id",
@@ -1545,7 +1534,6 @@ def llm_minhash_est_err(spark: SparkSession, sf_dir: str) -> DataFrame:
     signatures and shingle sets are computed once per doc on the <= 100
     panel rows, the pair join carries 8-int signatures + hash sets.
     Corpus-scale estimator audits run this on sampled panels."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents").filter(
         # tokens >= 3 == non-empty shingle list; cheap pre-filter, never
         # a predicate on the computed array (the llm_minhash_dedup 20x

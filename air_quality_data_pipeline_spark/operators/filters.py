@@ -25,7 +25,6 @@ from ..functions.geo import (
     synthetic_lon,
 )
 from ..registry import register
-from ..session import apply_engine_conf
 from ..tables import table
 
 _FLT_FRESH_ORACLE = """
@@ -43,7 +42,6 @@ def flt_fresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference uses wall-clock now. The max is a 1-row broadcast, not a
     driver collect.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     mx = ev.agg(F.max("ts").alias("max_ts"))
     return (
@@ -62,7 +60,6 @@ WHERE event_type IN ('error', 'purchase')
 @register("flt_isin", oracle=_FLT_ISIN_ORACLE, tags=("filter",))
 def flt_isin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Set-membership predicate (parameter allowlist, reference main.py:162, 242)."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     return ev.filter(F.col("event_type").isin("error", "purchase")).select(
         "event_id", "event_type", "value"
@@ -84,7 +81,6 @@ def flt_notnull(spark: SparkSession, sf_dir: str) -> DataFrame:
     The fixtures carry no physical nulls, so nulls are derived with NULLIF —
     the IS NOT NULL semantics are exercised for real.
     """
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     return (
         li.filter(F.nullif(F.col("l_returnflag"), F.lit("A")).isNotNull())
@@ -109,7 +105,6 @@ def flt_numeric(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cast-validity predicate: keep numeric-castable strings only
     (reference main.py:249-252's try/float). ANSI-safe via TRY_CAST.
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     mixed = ev.withColumn(
         "s",
@@ -145,7 +140,6 @@ def flt_geo(spark: SparkSession, sf_dir: str) -> DataFrame:
     Warsaw. Distance rounded to whole meters (trig libms differ in the last
     ulp across engines).
     """
-    apply_engine_conf(spark)
     cust = table(spark, sf_dir, "customer")
     dist = haversine_m(
         synthetic_lat(F.col("c_custkey")),
@@ -173,7 +167,6 @@ WHERE EXISTS (
 def flt_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Non-empty-group existence predicate as a left-semi join (reference
     main.py:162-163, 227-228: keep stations with ≥1 match)."""
-    apply_engine_conf(spark)
     cust = table(spark, sf_dir, "customer")
     orders = table(spark, sf_dir, "orders")
     big = orders.filter(F.col("o_totalprice") > 300000.0)
@@ -201,7 +194,6 @@ def proj_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the reference's 6-column row build, main.py:262-269). Catalyst's
     ColumnPruning pushes the 6-of-16 column selection into the parquet scan
     (ReadSchema) — at 100 TB the scan reads ~1/3 of the bytes."""
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     return li.select(
         F.col("l_orderkey").alias("order_id"),

@@ -30,7 +30,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..registry import register
-from ..session import apply_engine_conf, scoped_persist, set_compute_dense_floor
+from ..session import COMPUTE_DENSE, scoped_persist
 from ..tables import rebalance_for_map, table
 
 _SCALE = 1_000_000_000_000  # 10^12 fixed-point scale
@@ -43,8 +43,8 @@ _DAMP_NUM, _DAMP_DEN = 85, 100
 # (applicationId, sf_dir) so a driver pass running both queries
 # materializes it ONCE (ADVICE r5). The memo holds one entry: switching
 # sf_dir or restarting the session evicts (and unpersists) the old one.
-# This deliberately bypasses scoped_persist — its blocks are freed by the
-# NEXT query's apply_engine_conf, which is exactly the reuse window here.
+# This deliberately bypasses scoped_persist — its blocks are freed when
+# the NEXT query is built, which is exactly the reuse window here.
 # The edge set is |supplier-pairs above the mean| rows (two ints each),
 # orders of magnitude below lineitem, so holding it cached is cheap.
 _EDGE_MEMO: dict[tuple[str, str], DataFrame] = {}
@@ -86,9 +86,7 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # under the stock 1MB AQE floor — together most of the cold edge
     # build's wall (interleaved A/B: 2.7 s -> 1.4 s). The rebalance is
     # semantically inert (a groupBy-join consumes it); the floor is the
-    # compute-dense coalescing fix shared with llm_minhash_dedup,
-    # restored by the next query's apply_engine_conf.
-    set_compute_dense_floor(spark)
+    # COMPUTE_DENSE coalescing fix shared with llm_minhash_dedup.
     li = rebalance_for_map(
         table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey"), spark
     )
@@ -213,7 +211,9 @@ ORDER BY pr_fixed DESC, suppkey
 """
 
 
-@register("graph_pagerank", oracle=_PAGERANK_ORACLE, tags=("graph", "iterative"))
+@register(
+    "graph_pagerank", oracle=_PAGERANK_ORACLE, tags=("graph", "iterative"), confs=COMPUTE_DENSE
+)
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-iteration PageRank over the supplier co-purchase graph.
 
@@ -236,7 +236,6 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank and degree sides broadcast at any realistic |V| — and reduces by
     dst with map-side partial sums. 3 iterations = 3 such rounds; lineage
     is shallow enough that no checkpoint is needed."""
-    apply_engine_conf(spark)
     edges = _copurchase_edges(spark, sf_dir)
     # round-11: deg is consumed every round (contribution divisor) plus
     # by n_nodes, and n_nodes broadcasts into every round's teleport term
@@ -316,7 +315,7 @@ ORDER BY n_triangles DESC, suppkey
 """
 
 
-@register("graph_triangles", oracle=_TRIANGLES_ORACLE, tags=("graph",))
+@register("graph_triangles", oracle=_TRIANGLES_ORACLE, tags=("graph",), confs=COMPUTE_DENSE)
 def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-node triangle counts on the supplier co-purchase graph — the
     canonical multi-way self-join graph workload (clustering-coefficient
@@ -348,7 +347,6 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     The edge set is the memoized symmetric one shared with graph_pagerank;
     the graph is symmetric, so filtering src < dst AFTER the mean
     threshold yields exactly the oracle's fwd orientation."""
-    apply_engine_conf(spark)
     tri = _oriented_triangles(spark, sf_dir)
     # ONE pass: explode each triangle to its 3 corners map-side. The
     # union-of-three-selects formulation recomputes the whole
@@ -418,7 +416,7 @@ ORDER BY suppkey
 """
 
 
-@register("graph_cc", oracle=_cc_oracle(), tags=("graph", "iterative"))
+@register("graph_cc", oracle=_cc_oracle(), tags=("graph", "iterative"), confs=COMPUTE_DENSE)
 def graph_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components on the supplier co-purchase graph by
     min-label propagation — the reachability primitive under duplicate
@@ -461,7 +459,6 @@ def graph_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
       sf0.1 wall, profiled r11). Caching each round's |V|-row table
       makes the lineage linear.
     """
-    apply_engine_conf(spark)
     edges = _copurchase_edges(spark, sf_dir)
     m1 = edges.groupBy(F.col("dst").alias("node")).agg(F.min("src").alias("minl"))
     nodes = edges.select(F.col("src").alias("node")).distinct()
@@ -552,7 +549,7 @@ JOIN deg db ON db.node = f.dst
 """
 
 
-@register("graph_jaccard", oracle=_JACCARD_ORACLE, tags=("graph",))
+@register("graph_jaccard", oracle=_JACCARD_ORACLE, tags=("graph",), confs=COMPUTE_DENSE)
 def graph_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Neighborhood Jaccard similarity for every edge of the co-purchase
     graph — the classic link-prediction / tie-strength feature. Common
@@ -565,7 +562,6 @@ def graph_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     Edges with zero triangles surface via the LEFT join (jaccard 0, not
     dropped). Integers end-to-end; one final division on identical
     operands in both engines."""
-    apply_engine_conf(spark)
     edges = _copurchase_edges(spark, sf_dir)
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).cast("bigint").alias("d")
@@ -655,7 +651,7 @@ ORDER BY suppkey
 """
 
 
-@register("graph_2hop", oracle=_TWOHOP_ORACLE, tags=("graph",))
+@register("graph_2hop", oracle=_TWOHOP_ORACLE, tags=("graph",), confs=COMPUTE_DENSE)
 def graph_2hop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Friends-of-friends reach per supplier: the count of nodes at
     distance exactly 2 (through a neighbor, not a direct neighbor, not
@@ -672,7 +668,6 @@ def graph_2hop(spark: SparkSession, sf_dir: str) -> DataFrame:
     no distinct, no anti join. Per-round row volume is bounded by the
     wedge count and is 64x below it on dense regions (13.0 s -> ~1 s wall
     at sf0.1)."""
-    apply_engine_conf(spark)
     edges = _copurchase_edges(spark, sf_dir)
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("degree")
@@ -774,7 +769,7 @@ ORDER BY suppkey
 """
 
 
-@register("graph_kcore", oracle=_kcore_oracle(), tags=("graph", "iterative"))
+@register("graph_kcore", oracle=_kcore_oracle(), tags=("graph", "iterative"), confs=COMPUTE_DENSE)
 def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-core decomposition of the co-purchase graph (k=4): iteratively
     peel nodes whose degree within the surviving subgraph is below k; what
@@ -799,7 +794,6 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the edge set to 2-3 (measured 69 s → ~25 s at sf1); the count is
     one scalar job over the just-checkpointed |V|-row list, not a
     collect."""
-    apply_engine_conf(spark)
     edges = _copurchase_edges(spark, sf_dir)
     nodes = edges.select(F.col("src").alias("node")).distinct().localCheckpoint()
     n_prev = nodes.count()
@@ -887,7 +881,7 @@ ORDER BY suppkey
 """
 
 
-@register("graph_bfs", oracle=_bfs_oracle(), tags=("graph",))
+@register("graph_bfs", oracle=_bfs_oracle(), tags=("graph",), confs=COMPUTE_DENSE)
 def graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-source BFS: minimum hop distance (≤ 3) from the 3
     smallest-id supplier nodes over the co-purchase graph —
@@ -902,7 +896,6 @@ def graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the remaining rounds are no-ops in both engines, so the bounded
     DuckDB CTE chain reaches the identical fixed point. Every exchange
     carries (BIGINT, BIGINT) pairs; all-integer, value-hash exact."""
-    apply_engine_conf(spark)
     edges = _copurchase_edges(spark, sf_dir)
     seeds = (
         edges.select(F.col("src").alias("node"))
@@ -1007,7 +1000,7 @@ LEFT JOIN scored s ON s.x = f.src AND s.y = f.dst
 """
 
 
-@register("graph_adamic_adar", oracle=_ADAMIC_ADAR_ORACLE, tags=("graph",))
+@register("graph_adamic_adar", oracle=_ADAMIC_ADAR_ORACLE, tags=("graph",), confs=COMPUTE_DENSE)
 def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Adamic–Adar link-prediction score for every co-purchase edge: the
     hub-discounted common-neighbor measure (Σ 1/ln deg(w)) — the feature
@@ -1024,7 +1017,6 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     is 2.4x slower at sf1 and the gap widens with triangle count).
     Integer micro-unit sums — bit-portable on any partitioning (see
     module comment)."""
-    apply_engine_conf(spark)
     edges = _copurchase_edges(spark, sf_dir)
     # deg-1 guard mirrors the oracle: ln(1)=0 would raise DIVIDE_BY_ZERO
     # under ANSI; a degree-1 node is never a common neighbor, so 0 is safe
@@ -1172,7 +1164,6 @@ def graph_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
     that bounded table (broadcast at any corpus size: the node domain,
     not the data, bounds it). Counts are BIGINT; the single division has
     exact-operand inputs, bit-identical in both engines."""
-    apply_engine_conf(spark)
     from pyspark.sql import Window
 
     ev = table(spark, sf_dir, "events")
@@ -1274,7 +1265,7 @@ FROM by_c b, m, tot t
 """
 
 
-@register("graph_modularity", oracle=_MODULARITY_ORACLE, tags=("graph",))
+@register("graph_modularity", oracle=_MODULARITY_ORACLE, tags=("graph",), confs=COMPUTE_DENSE)
 def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Newman modularity of the supplier-nation partition over the
     co-purchase graph — the partition-quality score behind community
@@ -1288,7 +1279,6 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded-table work. Q_num = m2·Σe_c − ΣK_c² stays BIGINT-exact
     (m2 ≤ \\|E\\|, K_c² ≤ m2² — int64-safe to ~3e9 directed edges), and
     every emitted double is a division of exact operands."""
-    apply_engine_conf(spark)
     edges = _copurchase_edges(spark, sf_dir)
     supp = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     lab = (
@@ -1380,7 +1370,7 @@ WHERE d.degree >= 2
 """
 
 
-@register("graph_clustering_coef", oracle=_CLUSTERING_ORACLE, tags=("graph",))
+@register("graph_clustering_coef", oracle=_CLUSTERING_ORACLE, tags=("graph",), confs=COMPUTE_DENSE)
 def graph_clustering_coef(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Local clustering coefficient per supplier: c_v = 2·T_v /
     (deg_v·(deg_v − 1)) over the co-purchase graph — the
@@ -1394,7 +1384,6 @@ def graph_clustering_coef(spark: SparkSession, sf_dir: str) -> DataFrame:
     so zero-triangle nodes keep a row. Everything exchanged is
     (node, BIGINT) pairs; the coefficient divides two exact BIGINTs —
     bit-identical in both engines."""
-    apply_engine_conf(spark)
     edges = _copurchase_edges(spark, sf_dir)
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).cast("bigint").alias("degree")
@@ -1484,7 +1473,6 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector (BROADCAST — the node domain, not the data, bounds it) and
     reduces map-side by the opposite endpoint. The rank window rides the
     |suppliers|-row result."""
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     orders = table(spark, sf_dir, "orders")
     edges = scoped_persist(
@@ -1577,7 +1565,7 @@ FROM hist
 """
 
 
-@register("graph_degree_dist", oracle=_DEGREE_DIST_ORACLE, tags=("graph",))
+@register("graph_degree_dist", oracle=_DEGREE_DIST_ORACLE, tags=("graph",), confs=COMPUTE_DENSE)
 def graph_degree_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Log2-bucketed degree distribution of the co-purchase graph (bucket
     b holds degrees in [2^(b-1), 2^b)): node counts, exact band min/max,
@@ -1589,7 +1577,6 @@ def graph_degree_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     grain; the histogram re-aggregates the |V|-row degree table into <=
     log2(|V|) buckets. Bucketing is length(bin(d)) — integer exact, no
     ln() power-of-two cliff. node_share divides two exact BIGINTs."""
-    apply_engine_conf(spark)
     edges = _copurchase_edges(spark, sf_dir)
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).cast("bigint").alias("d")
@@ -1667,7 +1654,12 @@ ORDER BY suppkey
 """
 
 
-@register("graph_label_prop", oracle=_label_prop_oracle(), tags=("graph", "iterative"))
+@register(
+    "graph_label_prop",
+    oracle=_label_prop_oracle(),
+    tags=("graph", "iterative"),
+    confs=COMPUTE_DENSE,
+)
 def graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic synchronous label propagation (LPA communities) on
     the supplier co-purchase graph: each round every node adopts its
@@ -1682,7 +1674,6 @@ def graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     loop with count-weighted labels; the same swap to a co-partitioned
     shuffle join applies when |V| outgrows a broadcast. _LP_ITERS is a
     driver loop over plans, never over data."""
-    apply_engine_conf(spark)
     edges = _copurchase_edges(spark, sf_dir)
     lab = edges.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("lbl")
@@ -1721,7 +1712,9 @@ def graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- graph_cc_shuffle: min-label CC in the shuffle-join form -------------------
 
 
-@register("graph_cc_shuffle", oracle=_cc_oracle(), tags=("graph", "iterative"))
+@register(
+    "graph_cc_shuffle", oracle=_cc_oracle(), tags=("graph", "iterative"), confs=COMPUTE_DENSE
+)
 def graph_cc_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """graph_cc's documented 100 TB graduation, implemented: the SAME
     min-label propagation algebra (identical oracle, identical output),
@@ -1741,7 +1734,6 @@ def graph_cc_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape is preserved. The frontier shrinkage matters MOST in this form:
     each round's shuffle carries only changed labels and their edge
     fan-out instead of the full |E| join."""
-    apply_engine_conf(spark)
     edges = _copurchase_edges(spark, sf_dir)
     m1 = edges.groupBy(F.col("dst").alias("node")).agg(F.min("src").alias("minl"))
     nodes = edges.select(F.col("src").alias("node")).distinct()
@@ -1831,7 +1823,9 @@ FROM m
 """
 
 
-@register("graph_assortativity", oracle=_ASSORTATIVITY_ORACLE, tags=("graph",))
+@register(
+    "graph_assortativity", oracle=_ASSORTATIVITY_ORACLE, tags=("graph",), confs=COMPUTE_DENSE
+)
 def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree assortativity of the co-purchase graph: Pearson correlation
     of endpoint degrees over the symmetric edge list — positive means
@@ -1845,7 +1839,6 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate collapses everything to a single moment row. Exact integer
     moments: deterministic under any partitioning (see oracle
     comment)."""
-    apply_engine_conf(spark)
     edges = _copurchase_edges(spark, sf_dir)
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).cast("bigint").alias("d")
@@ -1938,7 +1931,7 @@ FROM n
 """
 
 
-@register("graph_harmonic", oracle=_HARMONIC_ORACLE, tags=("graph",))
+@register("graph_harmonic", oracle=_HARMONIC_ORACLE, tags=("graph",), confs=COMPUTE_DENSE)
 def graph_harmonic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-bounded harmonic centrality over the co-purchase graph: per
     node, how many peers sit at distance exactly 1, 2 and 3, combined as
@@ -1961,7 +1954,6 @@ def graph_harmonic(spark: SparkSession, sf_dir: str) -> DataFrame:
     regions (measured 26x wall here). Word ids derive from node ids
     (div/mod 64) so the representation is deterministic and exact in
     both engines; the oracle keeps the relational frontier form."""
-    apply_engine_conf(spark)
     edges = _copurchase_edges(spark, sf_dir)
 
     def _bit_or(df: DataFrame, node: str, w: str) -> DataFrame:
@@ -2074,7 +2066,7 @@ JOIN deg dv ON dv.node = c.v
 """
 
 
-@register("graph_pref_attach", oracle=_PREF_ATTACH_ORACLE, tags=("graph",))
+@register("graph_pref_attach", oracle=_PREF_ATTACH_ORACLE, tags=("graph",), confs=COMPUTE_DENSE)
 def graph_pref_attach(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Preferential-attachment link prediction: every non-adjacent node
     pair sharing at least one neighbor (open-wedge endpoints), scored by
@@ -2092,7 +2084,6 @@ def graph_pref_attach(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair x words join instead of a wedge expansion (~20x fewer rows;
     measured 7.8 s -> ~1.3 s). No anti join (the mask does it), and the
     exchanges carry (node, word) longs."""
-    apply_engine_conf(spark)
     edges = _copurchase_edges(spark, sf_dir)
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).cast("bigint").alias("d")
@@ -2213,7 +2204,7 @@ FROM club c LEFT JOIN ek ON ek.k = c.k
 """
 
 
-@register("graph_richclub", oracle=_RICHCLUB_ORACLE, tags=("graph",))
+@register("graph_richclub", oracle=_RICHCLUB_ORACLE, tags=("graph",), confs=COMPUTE_DENSE)
 def graph_richclub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rich-club coefficient phi(k) of the co-purchase graph at the
     degree distribution's own quartile/decile thresholds — realized edge
@@ -2227,7 +2218,6 @@ def graph_richclub(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the edge list, and every exchange carries int pairs. The
     quantile is exact percentile on the |V|-row degree table — dimension
     work, not fact work."""
-    apply_engine_conf(spark)
     edges = _copurchase_edges(spark, sf_dir)
     deg = scoped_persist(
         edges.groupBy(F.col("src").alias("node")).agg(
@@ -2338,7 +2328,6 @@ def graph_bipartite_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded-fan-out projection, same regime as _copurchase_edges.
     Degrees and the customer total are dimension-sized broadcasts; the
     lift gate is exact integer arithmetic."""
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     part = table(spark, sf_dir, "part").select("p_partkey", "p_brand")
@@ -2455,7 +2444,6 @@ def graph_triad_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded table — broadcastable at any corpus size. Cyclic triangles
     dedup by rotation-minimal corner (src < both others); transitive
     ones are naturally unique by their role assignment."""
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     cust = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
@@ -2571,7 +2559,7 @@ FROM x3 WHERE x * 10 >= {_EIGEN_SCALE}
 """
 
 
-@register("graph_eigencentrality", oracle=_EIGEN_ORACLE, tags=("graph",))
+@register("graph_eigencentrality", oracle=_EIGEN_ORACLE, tags=("graph",), confs=COMPUTE_DENSE)
 def graph_eigencentrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Eigenvector centrality of the supplier co-purchase graph via three
     integer fixed-point power iterations (max-normalized each round,
@@ -2585,7 +2573,6 @@ def graph_eigencentrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcastable; normalization is a 1-row max broadcast with integer
     DIV (truncation identical in both engines, every value BIGINT on
     every round)."""
-    apply_engine_conf(spark)
     # _copurchase_edges is already session-memoized + persisted; wrapping
     # it in scoped_persist would unpersist the SHARED cache at the next
     # query and break every downstream graph operator's cache reuse
@@ -2668,7 +2655,7 @@ LEFT JOIN w3 ON w3.node = w1.node
 """
 
 
-@register("graph_katz", oracle=_KATZ_ORACLE, tags=("graph",))
+@register("graph_katz", oracle=_KATZ_ORACLE, tags=("graph",), confs=COMPUTE_DENSE)
 def graph_katz(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Truncated Katz centrality (alpha = 0.1, walks of length 1..3) on
     the mean-thresholded supplier co-purchase graph — the walk-counting
@@ -2687,7 +2674,6 @@ def graph_katz(spark: SparkSession, sf_dir: str) -> DataFrame:
     A^T-multiplication. Every node with in-degree appears via the w1
     LEFT spine (disconnected dst-less nodes carry no Katz mass by
     definition)."""
-    apply_engine_conf(spark)
     edges = _copurchase_edges(spark, sf_dir)
     w1 = edges.groupBy(F.col("dst").alias("node")).agg(
         F.count(F.lit(1)).cast("bigint").alias("walks1")

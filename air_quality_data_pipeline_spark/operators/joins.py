@@ -19,7 +19,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..functions.exact import exact_sum, exact_sum_sql
 from ..registry import register
-from ..session import apply_engine_conf
 from ..tables import rebalance_for_map, table
 
 _BUCKET_COUNTER = itertools.count()
@@ -39,7 +38,6 @@ def join_bcast(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ``part`` is filtered before broadcast, so the fact table never shuffles.
     """
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     part = table(spark, sf_dir, "part").filter(F.col("p_size") <= 25)
     return (
@@ -59,7 +57,6 @@ WHERE c_custkey IN (SELECT o_custkey FROM orders WHERE o_orderstatus = 'F')
 def join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-semi join: customers with ≥1 completed order (reference
     main.py:273-275 keeps stations that produced ≥1 valid row)."""
-    apply_engine_conf(spark)
     cust = table(spark, sf_dir, "customer")
     done = table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
     return cust.join(done, cust.c_custkey == done.o_custkey, "left_semi").select(
@@ -77,7 +74,6 @@ WHERE c_custkey NOT IN (SELECT o_custkey FROM orders WHERE o_orderstatus = 'P')
 def join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-anti join: customers with no pending orders (complement of the
     reference's warn-and-skip at main.py:211-213)."""
-    apply_engine_conf(spark)
     cust = table(spark, sf_dir, "customer")
     pending = table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "P")
     return cust.join(pending, cust.c_custkey == pending.o_custkey, "left_anti").select(
@@ -102,7 +98,6 @@ def join_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Star-schema dimension enrichment (the reference tags every row with
     its config city, main.py:209, 263): orders ⋈ customer ⋈ nation ⋈ region
     with all dimensions broadcast."""
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     cust = table(spark, sf_dir, "customer")
     nation = table(spark, sf_dir, "nation")
@@ -131,7 +126,6 @@ def join_nested_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated per-key lookup (the reference's per-location /latest fetch
     loop, main.py:220-226) flattened into one aggregate + outer join — the
     N-network-calls pattern becomes a single distributed join."""
-    apply_engine_conf(spark)
     cust = table(spark, sf_dir, "customer")
     counts = (
         table(spark, sf_dir, "orders")
@@ -182,7 +176,6 @@ def join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5 per row (the round-8 sweep's 2x constant — VERDICT r8 item 4).
     Semantics are unchanged-or-better: a null o_orderkey now salts to 0
     and joins (matching the unsalted oracle) instead of being dropped."""
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     nation = table(spark, sf_dir, "nation")
     fact = orders.select(
@@ -232,7 +225,6 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffling two fact tables per join and shuffling them once at write
     time for every future join; the groupBy on the same key also reuses
     the bucketing."""
-    apply_engine_conf(spark)
     import tempfile
 
     base = tempfile.mkdtemp(prefix="bucketed_")
@@ -280,7 +272,6 @@ def join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     to per-key nested loops. Oracle is DuckDB's native ASOF JOIN (inner,
     equality included), proving the rewrite implements textbook as-of
     semantics."""
-    apply_engine_conf(spark)
     from pyspark.sql import Window
 
     ev = table(spark, sf_dir, "events")
@@ -334,7 +325,6 @@ def join_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows x overlap (2 buckets/band here), not rows x bands — the standard
     cure for non-equi joins that Catalyst would otherwise plan as a
     broadcast nested loop over every (row, band) pair."""
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     nation = table(spark, sf_dir, "nation")
     bands = (
@@ -393,7 +383,6 @@ def join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     then hash-partition on the same key — at 100 TB this is one shuffle
     per side into a sort-merge full join, no broadcast (full outer can't
     broadcast) and no row explosion. The spend sum is DECIMAL-exact."""
-    apply_engine_conf(spark)
     cu = table(spark, sf_dir, "customer")
     od = (
         table(spark, sf_dir, "orders")
@@ -428,8 +417,7 @@ GROUP BY o.o_orderdate
 
 # aggressive thresholds so the optimizer injects the bloom filter at test
 # scale too (the defaults gate on a 10 GB application-side scan — exactly
-# the 100 TB regime this operator demonstrates); scoped to this query and
-# restored by the builder.
+# the 100 TB regime this operator demonstrates); scoped to this query.
 _RTF_CONFS = {
     "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
     "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
@@ -438,13 +426,15 @@ _RTF_CONFS = {
     # is broadcastable — a broadcast join already prunes at the probe. The
     # 100 TB regime this operator demonstrates is dim-too-big-to-broadcast
     # but small-enough-to-bloom; emulate it at test scale by disabling
-    # auto-broadcast for this one query (restored by apply_engine_conf).
+    # auto-broadcast for this one query.
     "spark.sql.autoBroadcastJoinThreshold": "-1",
     "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
 }
 
 
-@register("join_runtime_filter", oracle=_JOIN_RTF_ORACLE, tags=("join", "scale"))
+@register(
+    "join_runtime_filter", oracle=_JOIN_RTF_ORACLE, tags=("join", "scale"), confs=_RTF_CONFS
+)
 def join_runtime_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Runtime bloom-filter join: a selective dimension-side predicate
     (urgent orders from one month, ~1/60 of orders) is turned by the
@@ -457,9 +447,6 @@ def join_runtime_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     creation side fits a bloom filter but not a broadcast table).
     tests/test_plans.py asserts the injected ``bloom_filter_might_contain``
     predicate; the result itself is conf-independent and oracle-checked."""
-    apply_engine_conf(spark)
-    for k, v in _RTF_CONFS.items():
-        spark.conf.set(k, v)
     od = (
         table(spark, sf_dir, "orders")
         .filter(
@@ -528,7 +515,6 @@ def join_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     corruption never touches; at 100 TB the block join is an ordinary
     shuffle/broadcast join and the edit-distance DP runs on bucket-local
     pairs — never all pairs."""
-    apply_engine_conf(spark)
     part = table(spark, sf_dir, "part")
     master = part.select(
         "p_partkey", "p_name", F.expr("split(p_name, ' ')[0]").alias("blk")
@@ -593,7 +579,6 @@ def join_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
     opt-in is a planning bug the test suite catches. Broadcast NL join at
     any cluster size — no exchange of the big... there is no big side, by
     contract."""
-    apply_engine_conf(spark)
     r1 = table(spark, sf_dir, "region")
     r2 = table(spark, sf_dir, "region")
     return r1.alias("a").crossJoin(r2.alias("b")).select(
@@ -656,7 +641,6 @@ def join_spatial(spark: SparkSession, sf_dir: str) -> DataFrame:
     structural, not probabilistic. At 100 TB both sides shuffle once on
     the cell key (or the station side broadcasts when small); skewed
     cells (urban density) split under AQE like any hot join key."""
-    apply_engine_conf(spark)
     cust = table(spark, sf_dir, "customer").select("c_custkey")
     supp = table(spark, sf_dir, "supplier").select("s_suppkey")
     q = cust.select(
@@ -741,7 +725,6 @@ def join_nullsafe(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket is manufactured deterministically from a real priority value on
     both sides, so the oracle proves the NULL-match path carries exactly
     its rows."""
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     dim = (
         orders.select("o_orderpriority")
@@ -819,7 +802,6 @@ def join_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     their order date) land in an explicit '0-BEFORE-HISTORY' bucket —
     SCD lookups must surface, not silently drop, pre-history facts.
     Revenue folds DECIMAL-exact in the final per-epoch aggregate."""
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority"
     )
@@ -915,7 +897,6 @@ def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicate candidate a pair generates when both intervals straddle the
     same two cells is removed by a distinct on the pair key BEFORE the
     (cheap, integer) overlap columns are derived."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     us = F.unix_micros(F.to_timestamp("ts"))
     a = ev.filter(F.col("event_type") == "click").select(
@@ -1013,7 +994,6 @@ def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     this beats the banded-join formulation (probe × clicks-in-band
     fan-out) and degenerates nowhere: the window is linear in rows per
     user. All integer microseconds → engine-exact."""
-    apply_engine_conf(spark)
     from pyspark.sql import Window
 
     ev = table(spark, sf_dir, "events")
@@ -1102,7 +1082,6 @@ def join_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     c_custkey — ONE shuffle carrying (key, suppkey, BIGINT mm) triples,
     no window sort. The ring guarantees the true nearest-within-R is in
     the candidate set, so recall is structural, not probabilistic."""
-    apply_engine_conf(spark)
     cust = table(spark, sf_dir, "customer").select("c_custkey")
     supp = table(spark, sf_dir, "supplier").select("s_suppkey")
     q = cust.select(

@@ -25,7 +25,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..registry import register
-from ..session import apply_engine_conf, scoped_persist
+from ..session import scoped_persist
 from ..tables import table
 
 # --- the synthetic media table ------------------------------------------------
@@ -129,7 +129,6 @@ def mm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic md5 fake (see module docstring); swapping in
     ``decode_image_real`` changes one function, not the plumbing. Executors
     process batches independently — no shuffle, linear scale."""
-    apply_engine_conf(spark)
     media = _media(spark, sf_dir)
 
     # defined inside the builder so cloudpickle ships it by value (driver
@@ -182,7 +181,6 @@ def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic frame signature — the shape of video→frames fan-out
     (decode itself stubbed, §module docstring). Generate (explode) is
     pipelined; output cardinality = sum of frame counts, no shuffle."""
-    apply_engine_conf(spark)
     media = _media(spark, sf_dir)
     m = media.select(
         "doc_id",
@@ -240,7 +238,6 @@ def mm_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     the decode stage only pays for the rows it transforms. Dims are +1
     offset from mm_decode's so zero-width degenerate images cannot occur
     (real codecs guarantee >=1px the same way)."""
-    apply_engine_conf(spark)
     media = _media(spark, sf_dir).filter(F.col("kind") == "image")
 
     def resize_batches(batches):
@@ -300,7 +297,6 @@ def mm_validate_magic(spark: SparkSession, sf_dir: str) -> DataFrame:
     blobs die at scan cost. Everything is JVM-side codegen on the binary
     column (substring/hex/ascii): zero shuffle, zero Python, and at
     100 TB the audit rides the same scan that loads the payloads."""
-    apply_engine_conf(spark)
     media = _media(spark, sf_dir)
     first_byte = F.expr("cast(conv(substring(hex(substring(payload, 1, 1)), 1, 2), 16, 10) as int)")
     return media.select(
@@ -364,7 +360,6 @@ def mm_audio_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     payload. Short payloads produce one truncated frame (the honest
     contract); all features are integers or hex, so the Arrow path is
     bit-checked against the SQL oracle."""
-    apply_engine_conf(spark)
     audio = _media(spark, sf_dir).filter(F.col("kind") == "audio").select(
         "doc_id", "payload"
     )
@@ -438,7 +433,6 @@ def mm_dedup_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     with partial counts (map-side combine). Oracle computes the identical
     sha256/length on the text the payload encodes (same UTF-8 bytes).
     100 TB of media shuffles a few GB of digests."""
-    apply_engine_conf(spark)
     media = _media(spark, sf_dir)
     return (
         media.select(
@@ -520,7 +514,6 @@ def mm_patch_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the linearized patch index, px/py recovered by div/mod, not a
     nested explode); output is bounded by the fixed doc panel. Zero
     Python, zero joins."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     img = docs.filter((F.col("doc_id") % 2 == 0) & (F.col("doc_id") % 29 == 0)).select(
         "doc_id",
@@ -606,7 +599,6 @@ def mm_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the hash-grain family count. Even the Python path is
     oracle-checked bit-exact — proving the Arrow plumbing, not just the
     formula."""
-    apply_engine_conf(spark)
     media = _media(spark, sf_dir)
 
     def hash_batches(batches):
@@ -694,7 +686,6 @@ def mm_scene_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     the lag window pays ONE doc-keyed exchange — the same exchange any
     per-video sequence op needs — and the corpus then collapses map-side
     back to the doc grain. All integer arithmetic, bit-exact in DuckDB."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     # octet_length, not length: DuckDB strlen counts BYTES while Spark's
     # length() on a string counts characters — a >=100-byte multibyte doc
@@ -805,7 +796,6 @@ def mm_aspect_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     Python) feeding ONE map-side-combinable aggregate over the
     |kinds x buckets| cell grain — the exchange carries about a dozen
     rows per map task at any corpus size."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     m = docs.select(
         "doc_id",
@@ -904,7 +894,6 @@ def mm_audio_vad(spark: SparkSession, sf_dir: str) -> DataFrame:
     the VAD windows ride per-media partitions of the frame table —
     bounded by payload/hop per media, shuffled as 3-int rows. The
     per-media threshold means no global exchange exists at all."""
-    apply_engine_conf(spark)
     audio = (
         _media(spark, sf_dir)
         .filter((F.col("kind") == "audio") & F.col("payload").isNotNull())
@@ -1004,7 +993,6 @@ def mm_bitrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (no Python, payload bytes never shuffle — only the length), then ONE
     map-side-combinable collapse to the |buckets| grain. Scan once,
     exchange buckets."""
-    apply_engine_conf(spark)
     audio = _media(spark, sf_dir).filter(F.col("kind") == "audio").select(
         "doc_id", F.length("payload").cast("bigint").alias("n")
     )
@@ -1076,7 +1064,6 @@ def mm_modality_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     (modality, origin) cell grain — byte lengths are codegen over the
     binary column, payloads never shuffle; the corpus total is a 1-row
     broadcast; the skew flag is integer cross-multiplication."""
-    apply_engine_conf(spark)
     media = _media(spark, sf_dir)
     g = media.groupBy(
         "kind", F.col("meta.origin").alias("origin")

@@ -31,7 +31,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..registry import register
-from ..session import apply_engine_conf, scoped_persist
+from ..session import scoped_persist
 from ..tables import rebalance_for_map, table
 
 # --- dq_profile ---------------------------------------------------------------
@@ -57,7 +57,6 @@ def dq_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     a long (column_name, metrics) report. The whole profile is a single
     aggregate over one scan (multi-distinct plans as one Expand +
     aggregate); the report is 4 rows however large the input."""
-    apply_engine_conf(spark)
     # one-row-group fixture scans are 1 task; spread before the heavy
     # per-row map work (profiled single-task stage; see OPTIMIZATION_r10.md)
     li = rebalance_for_map(
@@ -134,7 +133,6 @@ def dq_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combined aggregate each. Versus the naive rule-per-scan
     formulation this reads lineitem once instead of three times — at 100 TB
     the dominant cost is exactly those fact-table scans."""
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     od = table(spark, sf_dir, "orders")
     cu = table(spark, sf_dir, "customer")
@@ -248,7 +246,6 @@ def dq_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side combined — one 5-row exchange), broadcast back onto the
     stream, so the second scan emits only outliers. At 100 TB this is the
     standard two-pass screen: stats pass + filter pass, nothing wide."""
-    apply_engine_conf(spark)
     q = table(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
@@ -306,7 +303,6 @@ def dq_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiny table a scheduler alerts on. ``_AS_OF`` is a pinned instant so the
     result is deterministic (a production run would bind it to the job's
     logical date)."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     return ev.groupBy("event_type").agg(
         F.max("ts").alias("last_ts"),
@@ -399,7 +395,6 @@ def dq_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-stable anywhere. At 100 TB this is the daily drift gate in front
     of a training-data refresh: constant-size output, no second scan, and
     the same plan shape at any history length."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     q = ev.select(
         "event_type",
@@ -499,7 +494,6 @@ def dq_referential(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact-side shuffle. The three single-row aggregates union at the end —
     the plan is three independent subtrees a scheduler runs concurrently.
     Count-if via count(CASE/FILTER) keeps both engines on one pass."""
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     od = table(spark, sf_dir, "orders")
     cu = table(spark, sf_dir, "customer")
@@ -552,7 +546,6 @@ def obs_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     payloads — bounded driver state (8 scalars), same as every audit
     summary. DECIMAL sums keep the observed values exact, so they match
     the oracle's recomputation bit-for-bit after the one cast to double."""
-    apply_engine_conf(spark)
     from pyspark.sql import Observation
 
     li = table(spark, sf_dir, "lineitem")
@@ -642,7 +635,6 @@ def dq_null_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     formulation scans once per column), and the wide->long unpivot runs
     on the aggregated rows (|segments| x |columns|), costing nothing.
     The control column (event_id, never null) pins the zero row."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     staged = ev.select(
         "event_type",
@@ -730,7 +722,6 @@ def dq_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     synthetic totals genuinely violate the invariant, so the buckets are
     non-degenerate at every SF. Money sums ride FLOOR-quantized BIGINTs
     (module note: double→DECIMAL tie-rounding diverges across engines)."""
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     orders = table(spark, sf_dir, "orders")
     amt_fp = F.floor(
@@ -826,7 +817,6 @@ def dq_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan dominates at any scale and the digit extraction is codegen'd
     string/int work on exact cents (no libm in either engine; the expected
     Benford shares are shared double LITERALS, see _BENFORD_P)."""
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 0)
     d = orders.select(
         F.expr(
@@ -903,7 +893,6 @@ def dq_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     max-aggregate both key on event_type, so the window's exchange is
     reused by the aggregate. All comparisons are divisions of identical
     BIGINTs and an order-free MAX — engine-exact with no quantization."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     split = F.expr(f"{_KS_SPLIT}")
     cells = ev.groupBy(
@@ -986,7 +975,6 @@ def dq_uniqueness(spark: SparkSession, sf_dir: str) -> DataFrame:
     then a stack() to the long report. At 100 TB swap exact distinct for
     approx_count_distinct: same plan, sketch partials (the
     agg_approx_distinct pattern shows the accuracy gate)."""
-    apply_engine_conf(spark)
     o = table(spark, sf_dir, "orders")
     aggs = [F.count(F.lit(1)).alias("n_rows")] + [
         F.countDistinct(F.expr(expr.replace("VARCHAR", "STRING"))).alias(f"d{i}")
@@ -1058,7 +1046,6 @@ def dq_outlier_iqr(spark: SparkSession, sf_dir: str) -> DataFrame:
     table BROADCASTS back onto the stream, and the flag rollup is
     map-side combinable. Two passes over the corpus, no corpus-sized
     shuffle beyond the quantile aggregation."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     q = ev.groupBy("event_type").agg(
         F.expr("percentile(value, 0.25D)").alias("q1"),
@@ -1130,7 +1117,6 @@ def dq_kanon(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 3-row broadcast cross — auditing more thresholds costs zero extra
     scans. Counts are BIGINTs; the single rate division runs on identical
     operands in both engines."""
-    apply_engine_conf(spark)
     cust = table(spark, sf_dir, "customer")
     classes = cust.groupBy(
         "c_nationkey",
@@ -1228,7 +1214,6 @@ def dq_volume_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     self — no second scan, no self-join. One cell exchange + one tiny
     type-keyed window exchange; everything shuffled is a handful of
     integers per cell."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.date_format(F.to_date("ts"), "yyyy-MM-dd").alias("day")
@@ -1314,7 +1299,6 @@ def dq_join_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup keys on key_name. Exact percentiles FLOOR-quantize to BIGINT
     (swap approx_percentile at 100 TB — same plan); ratio divisions see
     exact-operand inputs in both engines."""
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     pairs = li.select(
         F.explode(
@@ -1399,7 +1383,6 @@ def dq_funcdep(spark: SparkSession, sf_dir: str) -> DataFrame:
     lesson — never 4 unioned scans); the distinct + both aggregates then
     run at the (fd, lhs) group grain, so exchanges carry keys and counts,
     never rows; violation_rate divides two exact BIGINTs."""
-    apply_engine_conf(spark)
     # one-row-group fixture scans are 1 task; spread before the heavy
     # per-row map work (profiled single-task stage; see OPTIMIZATION_r10.md)
     li = rebalance_for_map(
@@ -1465,7 +1448,6 @@ def dq_temporal(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus collapses map-side to the |priorities|-grain cell table. The
     lag is an exact BIGINT day difference of DATEs, so every statistic —
     including the interpolated median — is bit-identical cross-engine."""
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
     od = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_orderpriority"
@@ -1543,7 +1525,6 @@ def dq_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     column margins, expected counts, micro-quantized contributions, the
     order-free BIGINT chi-squared sum — is arithmetic on that tiny table
     with broadcast joins. The corpus is scanned exactly once."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     # persist the |langs x sources| cell table: margins, total, dof and the
     # final join all derive from it, and without the barrier Catalyst
@@ -1660,7 +1641,6 @@ def dq_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapse of the fact table to the 10-bin x 2-half cell grain —
     nothing downstream of the first aggregate sees an event row, and the
     closing join is |bins| vs a 1-row broadcast."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     day = F.expr(
         "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
@@ -1745,7 +1725,6 @@ def dq_sequence_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange cascade; the ONLY window rides that dimension-sized range
     table. No global sort of keys ever exists — within-range missing
     counts come from min/max/count arithmetic, not adjacency."""
-    apply_engine_conf(spark)
     keys = (
         table(spark, sf_dir, "lineitem")
         .select(F.col("l_orderkey").alias("k"))
@@ -1818,7 +1797,6 @@ def dq_value_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exchange carries distinct masks, not rows; totals broadcast back
     and the top-5 window rides the cell table partitioned by column. The
     audited tables are scanned once each."""
-    apply_engine_conf(spark)
     part = table(spark, sf_dir, "part")
     orders = table(spark, sf_dir, "orders")
     vals = (
@@ -1892,7 +1870,6 @@ def dq_cardinality_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct for agg_approx_distinct's HLL only if the (day, user) grain
     itself outgrows the cluster — it is the smaller of the two tables by
     construction."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     cells = ev.select(F.col("ts").cast("date").alias("day"), "user_id")
     daily = cells.groupBy("day").agg(
@@ -1968,7 +1945,6 @@ def dq_label_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     4-number corpus summary broadcasts back onto that dimension-sized
     table. The label column is the only thing read (column pruning —
     the 16-float vectors never leave the scan)."""
-    apply_engine_conf(spark)
     emb = table(spark, sf_dir, "embeddings")
     c = scoped_persist(
         emb.groupBy("label").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
@@ -2061,7 +2037,6 @@ def dq_simpson(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-aggregate; every sign comes from the exact DECIMAL identity
     n*Sxy - Sx*Sy — no double decides anything. The fact is scanned
     once."""
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     q = li.select(
         F.col("l_returnflag").alias("seg"),
@@ -2145,7 +2120,6 @@ def dq_dup_burden(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed on md5(text) — payloads never shuffle (the exact-dedup
     recipe); burden metrics are integer arithmetic on the distinct-text
     cell table re-aggregated per source."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", "source", "text", "n_chars"
     )
@@ -2237,7 +2211,6 @@ def dq_heaping(spark: SparkSession, sf_dir: str) -> DataFrame:
     domain; chi-squared terms micro-quantize before the order-free sum;
     the flag compares INTEGERS (chi2_micro vs the scaled critical
     value) so no double boundary can disagree."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     c = ev.groupBy(
         "event_type",
@@ -2335,7 +2308,6 @@ def dq_null_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: row-local bucket/null projections collapse map-side to
     the 4-bucket cell table; the global rate is a second k-row
     aggregate; everything after the one collapse is dimension-sized."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     hash13 = F.expr(
         "cast(conv(substring(md5(concat('mnar|', cast(event_id as string))), 1, 8),"

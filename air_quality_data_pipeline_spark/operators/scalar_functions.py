@@ -18,7 +18,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.geo import HAVERSINE_SQL, SYNTH_LAT_SQL, SYNTH_LON_SQL, haversine_m, synthetic_lat, synthetic_lon
 from ..registry import register
-from ..session import apply_engine_conf
 from ..tables import rebalance_for_map, table
 
 # --- f_parse_ts -------------------------------------------------------------
@@ -41,7 +40,6 @@ def f_parse_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ISO-8601 parse with Z-normalization and null-on-error (the
     reference's `_parse_dt`, main.py:60-72): strings (some invalid) →
     TRY_CAST to timestamp after stripping the Z suffix."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     s = F.when(F.col("event_id") % 5 == 0, F.lit("not-a-timestamp")).otherwise(
         F.concat(F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"), F.lit("Z"))
@@ -76,7 +74,6 @@ def f_haversine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Great-circle distance as a pure column expression (reference
     `_haversine_m`, main.py:75-86) — rounded to whole meters because libm
     trig differs in the last ulp across engines."""
-    apply_engine_conf(spark)
     part = table(spark, sf_dir, "part")
     dist = haversine_m(
         synthetic_lat(F.col("p_partkey")),
@@ -101,7 +98,6 @@ FROM documents
 def f_lower(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String normalization (the reference lowercases parameter names,
     main.py:159): lower/upper/trim/length/substring."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
@@ -128,7 +124,6 @@ def f_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-non-null fallback chains (the reference's `or`-chains for unit,
     name and date fields, main.py:160, 223, 233, 256), incl. the formatted
     `id:{id}` last resort of main.py:223."""
-    apply_engine_conf(spark)
     cust = table(spark, sf_dir, "customer")
     seg = F.col("c_mktsegment")
     return cust.select(
@@ -161,7 +156,6 @@ FROM (
 def f_cast_int(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Int cast with null-on-failure (the reference's int(sid) try/except,
     main.py:234-237) — TRY_CAST keeps it ANSI-safe."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     return (
         ev.withColumn(
@@ -190,7 +184,6 @@ FROM events
 def f_fmt_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Timestamp → string formatting (the reference's strftime filename,
     main.py:284) plus calendar extraction and truncation."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     return ev.select(
         "event_id",
@@ -215,7 +208,6 @@ FROM documents
 def f_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String interpolation (the reference's f-strings for names/paths,
     main.py:223, 285, 305): format_string + concat."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
@@ -240,7 +232,6 @@ def f_json_get(spark: SparkSession, sf_dir: str) -> DataFrame:
     payloads, main.py:93-94, 136-137): get_json_object on the raw string.
     The oracle extracts the same field with a regex, so no DuckDB JSON
     extension is assumed."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     k_str = F.get_json_object("props", "$.k")
     return ev.select(
@@ -263,7 +254,6 @@ FROM documents,
 def f_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array flatten with position (the reference's for-loops over nested
     sensor/measurement arrays, main.py:153, 231): split → slice → posexplode."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
@@ -287,7 +277,6 @@ def f_map_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Map construction + keyed lookup (the reference's sensor_map dict,
     main.py:158-161): per-user map<event_type, count> built with
     map_from_entries, then element_at probes — the declarative dict."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     per_type = ev.groupBy("user_id", "event_type").agg(F.count(F.lit(1)).alias("cnt"))
     with_map = per_type.groupBy("user_id").agg(
@@ -316,7 +305,6 @@ def f_least(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Numeric clamp via least/greatest (the reference's min(1, √a),
     main.py:85). sqrt is IEEE correctly-rounded, so no rounding is needed —
     unlike trig, results are bit-identical across engines."""
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     return li.select(
         "l_orderkey",
@@ -344,7 +332,6 @@ def f_trig(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trigonometric/power built-ins (the haversine internals, main.py:81-85).
     Trig rounded to 9 decimals: java.lang.Math vs C libm differ in the final
     ulp. pow with integral exponents is exact, so it is left unrounded."""
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     rad = F.radians(F.col("l_quantity") * 3.0)
     return li.select(
@@ -396,7 +383,6 @@ def f_url_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle rebuilds the same components with portable string splits,
     proving the builtin's semantics on this URL shape rather than assuming
     them."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     u = docs.select("doc_id", F.expr(_URL_EXPR_SPARK).alias("url"))
     return u.select(
@@ -437,7 +423,6 @@ def f_date_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the portable date contract — pandas date objects and datetime64 hash
     differently). One selective modulo keeps the oracle-compared output
     small while exercising every expression."""
-    apply_engine_conf(spark)
     od = table(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 100 == 0)
     return od.select(
         "o_orderkey",
@@ -492,7 +477,6 @@ def f_array_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     are canonicalized to sorted CSV strings (array_distinct order is
     engine-private; the sort makes the contract portable — same rule as
     agg_collect_set)."""
-    apply_engine_conf(spark)
     od = table(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 100 == 0)
     a = od.select(
         "o_orderkey",
@@ -535,7 +519,6 @@ def f_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-dialect check (llm_pii_scrub is the applied big sibling). All
     JVM-side codegen string work — the pattern compiles once per task, not
     per row; zero shuffles."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
     return docs.select(
         "doc_id",
@@ -571,7 +554,6 @@ def f_bitwise(spark: SparkSession, sf_dir: str) -> DataFrame:
     codegen, zero shuffles. XOR spelled as a function because the operator
     glyph differs across engines (Spark ``^``, DuckDB ``xor()``) while the
     semantics don't — the oracle proves value equality."""
-    apply_engine_conf(spark)
     od = table(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 100 == 0)
     return od.select(
         "o_orderkey",
@@ -618,7 +600,6 @@ def f_try_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     error-HANDLING complement to src_corrupt_recovery's error-ISOLATION:
     the first quarantines unparseable input, this neutralizes poisoned
     arithmetic on parsed data."""
-    apply_engine_conf(spark)
     # EVERY row takes the try_add overflow path (exception-based in the
     # JVM, ~20us/row) and the one-row-group orders scan ran all 150k of
     # them on ONE task (profiled 3.8 s). Spread the 3 needed columns first.
@@ -662,7 +643,6 @@ def f_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     the operator scales with scan bandwidth alone. The shard key takes
     the first 8 hex chars (32 bits) so the value is exact in a BIGINT in
     both engines."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
@@ -731,7 +711,6 @@ def f_ip_cidr(spark: SparkSession, sf_dir: str) -> DataFrame:
     throughput is pure scan rate. try_cast keeps ANSI mode safe on
     malformed quads (none here — but the operator contract is the parse,
     which must not throw on dirty logs)."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     src = ev.select("event_id", F.expr(_IP_EXPR_SPARK).alias("ip"))
     o = [
@@ -788,7 +767,6 @@ def f_codec(spark: SparkSession, sf_dir: str) -> DataFrame:
     intrinsics map-side, zero shuffle (function-tag gated). Spark's MIME
     line-folding (76-char CRLF wrap) is normalized away so both engines
     emit RFC 4648 unwrapped base64."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     b64 = F.regexp_replace(
         F.base64(F.col("text").cast("binary")), "\r\n", ""
@@ -837,7 +815,6 @@ def f_geo_bearing(spark: SparkSession, sf_dir: str) -> DataFrame:
     next to f_haversine's distance (geofencing, direction-of-travel
     features). Pure codegen trig; ROUND(6) absorbs libm atan2 ulp; the
     double-mod normalization is exact on identical operands."""
-    apply_engine_conf(spark)
     part = table(spark, sf_dir, "part")
     lat = synthetic_lat(F.col("p_partkey"))
     lon = synthetic_lon(F.col("p_partkey"))
@@ -886,7 +863,6 @@ def f_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     Python; cost is the O(len^2) DP per row, which divides perfectly by
     executor count. The threshold-banded variant used by join_fuzzy is
     the knob if len grows."""
-    apply_engine_conf(spark)
     pt = table(spark, sf_dir, "part")
     d = F.levenshtein(F.col("p_name"), F.col("p_type"))
     mx = F.greatest(F.length("p_name"), F.length("p_type"))
@@ -933,7 +909,6 @@ def f_time_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: per-row whole-stage-codegen projection; zero exchanges,
     zero Python. Downstream groupBy(bucket) is the usual map-side
     combinable collapse (ts_vwap et al. show that shape)."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     eus = "unix_micros(cast(ts as timestamp))"
     mk = "timestampadd(MICROSECOND, {us}, TIMESTAMP_NTZ '1970-01-01 00:00:00')"
@@ -992,7 +967,6 @@ def f_hash_rng(spark: SparkSession, sf_dir: str) -> DataFrame:
     the keep flag and decile are integer comparisons on the raw 56-bit
     hash — only the log crosses into floats, on identical exact-ratio
     operands (ROUND(9) for the libm ulp)."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     hv = F.expr(
         "cast(conv(substring(md5(concat('rng|', cast(event_id as string))), 1, 14),"

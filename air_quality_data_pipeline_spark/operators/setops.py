@@ -13,7 +13,6 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
-from ..session import apply_engine_conf
 from ..tables import table
 
 _SET_UNION_ORACLE = """
@@ -27,7 +26,6 @@ SELECT o_orderkey, o_orderpriority FROM orders WHERE o_orderpriority = '2-HIGH'
 def set_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNION ALL by column name (the reference's cross-city row accumulation,
     main.py:206-271)."""
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     urgent = orders.filter(F.col("o_orderpriority") == "1-URGENT").select(
         "o_orderkey", "o_orderpriority"
@@ -46,7 +44,6 @@ SELECT DISTINCT o_custkey, o_orderstatus FROM orders
 @register("set_distinct", oracle=_SET_DISTINCT_ORACLE, tags=("setop",))
 def set_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DISTINCT projection (the reference's set-based dedup, main.py:216-217)."""
-    apply_engine_conf(spark)
     return table(spark, sf_dir, "orders").select("o_custkey", "o_orderstatus").distinct()
 
 
@@ -60,7 +57,6 @@ SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'
 @register("set_intersect", oracle=_SET_INTERSECT_ORACLE, tags=("setop",))
 def set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT (distinct): customers with both completed and open orders."""
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     f = orders.filter(F.col("o_orderstatus") == "F").select("o_custkey")
     o = orders.filter(F.col("o_orderstatus") == "O").select("o_custkey")
@@ -77,7 +73,6 @@ SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'
 @register("set_except", oracle=_SET_EXCEPT_ORACLE, tags=("setop",))
 def set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXCEPT ALL (multiset difference, preserves multiplicity)."""
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     f = orders.filter(F.col("o_orderstatus") == "F").select("o_custkey")
     o = orders.filter(F.col("o_orderstatus") == "O").select("o_custkey")
@@ -101,7 +96,6 @@ def set_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     plans like the distinct variant (one exchange on the projected key with
     per-side counts) — multiplicity tracking rides the same shuffle, so the
     ALL form costs no extra pass at any scale."""
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     f = orders.filter(F.col("o_orderstatus") == "F").select("o_custkey")
     o = orders.filter(F.col("o_orderstatus") == "O").select("o_custkey")
@@ -122,7 +116,6 @@ def set_except_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     after per-side dedup, NOT a multiplicity subtraction — the pair
     (set_except = EXCEPT ALL, this = EXCEPT) pins the semantic difference
     under oracle check so neither regresses into the other."""
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     f = orders.filter(F.col("o_orderstatus") == "F").select("o_custkey")
     o = orders.filter(F.col("o_orderstatus") == "O").select("o_custkey")

@@ -40,7 +40,7 @@ from ..functions.vectors import (
     l2_norm,
 )
 from ..registry import register
-from ..session import apply_engine_conf, scoped_persist, set_compute_dense_floor
+from ..session import COMPUTE_DENSE, scoped_persist
 from ..tables import rebalance_for_map, table
 
 DIMS = 64  # fixture embedding width (TESTDATA.md)
@@ -92,7 +92,6 @@ def llm_sim_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k: 10 query vectors (broadcast) against the
     corpus; per-query rank window keeps the 5 nearest. Exact — the baseline
     the ANN variant is measured against."""
-    apply_engine_conf(spark)
     v = _vectors(spark, sf_dir)
     q = v.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("qid"), F.col("vec").alias("qvec")
@@ -142,7 +141,6 @@ def llm_emb_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactness oracle for bucketed variants; at scale the same predicate runs
     after an LSH/IVF candidate join (llm_sim_search_ivf) instead of a cross
     join."""
-    apply_engine_conf(spark)
     base = _vectors(spark, sf_dir).filter(F.col("vec_id") < 150)
     pert = base.select(
         (F.col("vec_id") + 1000000).alias("vec_id"),
@@ -203,7 +201,6 @@ def llm_emb_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~k·64 rows per map task regardless of corpus size. This is the
     reduce step of k-means / IVF training (llm_sim_search_ivf consumes
     such centroids)."""
-    apply_engine_conf(spark)
     v = table(spark, sf_dir, "embeddings").select(
         "label", F.expr("transform(embedding, x -> cast(x as double))").alias("vec")
     )
@@ -254,7 +251,6 @@ def llm_kmeans_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     Iterating this plan (re-broadcasting the k·64-row output as the next
     seed) is exactly IVF index training at 100 TB: per iteration, one
     corpus scan, one argmax shuffle, one k·64-row aggregate."""
-    apply_engine_conf(spark)
     v = _vectors(spark, sf_dir)
     cent = v.filter(F.col("vec_id") < _N_CENT).select(
         F.col("vec_id").alias("cid"), F.col("vec").alias("cvec")
@@ -339,7 +335,6 @@ def llm_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     the driver handles only a k·64-row table, the corpus never leaves the
     executors). At 100 TB each round costs one corpus scan + one argmax
     shuffle, independent of the number of rounds."""
-    apply_engine_conf(spark)
     v = _vectors(spark, sf_dir)
     cent = v.filter(F.col("vec_id") < _N_CENT).select(
         F.col("vec_id").alias("cid"), F.col("vec").alias("cvec")
@@ -423,14 +418,11 @@ SELECT qid, vec_id, cosine, rnk FROM (
 
 
 def _ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared IVF top-k plan (see llm_sim_search_ivf docstring)."""
-    # the candidate rescore + per-query window stage is MBs of shuffle but
-    # CPU-dense cosine folds; the stock 1MB AQE coalesce floor folded it
-    # onto one core (profiled: a single 414 ms task at sf0.1). Same
-    # compute-blind-coalescing fix as llm_minhash_dedup (derivation +
-    # sequencing contract: session.py set_compute_dense_floor); restored
-    # by the next query's apply_engine_conf.
-    set_compute_dense_floor(spark)
+    """Shared IVF top-k plan (see llm_sim_search_ivf docstring). Its
+    callers declare COMPUTE_DENSE: the candidate rescore + per-query window
+    stage is MBs of shuffle but CPU-dense cosine folds, and the stock 1MB
+    AQE coalesce floor folded it onto one core (profiled: a single 414 ms
+    task at sf0.1)."""
     v = _vectors(spark, sf_dir)
     cent = v.filter(F.col("vec_id") < _N_CENT).select(
         F.col("vec_id").alias("cid"), F.col("vec").alias("cvec")
@@ -484,7 +476,9 @@ def _ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("llm_sim_search_ivf", oracle=_IVF_ORACLE, tags=("llm", "similarity"))
+@register(
+    "llm_sim_search_ivf", oracle=_IVF_ORACLE, tags=("llm", "similarity"), confs=COMPUTE_DENSE
+)
 def llm_sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-bucketed approximate nearest neighbor — the 100 TB architecture.
 
@@ -495,7 +489,6 @@ def llm_sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     Deterministic seeding (first k vectors as centroids) keeps the whole
     plan oracle-checkable — assignment, probe choice, and final ranking are
     bit-exact relational algebra in both engines."""
-    apply_engine_conf(spark)
     return _ivf_topk(spark, sf_dir)
 
 
@@ -532,7 +525,12 @@ GROUP BY i.qid
 )
 
 
-@register("llm_ann_recall", oracle=_ANN_RECALL_ORACLE, tags=("llm", "similarity", "audit"))
+@register(
+    "llm_ann_recall",
+    oracle=_ANN_RECALL_ORACLE,
+    tags=("llm", "similarity", "audit"),
+    confs=COMPUTE_DENSE,
+)
 def llm_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@5 of the IVF index against exact brute-force top-5 on the same
     fixed query panel — the audit every production ANN deployment runs
@@ -544,7 +542,6 @@ def llm_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus scan regardless of corpus size — on a cluster you run it on a
     sampled bucket subset. The intersection joins on (qid, vec_id): 5-row
     sets per query, negligible exchange."""
-    apply_engine_conf(spark)
     v = _vectors(spark, sf_dir)
     ivf = _ivf_topk(spark, sf_dir).select("qid", "vec_id")
     q = v.filter((F.col("vec_id") % 50 == 7) & (F.col("vec_id") < 2000)).select(
@@ -657,7 +654,16 @@ WHERE {cosine_similarity_duckdb('sa.vec', 'sb.vec', DIMS)} >= 0.98
 """
 
 
-@register("llm_emb_lsh", oracle=_EMB_LSH_ORACLE, tags=("llm", "similarity", "dedup"))
+# the candidate-join + exact-cosine verify stage reads < 1 MB of id pairs
+# but each row pays three 64-term interpreted cosine folds — AQE's
+# byte-based coalescing folded it onto ONE task (1.72 s CPU at sf0.1,
+# profiled r11). Same compute-blind-coalescing fix as llm_minhash_dedup.
+@register(
+    "llm_emb_lsh",
+    oracle=_EMB_LSH_ORACLE,
+    tags=("llm", "similarity", "dedup"),
+    confs=COMPUTE_DENSE,
+)
 def llm_emb_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-duplicate pairs via random-hyperplane LSH — the
     SPARSE formulation that replaces llm_emb_neardup's bounded all-pairs
@@ -671,13 +677,6 @@ def llm_emb_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     perturbed copies (as llm_emb_neardup) so planted near-dups exist and
     both engines build the identical input. Demo cap exists only because
     the ORACLE must also run; the Spark side has no all-pairs stage."""
-    apply_engine_conf(spark)
-    # the candidate-join + exact-cosine verify stage reads < 1 MB of id
-    # pairs but each row pays three 64-term interpreted cosine folds —
-    # AQE's byte-based coalescing folded it onto ONE task (1.72 s CPU at
-    # sf0.1, profiled r11). Same compute-blind-coalescing fix as
-    # llm_minhash_dedup; restored by the next query's apply_engine_conf.
-    set_compute_dense_floor(spark)
     base = (
         table(spark, sf_dir, "embeddings")
         .filter(F.col("vec_id") < _LSH_CAP)
@@ -792,7 +791,6 @@ def llm_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministically perturbed copy (the llm_emb_neardup pattern — both
     engines build the identical corpus), giving the drop-counter real
     positives to find."""
-    apply_engine_conf(spark)
     base = _vectors(spark, sf_dir)
     emb = table(spark, sf_dir, "embeddings")
     v = base.unionByName(
@@ -897,7 +895,6 @@ def llm_emb_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     Codes are emitted as a CSV string (the repo's canonical array
     encoding for value-hash comparison); amax > 0 guards the degenerate
     all-zero vector."""
-    apply_engine_conf(spark)
     v = _vectors(spark, sf_dir)
     a = v.withColumn("amax", F.expr(_QUANT_AMAX_SPARK)).filter(F.col("amax") > 0.0)
     q = a.withColumn(
@@ -961,7 +958,6 @@ def llm_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the recall-1.0 baseline; production mines from the IVF/LSH
     bucketed candidates (llm_sim_search_ivf / llm_emb_lsh) with this
     operator as its audit."""
-    apply_engine_conf(spark)
     v = table(spark, sf_dir, "embeddings").select(
         "vec_id",
         "label",
@@ -1105,7 +1101,6 @@ def llm_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     greedy tail runs on panel-bounded frames, the same budget discipline
     as llm_dedup_audit. Integer micro-sim arithmetic end-to-end (see
     module comment) keeps every argmax engine-exact."""
-    apply_engine_conf(spark)
     v = _vectors(spark, sf_dir)
     micro = lambda c: F.floor(c * F.lit(1000000.0)).cast("bigint")  # noqa: E731
     q = v.filter(F.col("vec_id") < 10).select(
@@ -1242,7 +1237,6 @@ def llm_emb_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     (i, j, partial-sum) cells: ~136 rows per map task regardless of
     corpus size, the llm_emb_centroid reduce shape. Output is the
     dims^2/2-row matrix, constant in the data."""
-    apply_engine_conf(spark)
     v = table(spark, sf_dir, "embeddings").select(
         F.expr(
             f"transform(slice(embedding, 1, {_COV_DIMS}), x -> cast(x as double))"
@@ -1383,7 +1377,6 @@ def llm_emb_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     every distance in a zip_with/aggregate fold with ZERO exchange; pass
     3 is one global (n, s1, s2) moment collapse broadcast back onto the
     per-row frame. Three passes, each exchanging cells, never vectors."""
-    apply_engine_conf(spark)
     v = table(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.expr(
@@ -1502,7 +1495,6 @@ def llm_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     2294 s (relational pair join + window) -> 1291 s (sample-threshold
     prune, exchange fixed but interpreted-fold compute-bound) -> this
     form; all three bit-identical vs the oracle."""
-    apply_engine_conf(spark)
     v = table(spark, sf_dir, "embeddings").select(
         "vec_id",
         "label",
@@ -1687,7 +1679,6 @@ def llm_label_medoid(spark: SparkSession, sf_dir: str) -> DataFrame:
     size); per-member distances re-collapse map-side; the final argmin
     is a rank-1 window on the |labels| grain. Two linear passes, no
     quadratic anything."""
-    apply_engine_conf(spark)
     v = table(spark, sf_dir, "embeddings").select(
         "vec_id",
         "label",
@@ -1812,7 +1803,6 @@ def llm_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     Ranks are exact integers under a deterministic (score, id) order;
     the fused score is a fixed 2-term sum of identical IEEE divisions —
     no fold, no libm."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     terms = F.array(*[F.lit(t) for t in ("the", "a", "of", "and", "is")])
     kw = docs.select(

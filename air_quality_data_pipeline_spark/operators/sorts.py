@@ -14,7 +14,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..functions.geo import HAVERSINE_SQL, SYNTH_LAT_SQL, SYNTH_LON_SQL, haversine_m, synthetic_lat, synthetic_lon
 from ..registry import register
-from ..session import apply_engine_conf
 from ..tables import table
 
 _DIST_SQL = HAVERSINE_SQL.format(
@@ -35,7 +34,6 @@ ORDER BY dist_m ASC, s_suppkey ASC
 def sort_asc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sort by a computed key, ascending (the reference's distance sort of
     fallback candidates, main.py:144)."""
-    apply_engine_conf(spark)
     sup = table(spark, sf_dir, "supplier")
     dist = haversine_m(
         synthetic_lat(F.col("s_suppkey")),
@@ -63,7 +61,6 @@ LIMIT 40
 def topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sort-desc + limit (the reference's top-40 candidate slice,
     main.py:171-172) — plans as TakeOrderedAndProject, no global sort."""
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     cust = table(spark, sf_dir, "customer")
     counts = orders.groupBy("o_custkey").agg(F.count(F.lit(1)).alias("cnt"))
@@ -91,7 +88,6 @@ def limit_page(spark: SparkSession, sf_dir: str) -> DataFrame:
     so a prefix sort would leave the page boundary tie-dependent (caught by
     the sf1 oracle replay); with a total key, boundary ties are identical
     rows and the page is a deterministic multiset on any engine."""
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     return (
         li.select("l_orderkey", "l_linenumber", "l_extendedprice")
@@ -126,7 +122,6 @@ def stop_early(spark: SparkSession, sf_dir: str) -> DataFrame:
     HAVING aggregate) keeps only sufficiently-covered groups. Equivalent
     output, no sequential control flow — fully parallel.
     """
-    apply_engine_conf(spark)
     cust = table(spark, sf_dir, "customer")
     w = Window.partitionBy("c_mktsegment").orderBy(F.desc("c_acctbal"), F.asc("c_custkey"))
     ranked = cust.select(

@@ -53,7 +53,6 @@ def sql_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     (exact arithmetic), then cast back to double for the contract. Partial
     aggregation (map-side combine) happens automatically; the only exchange
     carries 6 aggregate cells per (flag, status) group."""
-    apply_engine_conf(spark)
     _views(spark, sf_dir, "lineitem")
     return spark.sql(_SQL_Q1)
 
@@ -79,7 +78,6 @@ def sql_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     each filter into its scan and plans TakeOrderedAndProject for the
     ORDER BY+LIMIT (no global sort). The customer side is broadcast at test
     scale by AQE; at 100 TB it flips to shuffle join on the same plan."""
-    apply_engine_conf(spark)
     _views(spark, sf_dir, "customer", "orders", "lineitem")
     return spark.sql(_SQL_Q3)
 
@@ -98,7 +96,6 @@ def sql_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6 shape: the pure scan-predicate benchmark. All four
     predicates reach the parquet reader as PushedFilters (row-group pruning
     at scale); the aggregate is a single global cell."""
-    apply_engine_conf(spark)
     _views(spark, sf_dir, "lineitem")
     return spark.sql(_SQL_Q6)
 
@@ -119,7 +116,6 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS (generalization of the cube/rollup pair,
     SURVEY §2.D note): one Expand + one hash aggregate, not one pass per
     set."""
-    apply_engine_conf(spark)
     _views(spark, sf_dir, "lineitem")
     return spark.sql(_GROUPING_SETS)
 
@@ -146,7 +142,6 @@ def pivot_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     conditional aggregation. Without the list Spark first runs a distinct
     scan and collects pivot values to the driver — never do that at 100
     TB."""
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     cust = table(spark, sf_dir, "customer")
     nation = table(spark, sf_dir, "nation")
@@ -182,7 +177,6 @@ SELECT c_custkey, metric, val FROM (
 def unpivot_long(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unpivot wide→long via the native unpivot (melt) operator — planned
     as Expand, one pass, output 2x rows, no shuffle."""
-    apply_engine_conf(spark)
     cust = table(spark, sf_dir, "customer")
     return cust.select(
         "c_custkey",
@@ -207,7 +201,6 @@ def sample_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``df.sample``, whose output depends on partition layout). This is how a
     100 TB pipeline takes an auditable subset; the predicate pushes to the
     scan and needs no shuffle."""
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     bucket = F.expr(
         "cast(conv(substring(md5(cast(o_orderkey as string)), 1, 8), 16, 10) as bigint) % 100"
@@ -229,7 +222,6 @@ WHERE l_extendedprice > (SELECT 2 * AVG(l_extendedprice) FROM lineitem)
 def sub_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Uncorrelated scalar subquery: planned as a 1-row subquery broadcast
     into the filter — the scan streams once, no self-join."""
-    apply_engine_conf(spark)
     _views(spark, sf_dir, "lineitem")
     return spark.sql(_SUB_SCALAR)
 
@@ -247,7 +239,6 @@ WHERE o_custkey IN (
 def sub_in(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IN subquery → planned as left-semi join (same physical shape as
     flt_exists, reached from SQL)."""
-    apply_engine_conf(spark)
     _views(spark, sf_dir, "orders", "customer")
     return spark.sql(_SUB_IN)
 
@@ -266,7 +257,6 @@ WHERE NOT EXISTS (
 def sub_not_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated NOT EXISTS → decorrelated by Catalyst into a left-anti
     join; no per-row re-execution of the inner query."""
-    apply_engine_conf(spark)
     _views(spark, sf_dir, "customer", "orders")
     return spark.sql(_SUB_CORR_EXISTS)
 
@@ -311,7 +301,6 @@ def sql_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     a transactional table format the same plan becomes MERGE INTO; the
     union+window formulation is the format-free equivalent (and what a
     MERGE compiles to physically: outer-join-shaped key alignment)."""
-    apply_engine_conf(spark)
     _views(spark, sf_dir, "customer")
     return spark.sql(_MERGE_UPSERT)
 
@@ -339,7 +328,6 @@ def sql_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     (typically much larger) lineitem side probe a small build set. The
     final aggregate is 5 groups — the exchange after the semi join carries
     one cell per (task, priority)."""
-    apply_engine_conf(spark)
     _views(spark, sf_dir, "orders", "lineitem")
     return spark.sql(_SQL_Q4)
 
@@ -371,7 +359,6 @@ def sql_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     The one-month shipdate predicate reaches the lineitem parquet scan;
     part is the broadcast side. The global aggregate is a single cell, so
     the post-join exchange carries one partial per task."""
-    apply_engine_conf(spark)
     _views(spark, sf_dir, "lineitem", "part")
     return spark.sql(_SQL_Q14)
 
@@ -401,7 +388,6 @@ def sql_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     side tiny at any scale — the classic needle-filter pattern. ORDER
     BY+LIMIT plans as TakeOrderedAndProject (per-partition top-100, no
     global sort)."""
-    apply_engine_conf(spark)
     _views(spark, sf_dir, "customer", "orders", "lineitem")
     return spark.sql(_SQL_Q18)
 
@@ -430,7 +416,6 @@ def sql_lateral(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(|customer| x |orders|) at scale, and it's why LATERAL is safe to
     expose on a 100 TB warehouse. The identical text runs in DuckDB, which
     keeps the oracle a true dialect-shared query."""
-    apply_engine_conf(spark)
     _views(spark, sf_dir, "customer", "orders")
     return spark.sql(_SQL_LATERAL)
 
@@ -484,7 +469,6 @@ def sql_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     subquery into an aggregate on l_partkey joined back — computed once,
     not per row; region/nation are broadcast; the LIMIT has a 4-column
     total order."""
-    apply_engine_conf(spark)
     _views(spark, sf_dir, "part", "supplier", "nation", "region", "lineitem")
     return spark.sql(_SQL_Q2)
 
@@ -515,7 +499,6 @@ def sql_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     the orderdate year predicate prunes the orders scan, and the final
     aggregate is ≤25 nation groups so the last exchange is cells, not
     rows."""
-    apply_engine_conf(spark)
     _views(spark, sf_dir, "customer", "orders", "lineitem", "supplier", "nation", "region")
     return spark.sql(_SQL_Q5)
 
@@ -551,7 +534,6 @@ def sql_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns, and the nation filters reduce each broadcast build to one row
     before the probe. EXTRACT(YEAR) is cast to INTEGER in both dialects so
     schemas agree (DuckDB's EXTRACT returns BIGINT)."""
-    apply_engine_conf(spark)
     _views(spark, sf_dir, "supplier", "lineitem", "orders", "customer", "nation")
     return spark.sql(_SQL_Q7)
 
@@ -590,7 +572,6 @@ def sql_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the ratio is bit-identical across engines. All five dims broadcast;
     the only real exchange is the (year) hash agg, carrying two cells per
     task per year."""
-    apply_engine_conf(spark)
     _views(
         spark, sf_dir, "part", "lineitem", "supplier", "orders", "customer", "nation", "region"
     )
@@ -625,7 +606,6 @@ def sql_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     ps_supplycost * l_quantity term (revenue-only); the join graph and
     (nation, year) rollup are unchanged. '%red%' replaces '%green%' —
     the fixture's p_name palette differs from stock dbgen."""
-    apply_engine_conf(spark)
     _views(spark, sf_dir, "part", "lineitem", "supplier", "orders", "nation")
     return spark.sql(_SQL_Q9)
 
@@ -654,7 +634,6 @@ def sql_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouped by a WIDE key (custkey + 3 payload columns — carried through
     the aggregate instead of re-joined after, the classic wide-groupBy
     trade), then top-20 by revenue planned as TakeOrderedAndProject."""
-    apply_engine_conf(spark)
     _views(spark, sf_dir, "customer", "orders", "lineitem", "nation")
     return spark.sql(_SQL_Q10)
 
@@ -681,7 +660,6 @@ def sql_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL-exact and the 0.001 threshold multiply stays in decimal, so
     the HAVING comparison is exact in both engines (no double knife-edge).
     Spark plans the subquery once (1-row broadcast), not per group."""
-    apply_engine_conf(spark)
     _views(spark, sf_dir, "lineitem")
     return spark.sql(_SQL_Q11)
 
@@ -711,7 +689,6 @@ def sql_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
     after order and the group key is l_linestatus; the dual conditional
     counts keep Q12's one-pass CASE-inside-SUM form (cast to BIGINT —
     DuckDB sums INTEGER into INT128)."""
-    apply_engine_conf(spark)
     _views(spark, sf_dir, "orders", "lineitem")
     return spark.sql(_SQL_Q12)
 
@@ -741,7 +718,6 @@ def sql_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     NOT LIKE '%special%requests%' o_comment filter becomes an
     o_orderpriority exclusion (no comment column); the plan shape is
     identical."""
-    apply_engine_conf(spark)
     _views(spark, sf_dir, "customer", "orders")
     return spark.sql(_SQL_Q13)
 
@@ -771,7 +747,6 @@ def sql_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines; the CTE aggregate is computed from a 3-month pruned scan.
     Spark may re-expand the CTE per use — both expansions share the scan
     via exchange reuse."""
-    apply_engine_conf(spark)
     _views(spark, sf_dir, "supplier", "lineitem")
     return spark.sql(_SQL_Q15)
 
@@ -800,7 +775,6 @@ def sql_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     (group, suppkey), then count). Adaptation: the part-supplier relation
     comes from lineitem (no partsupp) and the excluded-supplier pattern
     matches s_name (no s_comment)."""
-    apply_engine_conf(spark)
     _views(spark, sf_dir, "lineitem", "part", "supplier")
     return spark.sql(_SQL_Q16)
 
@@ -830,7 +804,6 @@ def sql_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold is bit-identical across engines and the < comparison cannot
     diverge. Adaptation: p_container predicate → p_size (no container
     column)."""
-    apply_engine_conf(spark)
     _views(spark, sf_dir, "lineitem", "part")
     return spark.sql(_SQL_Q17)
 
@@ -860,7 +833,6 @@ def sql_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     evaluate the full disjunction post-join. Adaptation: p_container /
     l_shipmode / l_shipinstruct legs → p_size ranges (columns absent);
     the three-branch disjunction structure is stock."""
-    apply_engine_conf(spark)
     _views(spark, sf_dir, "lineitem", "part")
     return spark.sql(_SQL_Q19)
 
@@ -895,7 +867,6 @@ def sql_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-(supplier, part) share > 20% of the part total from lineitem; the
     nested IN → HAVING → correlated-scalar chain is the stock structure.
     Both sides of the threshold stay DECIMAL-exact."""
-    apply_engine_conf(spark)
     _views(spark, sf_dir, "supplier", "nation", "lineitem", "part")
     return spark.sql(_SQL_Q20)
 
@@ -934,7 +905,6 @@ def sql_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate); the double-correlation structure and finished-order filter
     are stock. At 100 TB all three lineitem legs share one scan via
     exchange reuse."""
-    apply_engine_conf(spark)
     _views(spark, sf_dir, "supplier", "lineitem", "orders", "nation")
     return spark.sql(_SQL_Q21)
 
@@ -969,7 +939,6 @@ def sql_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     phone column) and "never ordered" → "no order since 1999" (the
     fixture's order coverage is dense); the
     scalar-filter + anti-join + re-aggregate pipeline is stock."""
-    apply_engine_conf(spark)
     _views(spark, sf_dir, "customer", "orders")
     return spark.sql(_SQL_Q22)
 
@@ -1081,7 +1050,6 @@ def mv_incr_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     |MV|), independent of table history. (Non-algebraic metrics — exact
     distinct, medians — need the mergeable-sketch forms instead:
     agg_sketch_union / agg_bitmap_distinct are this repo's versions.)"""
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
 
     def partials(df: DataFrame) -> DataFrame:
@@ -1146,7 +1114,6 @@ def sql_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     classify the same three expressions (two columns + a derived year) as
     keys and the other two as aggregates. Running the one SQL text in
     both engines makes any divergence a hash mismatch."""
-    apply_engine_conf(spark)
     _views(spark, sf_dir, "lineitem")
     return spark.sql(_SQL_GROUP_BY_ALL)
 
@@ -1180,7 +1147,6 @@ def sample_bottomk(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-partition k-row heaps merged once on a single k-row exchange; no
     global sort at any scale (plan-gated). This is how a 100 TB table
     yields an exact-1000-row audit panel for the cost of one scan."""
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     return (
         orders.select(
@@ -1233,7 +1199,6 @@ def sample_strat_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     single stratum outgrows a task at 100 TB, the win_ntile two-level
     treatment (per-range bottom-k, then bottom-k of the k·|ranges|
     union) drops in."""
-    apply_engine_conf(spark)
     from pyspark.sql import Window
 
     orders = table(spark, sf_dir, "orders")
@@ -1317,7 +1282,6 @@ def sample_neyman(spark: SparkSession, sf_dir: str) -> DataFrame:
     one correctly-rounded sqrt, weights are micro-quantized to exact
     BIGINT cents, and the allocation is an exact integer division — no
     double ever decides a sample count."""
-    apply_engine_conf(spark)
     from pyspark.sql import Window
 
     cust = table(spark, sf_dir, "customer")

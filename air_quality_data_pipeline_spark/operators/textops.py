@@ -26,7 +26,7 @@ from ..functions.hashing import (
 )
 from ..functions.text import shingles_duckdb, shingles_spark, tokens_duckdb, tokens_spark
 from ..registry import register
-from ..session import apply_engine_conf, scoped_persist
+from ..session import scoped_persist
 from ..tables import rebalance_for_map, table
 
 # --- llm_text_stats -----------------------------------------------------------
@@ -55,7 +55,6 @@ def llm_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc vocabulary, source coverage. One hash-aggregate shuffle on a
     low-cardinality key; ratios derived from exact integer sums so the
     doubles divide identically in both engines."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     t = docs.select(
@@ -94,7 +93,6 @@ def llm_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting two ways: whitespace split (word count) and a BPE-ish
     regex lexer (letter runs / digit runs / symbols) — the cheap proxy for
     LLM token budgeting. Per-row expressions, embarrassingly parallel."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
@@ -160,7 +158,6 @@ def llm_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language identification by stopword-profile scoring: count tokens in
     each language's profile, argmax with a fixed tiebreak order. Profiles
     are literals folded into the plan — per-row work, no shuffle, no UDF."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     scored = docs.select(
         "doc_id",
@@ -204,7 +201,6 @@ def llm_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document quality scoring: type-token ratio, stopword ratio, mean
     token length, and the keep/drop gate a pretraining filter would apply.
     Pure per-row arithmetic from exact integer counts."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     stop = F.array(*[F.lit(w) for w in _PROFILES["en"]])
@@ -274,7 +270,6 @@ def llm_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     rolling 4-gram polynomial hashes; the distinct-gram set is summarized as
     (size, min, xor-fold) — an order-insensitive content signature robust to
     small edits. Per-row array expressions only."""
-    apply_engine_conf(spark)
     docs = rebalance_for_map(table(spark, sf_dir, "documents"), spark)
     # Pre-filter short docs on the CHEAP predicate so no filter sits above
     # the hash projection — a pushed-down filter over `g` would inline the
@@ -318,7 +313,6 @@ def llm_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     (vs f_json_get's ad-hoc path access), then aggregate on the extracted
     field — the metadata-column pattern for multimodal/semi-structured
     tables. Schema-on-read stays in the scan stage; one hash-agg shuffle."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     parsed = ev.select(
         "event_type", F.from_json("props", "k bigint").alias("p")
@@ -368,7 +362,6 @@ def llm_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ReuseExchange executes the tf aggregation once and feeds both the
     rescore side and the vocabulary side, so the only full-corpus shuffles
     are the tf agg and the per-doc rank window."""
-    apply_engine_conf(spark)
     docs = rebalance_for_map(table(spark, sf_dir, "documents"), spark)
     tok = docs.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
     # scoped_persist makes the sharing explicit: the aggregated tf table
@@ -443,7 +436,6 @@ def llm_doc_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Chunk count uses integer ceil-division (Spark ``div`` / DuckDB ``//``);
     ``greatest(..., 0)`` guards the short-doc case so ``sequence`` never
     sees a negative length (Spark would generate a DESCENDING range)."""
-    apply_engine_conf(spark)
     # NULL text → no chunks (see the oracle's WHERE comment)
     docs = table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     c = docs.select(
@@ -509,7 +501,6 @@ def llm_seq_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB each bucket is one partition-local sort + prefix sum, no
     global ordering anywhere. Deterministic (doc_id order), hence
     oracle-checked exactly."""
-    apply_engine_conf(spark)
     from pyspark.sql import Window
 
     docs = table(spark, sf_dir, "documents")
@@ -560,7 +551,6 @@ def llm_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-filter (``sample_key % K < quota·K/stratum_count``, cf.
     sample_hash) and rank only the survivors — same output distribution,
     bounded per-stratum fan-in."""
-    apply_engine_conf(spark)
     from pyspark.sql import Window
 
     docs = table(spark, sf_dir, "documents")
@@ -608,7 +598,6 @@ def llm_ngram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     not corpus-sized. At 100 TB with a huge vocabulary, pre-prune with a
     per-partition top-N before the final rank (heavy-hitters pattern) —
     the aggregate itself needs no change."""
-    apply_engine_conf(spark)
     from pyspark.sql import Window
 
     # one-row-group fixture scans are 1 task; spread before the heavy
@@ -684,7 +673,6 @@ def llm_rep_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference parity: none (no text analytics in the reference, main.py) —
     north-star LLM-pipeline mandate."""
-    apply_engine_conf(spark)
     docs = rebalance_for_map(table(spark, sf_dir, "documents"), spark).select(
         "doc_id", F.expr(token_hashes_spark_sql("split(text, ' ')")).alias("th")
     )
@@ -771,7 +759,6 @@ def llm_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same join geometry as llm_incr_dedup's digest anti join.
 
     Reference parity: none — north-star LLM-pipeline mandate."""
-    apply_engine_conf(spark)
     # Stage token hashes before shingling AND persist the gram table: the
     # shingle expression references its input once per gram offset, and
     # Catalyst's CollapseProject re-inlines a staged projection — without a
@@ -855,7 +842,6 @@ def llm_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference parity: none (no text processing beyond lowercasing in the
     reference) — north-star LLM-pipeline mandate."""
-    apply_engine_conf(spark)
     docs = rebalance_for_map(table(spark, sf_dir, "documents"), spark)
     aug = docs.select(
         "doc_id", F.expr(_PII_AUG_SQL.format(str_t="STRING")).alias("aug")
@@ -927,7 +913,6 @@ def llm_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantile first, then exact-rank only the surviving ~quota rows.
 
     Reference parity: none — north-star LLM-pipeline mandate."""
-    apply_engine_conf(spark)
     from pyspark.sql import Window
 
     docs = table(spark, sf_dir, "documents").filter(
@@ -970,7 +955,6 @@ def llm_dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     so val/test never leak into train as the corpus grows). Zero shuffles —
     a per-row expression the scan pipeline absorbs; at 100 TB this is a
     free column, not a job."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     bucket = F.expr(
         "cast(conv(substring(md5(cast(doc_id as string)), 1, 8), 16, 10) as bigint) % 100"
@@ -1032,7 +1016,6 @@ def llm_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole job is two exchanges (digest, report) end to end — stages don't
     re-materialize between steps the way a script-per-stage pipeline (the
     reference's architecture, main.py:198-309) forces."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     filtered = docs.filter(
         (F.col("n_chars") >= _PREP_MIN_CHARS)
@@ -1117,7 +1100,6 @@ def llm_ngram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     heavy-hitter split applies if one prefix dominates). Scoring is exact
     integer math end to end — see module comment — so a 1000-executor run
     reproduces this result bit for bit."""
-    apply_engine_conf(spark)
     # one-row-group fixture scans are 1 task; spread before the heavy
     # per-row map work (profiled single-task stage; see OPTIMIZATION_r10.md)
     docs = rebalance_for_map(
@@ -1195,7 +1177,6 @@ def llm_doc_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle. Re-running on a grown corpus leaves every old doc's shard
     fixed (hash, not round-robin) — only positions shift, which is what
     makes incremental re-sharding cheap."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     h = docs.select(
         "doc_id",
@@ -1260,7 +1241,6 @@ def llm_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     curation signal for crawl snapshots: a snapshot whose novelty mass
     collapses is re-crawl, not new data. The ingestion-order min makes the
     score reproducible no matter how partitions are laid out."""
-    apply_engine_conf(spark)
     docs = rebalance_for_map(table(spark, sf_dir, "documents"), spark)
     # round-11 (guide §2.4 "two operations keyed the same way can share one
     # exchange"): the (doc_id, s) dedup and the per-shingle min-window BOTH
@@ -1357,7 +1337,6 @@ def llm_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts keyed on the word, pair counts keyed on the 2-char pair. This is
     the data-parallel half of tokenizer training; the merge-table update it
     feeds is O(1) driver work per iteration."""
-    apply_engine_conf(spark)
     docs = rebalance_for_map(table(spark, sf_dir, "documents"), spark)
     vocab = (
         docs.select(F.explode(F.split("text", " ")).alias("word"))
@@ -1416,7 +1395,6 @@ def llm_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: one pass, map-side partials for everything, and the final
     reduce carries one row. The oracle spells it as scalar subqueries —
     same values, deliberately naive shape."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     per_doc = docs.select(
         "lang",
@@ -1489,7 +1467,6 @@ def llm_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     exp() would drift by libm ulps (the f_trig lesson). The weights are tuned so the
     fixture corpus splits ~56/44 on the flag — both branches exercised at
     every SF."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     n_tok = F.size(toks).cast("double")
@@ -1551,7 +1528,6 @@ def llm_domain_upsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     exceed max_weight x input, and the derived sample_id keeps every
     repeat addressable downstream (shuffle/pack stages need distinct
     keys). At 100 TB the fan-out multiplies scan output, not exchanges."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     w = docs.select(
         "doc_id",
@@ -1631,7 +1607,6 @@ def llm_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the corpus and must not move twice). Ranking uses a monotone
     integer-scaled PMI ratio instead of log() so cross-engine parity is
     exact; the deterministic top-20 plans as TakeOrderedAndProject."""
-    apply_engine_conf(spark)
     docs = rebalance_for_map(table(spark, sf_dir, "documents"), spark)
     toks = docs.select(F.split("text", " ").alias("ts"))
     # both count tables are consumed multiple times (u1, u2, totals /
@@ -1756,7 +1731,6 @@ def llm_bpe_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash aggregates keyed on short symbol strings. Iterating this
     operator k times IS tokenizer training; each step costs two
     vocabulary-sized exchanges."""
-    apply_engine_conf(spark)
     docs = rebalance_for_map(table(spark, sf_dir, "documents"), spark)
     vocab = (
         docs.select(F.explode(F.split("text", " ")).alias("word"))
@@ -1866,7 +1840,6 @@ def llm_dataset_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5 equality, and the status rollup rides the join's output. The
     snapshot-B derivation is deterministic fixture scaffolding; a real
     run reads two manifest tables."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     a = docs.select("doc_id", F.md5("text").alias("h"), "n_chars")
     b_kept = docs.filter(F.col("doc_id") % 11 != 0).select(
@@ -1943,7 +1916,6 @@ def llm_pref_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     never documents, so the shape is identical at sf0.001 and 100 TB.
     Degenerate buckets (one candidate, or zero margin) are dropped — a pair
     with no preference signal is noise to a DPO loss."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     s = docs.select(
@@ -2039,7 +2011,6 @@ def llm_text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         return s.map(lambda v: None if v is None else unicodedata.normalize("NFC", v))
 
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     dirty = docs.select("doc_id", F.expr(_TEXT_NORM_DIRTY_SPARK).alias("raw"))
     clean = F.trim(F.regexp_replace(nfc(F.col("raw")), "[ \\t]+", " "))
@@ -2108,7 +2079,6 @@ def llm_bm25_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     SAME text in Spark and DuckDB (identical IEEE op tree over identical
     integers), and per-term scores are integer-quantized before summing,
     so the ranking is engine- and partitioning-exact."""
-    apply_engine_conf(spark)
     docs = rebalance_for_map(table(spark, sf_dir, "documents"), spark)
     tok = docs.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
     tf = scoped_persist(
@@ -2185,7 +2155,6 @@ def llm_sentence_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     grain). Everything is per-row Catalyst array algebra (split /
     transform / filter / aggregate): ZERO exchanges, no Python boundary,
     embarrassingly parallel at any corpus size (plan-gated)."""
-    apply_engine_conf(spark)
     # no rebalance: a pure per-row projection keeps the scan's own
     # partitioning — zero exchanges end to end (plan-gated)
     docs = table(spark, sf_dir, "documents")
@@ -2275,7 +2244,6 @@ def llm_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     FLOOR-quantized BIGINTs (see module comment) so the slope is
     engine-exact; logs — not counts — cross the arithmetic, so the
     integers stay bounded at any corpus size."""
-    apply_engine_conf(spark)
     docs = rebalance_for_map(table(spark, sf_dir, "documents"), spark)
     tok = docs.select(F.explode(F.split("text", " ")).alias("token"))
     freq = scoped_persist(tok.groupBy("token").agg(F.count(F.lit(1)).alias("freq")))
@@ -2389,7 +2357,6 @@ def llm_cdc_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubling per-row CPU (round-8 sweep, VERDICT r8 item 4). Every doc
     yields >=1 chunk (bd always has >=2 bounds), so outer semantics are
     row-for-row identical."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     base = docs.select(
         "doc_id",
@@ -2471,7 +2438,6 @@ def llm_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate. K is a constant — at 100 TB the vocab build is the usual
     two-phase partial/final aggregate and the probe side stays
     embarrassingly parallel."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     tok = docs.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
     vocab = (
@@ -2546,7 +2512,6 @@ def llm_rouge_n(spark: SparkSession, sf_dir: str) -> DataFrame:
     panel in one pass — cost is linear in candidate bigrams, never
     pairs × text. Integer counts, exact-division recall: value-hash
     portable."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     bigrams = F.expr(shingles_spark("split(text, ' ')", 2))
     rb = (
@@ -2632,7 +2597,6 @@ def llm_span_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
     Python; 100 TB cost is scan rate × executors, and the (doc_id, span)
     hash seed means re-runs and retries mask identical positions (the
     llm_dataset_split determinism discipline)."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     mask_cond = (
         f"CAST(conv(substring(md5(concat(CAST(doc_id AS STRING), ':', "
@@ -2723,7 +2687,6 @@ def llm_sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     exp-keys sampling). Quantized-ln integer ranking (see module comment)
     keeps the selection engine-exact; the sampled frame is ≤ 20 ×
     |sources| rows."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     base = docs.select(
         "doc_id",
@@ -2800,7 +2763,6 @@ def llm_tok_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial/final hash aggregate on a domain-bounded key (sources ×
     langs) — exchanges carry one small row per cell per map task. 100 TB
     cost is scan rate; the regex never leaves the executor."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     per = docs.select(
         "source",
@@ -2876,7 +2838,6 @@ def llm_sft_format(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate. 100 TB cost is scan rate × executors; the rendered text
     itself never needs to leave the executor — downstream writers
     consume it in place, comparators consume the digest."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     base = docs.select(
         "doc_id",
@@ -2958,7 +2919,6 @@ def llm_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection: zero exchanges, zero explode, zero Python. 100 TB cost is
     scan rate; the chain order is pinned by the shared SQL generator, so
     the double is bit-identical in both engines."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents").filter(F.length("text") > 0)
     # ROUND(…, 9): ln() is libm-class — JVM and C differ in the last ulp
     # on some operands (same convention as the trig functions, f_trig)
@@ -3023,7 +2983,6 @@ def llm_dataset_interleave(spark: SparkSession, sf_dir: str) -> DataFrame:
     (TakeOrdered/write-sorted), because a row_number() over () funnels
     the corpus through a single partition — the exact shape this
     operator exists to avoid."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     w = Window.partitionBy("source").orderBy("doc_id")
     wc = Window.partitionBy("source")
@@ -3093,7 +3052,6 @@ def llm_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     greatest/least in codegen. FLOOR-quantized BIGINT fences keep every
     sum integer-exact; two corpus scans total (percentile pass + clamp
     pass), no corpus-sized shuffle beyond the per-source rollup."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     fences = docs.groupBy("source").agg(
         F.floor(F.expr("percentile(n_chars, 0.05D)")).cast("bigint").alias("lo"),
@@ -3170,7 +3128,6 @@ def llm_markup_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     in whole-stage codegen); 100 TB of pages cost exactly one scan and
     the cleaned text never crosses an exchange (only its digest and two
     BIGINT lengths leave the projection)."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     marked = F.concat(
         F.lit("# "), F.col("source"), F.lit("\n"),
@@ -3249,7 +3206,6 @@ def llm_url_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate on the bounded domain key — document text never shuffles,
     and COUNT(DISTINCT doc_id) rides the same aggregate (Expand over the
     already-tiny domain grain, not the corpus)."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     enriched = docs.select(
         "doc_id",
@@ -3373,7 +3329,6 @@ def llm_char_bigram_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms are FLOOR-quantized micro-nats (order-free partials, ln() on
     identical exact-ratio doubles in both engines — the agg_entropy
     recipe)."""
-    apply_engine_conf(spark)
     # one-row-group fixture scans are 1 task; spread before the heavy
     # per-row map work (profiled single-task stage; see OPTIMIZATION_r10.md)
     docs = rebalance_for_map(
@@ -3491,7 +3446,6 @@ def llm_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     size plan node, not a data funnel). All arithmetic is BIGINT —
     quota = (B·w) div W and remainder are exact, so the Σquota == B
     invariant is checkable bit-for-bit in both engines."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     B = F.lit(_TOKEN_BUDGET).cast("bigint")
     w = docs.groupBy("source").agg(
@@ -3588,7 +3542,6 @@ def llm_template_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the partial/final aggregate on the 16-byte family key. At 100 TB
     the family table is bounded by distinct boilerplate heads, and the
     HAVING prunes singletons before any further processing."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     t = F.when(
         F.col("doc_id") % 5 == 0,
@@ -3670,7 +3623,6 @@ def llm_blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     array_intersect would lose); zero exchanges, zero Python, text never
     leaves the map side. The category panel is a broadcast-sized literal;
     adding categories widens the projection, never adds a pass."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
 
     def hits(cat: str):
@@ -3769,7 +3721,6 @@ def llm_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the aggregate on the canonical key, and COUNT(DISTINCT url) rides
     it at the already-collapsed grain. At 100 TB the frontier shuffles
     canonical strings once — exactly the llm_exact_dedup digest shape."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     raw = docs.select(
         "doc_id",
@@ -3860,7 +3811,6 @@ def llm_pad_waste(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one codegen projection (tokenize + ceil-division) into
     one map-side-combined aggregate on the bounded source key; all
     BIGINT, one exact-operand division."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     t = docs.select(
         "source", F.expr(f"size({tokens_spark('text')})").alias("n_tokens")
@@ -3935,7 +3885,6 @@ def llm_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange is the partial/final aggregate on the bounded source grain.
     The doubles feeding floor() are divisions of exact BIGINTs with
     shared literal coefficients, identical in both engines."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     d = docs.select(
         "source",
@@ -4054,7 +4003,6 @@ def llm_jsd_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     |sources|x|vocab| grid (see module note). All entropy terms are
     FLOOR-micro-quantized BIGINTs; the two output divisions see exact
     operands and a shared ln-2 literal."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     st = scoped_persist(
         docs.select("source", F.explode(F.split("text", " ")).alias("token"))
@@ -4188,7 +4136,6 @@ def llm_bleu(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(candidates), not O(corpus²)); the final pair grid is panel×panel.
     Clipped sums/lengths are exact BIGINTs; exp/ln see exact-ratio
     doubles; ROUND(9) absorbs the libm ulp."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
 
     def grams(lo: int, hi: int, n: int, side: str) -> DataFrame:
@@ -4324,7 +4271,6 @@ def llm_rater_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     five counters; everything after is scalar arithmetic on a single
     row. Adding a third rater (a model score column) changes the
     conditional sums, not the plan."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     toks = F.split(F.col("text"), " ")
     m = docs.select(
@@ -4416,7 +4362,6 @@ def llm_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc vocabulary, not raw token instances), then a doc-grain
     aggregate. Works unchanged when a single document's token stream is
     larger than executor memory — no in-row array fold is attempted."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull() & (F.col("text") != "")
     )
@@ -4498,7 +4443,6 @@ def llm_term_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast back; the per-term corpus count joins on the term grain;
     the ONLY window rides the filtered candidate cells partitioned by
     source. No token instance crosses more than the first exchange."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     tok = docs.select(
         "source", F.explode(F.split(F.col("text"), " ")).alias("t")
@@ -4600,7 +4544,6 @@ def llm_chrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     alphabet^2 per doc, not character instances); the panel discipline
     keeps pair count at refs x cands — metric cost never scales with
     corpus^2. Zero-overlap pairs carry no row in both engines."""
-    apply_engine_conf(spark)
     docs = (
         table(spark, sf_dir, "documents")
         .filter((F.col("doc_id") < _CHRF_CANDS) & F.col("text").isNotNull())
@@ -4703,7 +4646,6 @@ def llm_skipgram_cooccur(spark: SparkSession, sf_dir: str) -> DataFrame:
     the top-k plans as TakeOrderedAndProject (per-partition heaps, one
     30-row merge). At 100 TB the (doc, pos) join co-partitions both
     sides in a single exchange pair."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     tok = docs.select(
         "doc_id",
@@ -4787,7 +4729,6 @@ def llm_self_bleu(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference join, so even a 10^5-doc panel exchanges gram cells, not
     pairs. Corpus-scale use = sampled panels per source, the
     llm_dataset_card pattern."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents").filter(F.col("doc_id") < _SELF_BLEU_PANEL)
     grams = docs.select(
         "doc_id",
@@ -4882,7 +4823,6 @@ def llm_langid_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side collapse to the |langs|² confusion grain; margins and the
     accuracy scalar broadcast back onto that constant-size table. The
     corpus is scanned once."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     scored = docs.select(
         F.col("lang").alias("labeled_lang"),
@@ -4961,7 +4901,6 @@ def llm_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     not token instances); the intersection is one hash equi-join on
     gram; sizes broadcast onto the |sources|² result. Nothing is ever
     quadratic in documents or grams."""
-    apply_engine_conf(spark)
     docs = rebalance_for_map(table(spark, sf_dir, "documents"), spark)
     grams = scoped_persist(
         docs.select(
@@ -5046,7 +4985,6 @@ def llm_code_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle at all, whole-stage codegen end to end; the score blend
     runs on exact integer ratios so the boolean gate can't flip
     between engines."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     t = F.concat(
         F.col("text"),
@@ -5143,7 +5081,6 @@ def llm_script_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero shuffle, codegen end to end; the routing class is decided by
     integer cross-multiplication (n_nonascii*20 >= n_total), never a
     double."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     t = F.concat(
         F.col("text"),
@@ -5263,7 +5200,6 @@ def llm_boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     the prevalence collapse and the flag join are keyed on md5(line) —
     32-byte digests, line text never shuffles; per-source shares are a
     second map-side-combined aggregate.""".format(n=_BOILER_MIN_DOCS)
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", "source", F.split("text", " ").alias("tk"))
     chunk_expr = (
@@ -5377,7 +5313,6 @@ def llm_fleiss_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combined global collapse produces (n, keep_votes, pi_num)
     exact BIGINT cells; kappa is one shared closing expression over
     exact ratios (ROUND(9))."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     toks = F.split("text", " ")
     n_tok = F.size(toks)
@@ -5475,7 +5410,6 @@ def llm_curriculum_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
     treatment; no single-partition window on the score grain); the
     1-row threshold table broadcasts back into one map-side-combined
     phase aggregate."""
-    apply_engine_conf(spark)
     # NULL text is untrainable and would also sort differently in the two
     # engines' cumulative windows (Spark NULLS FIRST vs DuckDB NULLS LAST,
     # shifting every tertile threshold — adversarial-panel find)
@@ -5590,7 +5524,6 @@ def llm_dp_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum are row-local on that bounded table (one md5 + one ln per
     source, ROUND(9) for the libm ulp; greatest() floors the u=1
     edge)."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents")
     g = docs.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs")
@@ -5699,7 +5632,6 @@ def llm_epoch_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     its order-free fold. Exact-integer weights (avail * uniq/tok =
     sum-of-uniq) keep every proportional share a two-exact-operand
     division."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     toks = F.split("text", " ")
     g = docs.groupBy("source").agg(
@@ -5819,7 +5751,6 @@ def llm_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
     BIGINTs; bin assignment by INTEGER division, never a double x10
     floor). The reliability columns and the windowed ECE fold ride the
     10-row cell table."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     conf = docs.select(
         F.when(F.col("lang") == "en", 1).otherwise(0).alias("label"),
@@ -5931,7 +5862,6 @@ def llm_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     single 9-counter row, and the 4-stage waterfall is a per-row stack
     of that row. Adding a fifth gate costs one flag column, never
     another scan."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     toks = F.split(F.col("text"), " ")
     stop = F.array(*[F.lit(w) for w in _PROFILES["en"]])

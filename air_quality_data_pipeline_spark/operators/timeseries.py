@@ -29,7 +29,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..registry import register
-from ..session import apply_engine_conf, scoped_persist
+from ..session import scoped_persist
 from ..tables import table
 
 # one fully-covered fixture day; the grid is FIXED-SIZE (20 users x 1440
@@ -75,7 +75,6 @@ def ts_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fill itself is one running ``last(ignorenulls)`` window per user.
     Rows before a user's first observation stay NULL — the honest contract
     for leading gaps."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events").filter(
         (F.col("user_id") < _N_USERS)
         & (F.col("ts") >= F.expr(f"TIMESTAMP_NTZ '{_DAY} 00:00:00'"))
@@ -139,7 +138,6 @@ def ts_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side, so the single exchange carries one row per (user, day). The
     volume sum is DECIMAL-exact (combine-order independent) then cast back
     to double."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     s = F.struct("ts", "event_id", "value")
     return (
@@ -191,7 +189,6 @@ def win_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the raw stream, no per-event exchange: the classic
     act-join-cohorts formulation ships the activity table twice; this ships
     each user once."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     per_user = (
         ev.select("user_id", F.date_trunc("day", F.col("ts")).alias("day"))
@@ -241,7 +238,6 @@ def ts_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
     perturb the double. One exchange keyed on user_id; each partition sorts
     once and every frame is computed by the sliding-window aggregator, not
     per-row rescans."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events").filter(F.col("user_id") < _ROLL_USERS)
     us = F.unix_micros(F.to_timestamp("ts"))
     w = (
@@ -317,7 +313,6 @@ def ts_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     ((n*qv - sm)^2 > 9*(n*s2 - sm^2)) — no float boundary anywhere, so the
     count is bit-stable at any parallelism AND across engines (see the
     module comment on the DECIMAL->DOUBLE cast ulp divergence)."""
-    apply_engine_conf(spark)
     q = table(spark, sf_dir, "events").select(
         "event_type",
         F.hour("ts").cast("int").alias("hr"),
@@ -419,7 +414,6 @@ def ts_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition, so 1000 executors sweep 1000 days independently. A -1
     boundary landing exactly on midnight belongs to the segment's own day
     (frame end, exclusive); the next day's copy re-opens with +1 at 00:00."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events").select(
         F.col("ts").alias("s"),
         F.expr(f"ts + INTERVAL {_CONC_MIN} MINUTE").alias("e"),
@@ -505,7 +499,6 @@ def ts_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     independently — 1000 executors each smooth their own keys. Power-of-two
     weights + a shared left-associative expression make the floats
     bit-identical across engines (no decimal detour needed)."""
-    apply_engine_conf(spark)
     table(spark, sf_dir, "events").createOrReplaceTempView("events")
     return spark.sql(_EWMA_SQL)
 
@@ -567,7 +560,6 @@ def ts_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     the executors. Cross-engine exactness comes from the fixed-point
     BIGINT cumulative sum over FLOOR-quantized deviations (module note) —
     the running accumulator is association-free integer arithmetic."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events").select("user_id", "event_id", "ts", "value")
     # decimal(18,9): the squared term is then decimal(37,18) — inside Spark's
     # max precision 38, so the power sum is EXACT in both engines. At (20,9)
@@ -647,7 +639,6 @@ def ts_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     never reshuffled. Exact medians sort per group, which is fine for
     bounded per-user series; unbounded keys would swap in
     approx_percentile partials (agg_approx_quantiles)."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events").select("user_id", "event_id", "value")
     med = ev.groupBy("user_id").agg(F.expr("percentile(value, 0.5D)").alias("med"))
     # persist the deviation frame: it feeds BOTH the MAD aggregate and the
@@ -719,7 +710,6 @@ def ts_interval_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     island to its bounds. Contrast the naive interval self-join: O(n²)
     per key and a second shuffle. All arithmetic is integer microseconds
     — bit-exact across engines and layouts."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     s = F.unix_micros(F.to_timestamp("ts"))
     e = s + (F.floor(F.col("value") * 60.0).cast("bigint") * F.lit(1000000)) + F.lit(
@@ -791,7 +781,6 @@ def ts_trend_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     data). 1000 executors each fit their own keys; no state, no
     iteration. The identical SQL text runs in DuckDB — float parity by
     construction (shared expression tree, ts_ewma note)."""
-    apply_engine_conf(spark)
     table(spark, sf_dir, "events").createOrReplaceTempView("events")
     return spark.sql(_TREND_SLOPE_SQL)
 
@@ -859,7 +848,6 @@ def ts_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     True LTTB's pick-depends-on-previous chain cannot parallelize; the
     fixed-anchor variant is the standard scale-out compromise and is
     deterministic enough to value-hash across engines."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     pts = ev.select(
         "user_id",
@@ -965,7 +953,6 @@ def ts_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-stable on 32 cores or 1000 executors; the float division happens
     once per group at the end, identically in both engines. nullif guards
     constant series (zero variance → NULL, not a sqrt domain error)."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events").filter(F.col("user_id") < 50)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     qcol = F.expr("CAST(floor(value * 1000000.0) AS BIGINT)")
@@ -1064,7 +1051,6 @@ def ts_sliding_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     first — never run a rolling frame over raw events when the grain is
     coarser. Fixed-point sums keep every partial exact; see module
     docstring for the float-corr pitfall."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     qv = "CAST(floor(value * 1000000.0) AS BIGINT)"
     daily = ev.groupBy(
@@ -1140,7 +1126,6 @@ def ts_period_over_period(spark: SparkSession, sf_dir: str) -> DataFrame:
     hundred rows at ANY fact scale, so the window cost is constant while
     the aggregate scans scale-out. Cents are exact integers; the growth
     pct is a single IEEE division on identical operands."""
-    apply_engine_conf(spark)
     orders = table(spark, sf_dir, "orders")
     cust = table(spark, sf_dir, "customer")
     nation = table(spark, sf_dir, "nation")
@@ -1235,7 +1220,6 @@ def ts_forecast_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
     slice — the fact table never shuffles); the scoring aggregate is
     map-side combinable on event_type. Fixed-point integer arithmetic
     end-to-end (see module comment) makes the backtest engine-exact."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     base = ev.select(
         "event_type",
@@ -1315,7 +1299,6 @@ def ts_twa(spark: SparkSession, sf_dir: str) -> DataFrame:
     is (type, day, BIGINT, BIGINT). Integer milli-value × milli-second
     products keep the integral commutative and bit-portable (see module
     comment); day strings ride the portable yyyy-MM-dd contract."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     us = F.unix_micros(F.to_timestamp("ts"))
     base = ev.select(
@@ -1408,7 +1391,6 @@ def ts_theilsen(spark: SparkSession, sf_dir: str) -> DataFrame:
     type-keyed equi-join, and the median is one rank window per type.
     Slopes rank as cross-multiplied BIGINTs — no float in the order key
     (see module comment)."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     # persist the bounded daily table: both pair-join branches read it, so
     # without this the corpus-sized aggregate (the expensive stage) runs
@@ -1518,7 +1500,6 @@ def ts_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     BIGINT on FLOOR-micro-quantized sums: S_k is exact in both engines,
     and |S_k| ≤ n_days · tot_micro keeps int64 headroom through sf100+
     (see oracle comment)."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.date_format(F.to_date("ts"), "yyyy-MM-dd").alias("day")
@@ -1623,7 +1604,6 @@ def ts_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     max / argmax windows all inside one type-keyed exchange on the
     bounded cell table. BIGINT micro-units throughout; drawdown ≥ 0 by
     construction (running max includes the current row)."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.date_format(F.to_date("ts"), "yyyy-MM-dd").alias("day")
@@ -1713,7 +1693,6 @@ def ts_peak_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     type-keyed exchange on the bounded cell table, row-local peak
     predicate. BIGINT micro-units make peak membership exact (float ties
     can't flip a comparison differently per engine)."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.date_format(F.to_date("ts"), "yyyy-MM-dd").alias("day")
@@ -1782,7 +1761,6 @@ def ts_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side into the |types|² cell table; the row-total window rides
     that bounded table, and p_trans divides two exact BIGINTs, so the
     doubles are identical in both engines."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = (
@@ -1844,7 +1822,6 @@ def ts_interarrival(spark: SparkSession, sf_dir: str) -> DataFrame:
     |types|-grain cell table (the exact percentile is the honest small-
     domain choice; approx_percentile is the 100 TB drop-in). Gaps are
     exact BIGINT second differences."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     sec = F.expr(
@@ -1916,7 +1893,6 @@ def ts_cov_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus size). Counts are exact BIGINTs, so all five power sums are
     integer-exact; the closing divisions see exact operands, ROUND(9)
     on corr for the sqrt ulp."""
-    apply_engine_conf(spark)
     from ..session import scoped_persist
 
     ev = table(spark, sf_dir, "events")
@@ -2048,7 +2024,6 @@ def ts_decay_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     table / exact 2^(age div 7) shift, all IEEE correctly-rounded basic
     ops — so the quantized terms are bit-exact cross-engine (ADVICE r7;
     see _DECAY_ORACLE comment)."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     day_sql = (
         "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
@@ -2143,7 +2118,6 @@ def ts_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus), per type in parallel. This is the batch analog of a
     stateful streaming smoother: sequential in time, embarrassingly
     parallel across keys."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.to_date("ts").alias("day")
@@ -2233,7 +2207,6 @@ def ts_bollinger(spark: SparkSession, sf_dir: str) -> DataFrame:
     7-ROW window per type over the day-grain table — cell-bounded by the
     calendar, not the corpus; partitions parallelize across types and the
     frame is O(1) per row."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     daily = ev.groupBy("event_type", F.to_date("ts").alias("day")).agg(
         F.floor(F.sum(F.col("value").cast("decimal(18,9)")) * 1000000)
@@ -2330,7 +2303,6 @@ def ts_rsi(spark: SparkSession, sf_dir: str) -> DataFrame:
     and a 14-ROW window over the cell-bounded day table — O(1) frame per
     row, parallel across types, nothing downstream of the first
     aggregate sees a fact-table row."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     daily = ev.groupBy("event_type", F.to_date("ts").alias("day")).agg(
         F.floor(F.sum(F.col("value").cast("decimal(18,9)")) * 1000000)
@@ -2435,7 +2407,6 @@ def ts_leadlag(spark: SparkSession, sf_dir: str) -> DataFrame:
     (calendar-sized, not corpus-sized), and the per-lag moment aggregate
     outputs 7 rows. Nothing downstream of the first aggregate sees a
     fact-table row."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     q = lambda t: F.sum(  # noqa: E731
         F.when(
@@ -2519,7 +2490,6 @@ def ts_calendar_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     grain; the share window rides that dimension-sized cell table
     partitioned by type. Nothing after the first aggregate sees an
     event row."""
-    apply_engine_conf(spark)
     from pyspark.sql import Window
 
     ev = table(spark, sf_dir, "events")
@@ -2623,7 +2593,6 @@ def ts_macd(spark: SparkSession, sf_dir: str) -> DataFrame:
     regardless of history length — no recursive state, so the plan is
     embarrassingly parallel across types and needs no stateful
     streaming operator."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.col("ts").cast("date").alias("day")
@@ -2698,7 +2667,6 @@ def ts_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ONE map-side-combinable collapse straight from the fact
     scan to the |months| calendar grain — the shuffle carries months, not
     lines; decimal partials combine associatively on any partitioning."""
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     cents = F.floor(F.col("l_extendedprice") * 100.0).cast("bigint")
     centi = F.floor(F.col("l_quantity") * 100.0).cast("bigint")
@@ -2781,7 +2749,6 @@ def ts_stochastic(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar-bounded grain; both window layers partition by type over
     that cell table — bounded rows per partition, no global sort, O(1)
     state per row (rolling extrema over a 14-row frame)."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     daily = ev.groupBy("event_type", F.col("ts").cast("date").alias("day")).agg(
         F.floor(F.sum(F.col("value").cast("decimal(18,9)")) * 1000000)
@@ -2884,7 +2851,6 @@ def ts_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     global sort); gap rows collapse map-side to |users| moment cells; all
     closing algebra rides the user grain. Ties inside one timestamp order
     by event_id, so the lag is deterministic on any partitioning."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     gaps = ev.select(
         "user_id",
@@ -2985,7 +2951,6 @@ def ts_volatility(spark: SparkSession, sf_dir: str) -> DataFrame:
     grain; the lag and the rolling-moment windows both partition by type
     over that calendar-bounded cell table — O(1) state per row, no
     global sort, embarrassingly parallel across types."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     daily = ev.groupBy("event_type", F.col("ts").cast("date").alias("day")).agg(
         F.floor(F.sum(F.col("value").cast("decimal(18,9)")) * 1000000)
@@ -3070,7 +3035,6 @@ def ts_outages(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions, no global sort), then a pure filter — the output is the
     outage count, orders of magnitude below the event count. A per-
     device variant swaps the partition key; nothing else changes."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     wt = Window.partitionBy("event_type").orderBy("ts", "event_id")
     g = ev.select(
@@ -3146,7 +3110,6 @@ def ts_forecast_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     grain, a lag-7 window partitioned by type, then a second map-side
     collapse to |types| scorecard rows. No exchange carries event-grain
     rows past the first collapse."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     daily = ev.groupBy("event_type", F.col("ts").cast("date").alias("day")).agg(
         F.floor(F.sum(F.col("value").cast("decimal(18,9)")) * 1000000)
@@ -3254,7 +3217,6 @@ def ts_sax(spark: SparkSession, sf_dir: str) -> DataFrame:
     come from exact integer/decimal sums so the z-scores are
     partition-count-independent; symbolization is row-local. Nothing
     after the first collapse touches corpus-sized data."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.to_date("ts").alias("d")
@@ -3377,7 +3339,6 @@ def ts_lag_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell table (never the raw corpus). At 100 TB the window partitions
     are per-series cell counts — thousands of rows, not billions; a
     single task never sees more than one series' cells."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     daily = ev.groupBy("event_type", F.to_date("ts").alias("d")).agg(
         F.sum(F.floor(F.col("value") * 1000000.0).cast("bigint"))
@@ -3499,7 +3460,6 @@ def ts_crossover(spark: SparkSession, sf_dir: str) -> DataFrame:
     the slow mean is an exact integer rolling ratio; the flip compare
     happens on INTEGER signals so no float boundary can disagree.
     Windows ride the per-series cell grain."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     daily = ev.groupBy("event_type", F.to_date("ts").alias("d")).agg(
         F.sum(F.floor(F.col("value") * 1000000.0).cast("bigint"))
@@ -3623,7 +3583,6 @@ def ts_hurst(spark: SparkSession, sf_dir: str) -> DataFrame:
     (dmax-dmin)/n and std = sqrt(n*ssq - S^2)/n, so R/S =
     (dmax-dmin)/sqrt(n*ssq - S^2) — integer-derived operands into one
     sqrt and one ln, identical in both engines."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     hourly = ev.groupBy(
         "event_type",
@@ -3774,7 +3733,6 @@ def ts_pacf(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-point sums (the ts_autocorr recipe) collapsing map-side to the
     |types| cell grain; the closed-form order-3 recursion is row-local
     double algebra on identical exact-ratio operands (ROUND(9))."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     ev.createOrReplaceTempView("pacf_events")
     return spark.sql(_PACF_ORACLE.replace("FROM events", "FROM pacf_events"))
@@ -3851,7 +3809,6 @@ def ts_spectral_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     safe: a half-ulp trig divergence moves a term only at probability
     ~ulp/quantum). Power and its per-series share are row-local algebra
     on the |types| x 2 grain; nullif guards the all-zero-bin series."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     two_pi = float(_TWO_PI)
     hourly = ev.groupBy(
@@ -3968,7 +3925,6 @@ def ts_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integer before the order-free 25-row fold, so the libm call
     count is constant and cross-engine divergence is quantization-
     bounded."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = (
@@ -4068,7 +4024,6 @@ def ts_haar_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     (no window, no second exchange); energies ride the |types| x 3
     grain with exact decimal sums, and only the final /1e12 display
     scaling and nullif-guarded shares are doubles."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type",
@@ -4197,7 +4152,6 @@ def ts_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative SUM of nano-quantized log factors (exact BIGINT fold,
     libm ln quantized the ts_entropy_rate way); a day that exhausts the
     risk set is an exact 0.0 via the zeroed flag, never ln(0)."""
-    apply_engine_conf(spark)
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_orderdate", "o_orderstatus"
     )
@@ -4332,7 +4286,6 @@ def ts_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     4-integer row per type. The z expression is the same IEEE double
     tree in both engines over exact integer inputs, sigma
     nullif-guarded."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.col("ts").cast("date").alias("day")

@@ -15,7 +15,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.geo import HAVERSINE_SQL, SYNTH_LAT_SQL, SYNTH_LON_SQL
 from ..registry import register
-from ..session import apply_engine_conf
 from ..tables import table
 
 _PART_DIST = HAVERSINE_SQL.format(
@@ -35,7 +34,6 @@ def udf_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vectorized pandas UDF computing haversine (reference main.py:75-86) —
     the Arrow-batched demo of the scalar tier. Same oracle as the pure-expr
     f_haversine, which doubles as a cross-check of the two implementations."""
-    apply_engine_conf(spark)
     import pandas as pd  # noqa: F401
     from pyspark.sql.functions import pandas_udf
 
@@ -74,7 +72,6 @@ def udf_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped-map applyInPandas (the custom scoring loop of reference
     main.py:162-167 as a vectorized group aggregate). Outputs are exact
     (integral sums, min/max selection), so the oracle matches bit-for-bit."""
-    apply_engine_conf(spark)
     import pandas as pd
 
     def group_stats(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -109,7 +106,6 @@ def udf_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Python UDTF: pagination fan-out (the reference's page loop,
     main.py:125-132) — one input row expands to its pages via a lateral
     table function."""
-    apply_engine_conf(spark)
     from pyspark.sql.functions import udtf
 
     @udtf(returnType="city string, page int")
@@ -169,7 +165,6 @@ def udtf_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtered subquery — or the whole corpus crosses the Python boundary
     and the filter runs on the exploded output. The plan gate asserts the
     pushed-to-scan placement."""
-    apply_engine_conf(spark)
     from pyspark.sql.functions import udtf
 
     @udtf(returnType="pos int, token string")
@@ -207,7 +202,6 @@ def udf_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     UDF, Arrow UDF) cross-checked against one DuckDB formula, which pins
     the batch-transfer layers against each other. ROUND(dist, 0) absorbs
     the ulp spread of the three trig stacks (the f_trig rule)."""
-    apply_engine_conf(spark)
     from pyspark.sql.functions import arrow_udf
 
     @arrow_udf("double")

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..functions.exact import exact_sum
 from ..registry import register
-from ..session import apply_engine_conf, scoped_persist
+from ..session import scoped_persist
 from ..tables import table
 
 _WIN_RANK_ORACLE = """
@@ -32,7 +32,6 @@ QUALIFY rn <= 10
 def win_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group ranking (the reference's per-city sort-then-slice,
     main.py:171-172): row_number/rank/dense_rank + rank filter."""
-    apply_engine_conf(spark)
     cust = table(spark, sf_dir, "customer")
     w_rn = Window.partitionBy("c_mktsegment").orderBy(F.desc("c_acctbal"), F.asc("c_custkey"))
     w_nk = Window.partitionBy("c_mktsegment").orderBy(F.asc("c_nationkey"))
@@ -62,7 +61,6 @@ SELECT user_id, event_id, ts, event_type, value FROM (
 def win_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup-to-latest (the reference delegates this to the OpenAQ /latest
     endpoint, main.py:175-180) — the canonical row_number()=1 pattern."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
     return (
@@ -96,7 +94,6 @@ def win_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     when an event pair straddles the frame edge by < 0.5 s (caught by the
     sf1 oracle replay; shipped SFs never hit the boundary).
     """
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events").withColumn(
         "ts_sec", F.expr("unix_micros(to_timestamp(ts)) div 1000000")
     )
@@ -123,7 +120,6 @@ WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)
 @register("win_offsets", oracle=_WIN_OFFSETS_ORACLE, tags=("window",))
 def win_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Offset window functions: lag/lead/ntile over per-user event history."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
     w_val = Window.partitionBy("user_id").orderBy(F.asc("value"), F.asc("event_id"))
@@ -157,7 +153,6 @@ def win_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     dense_rank) per nation ordered by balance — rank normalization for
     quantile bucketing. One exchange on the partition key; the tiebreak on
     c_custkey makes every rank deterministic."""
-    apply_engine_conf(spark)
     cust = table(spark, sf_dir, "customer")
     w = Window.partitionBy("c_nationkey").orderBy(F.asc("c_acctbal"), F.asc("c_custkey"))
     return cust.select(
@@ -202,7 +197,6 @@ def win_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange on user_id shared by both windows — the classic alternative to
     session_window (st_session) when you need per-event session IDs, not
     just session aggregates."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events").withColumn(
         "us", F.unix_micros(F.to_timestamp("ts"))
     )
@@ -304,7 +298,6 @@ def win_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     (no Python). At 100 TB per-user event counts are bounded (human activity,
     thousands at most), so the collected arrays stay small; a pathological
     hot key would fall back to the join formulation."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events").select(
         "user_id",
         "event_id",
@@ -387,7 +380,6 @@ def win_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     when the counts branch and the join-back read ONE materialized
     assignment — disk-backed persist of the working set, linear and
     partition-local."""
-    apply_engine_conf(spark)
     cust = table(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
     ranged = scoped_persist(
         cust.repartitionByRange(_NTILE_RANGES, "c_acctbal", "c_custkey").withColumn(
@@ -468,7 +460,6 @@ def win_median_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
     independently across executors. Lower median (not interpolated) keeps
     the output an actual observed value — and exactly equal across
     engines, since no arithmetic touches the doubles."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events").filter(F.col("user_id") < _MEDIAN_USERS)
     w = (
         Window.partitionBy("user_id")
@@ -525,7 +516,6 @@ def win_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the calendar-bucketed variant retention products actually report.
     Every quantity is an integer day count — engine-exact with no float
     anywhere."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     days = ev.select(
         "user_id", F.date_trunc("day", F.col("ts")).cast("date").alias("d")
@@ -572,7 +562,6 @@ def win_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequential, DuckDB segment tree — the ts_cusum finding); exact
     arithmetic makes the fold order irrelevant and the single double
     division bit-stable."""
-    apply_engine_conf(spark)
     cust = table(spark, sf_dir, "customer").filter(F.col("c_acctbal") > 0.0)
     dec = F.col("c_acctbal").cast("decimal(20,4)")
     total = F.sum(dec).over(Window.partitionBy("c_nationkey"))
@@ -611,7 +600,6 @@ def win_pct_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     join-back against a percentile table, which would cost a second
     shuffle and an approximate-quantile detour. At 100 TB each priority
     partition sorts independently across executors."""
-    apply_engine_conf(spark)
     w = Window.partitionBy("o_orderpriority").orderBy("o_totalprice")
     return table(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -648,7 +636,6 @@ def win_running_extrema(spark: SparkSession, sf_dir: str) -> DataFrame:
     extrema in O(1) per row (monotone accumulator), so the post-shuffle
     cost is a single pass per series. The order is pinned by (ts,
     event_id) — unique — so every engine sees the same prefix sets."""
-    apply_engine_conf(spark)
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts", "event_id")
@@ -703,7 +690,6 @@ def win_cumulative_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     merging HLL per prefix, which loses exactness). Order is pinned by
     the unique (ts, event_id) pair so both engines see identical
     prefixes; every quantity is an integer."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events").select(
         "user_id",
         "event_id",
@@ -788,7 +774,6 @@ def win_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     Equal-split uses integer DIV so partial sums are exact on any
     partitioning (the float alternative is order-dependent); the dropped
     remainder is a defined semantic, identical in both engines."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     p = ev.filter(F.col("event_type") == "purchase").select(
         "user_id",
@@ -877,7 +862,6 @@ def win_gaps_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join alternative (day d joins d+1) re-shuffles the same data
     twice and still needs the run collapse; this is the shape that
     survives a 100 TB event log."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     d = ev.select("user_id", F.to_date("ts").alias("day"))
     w = Window.partitionBy("user_id").orderBy("day")
@@ -945,7 +929,6 @@ def win_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     No single-partition window ever sees the price grain. The verdict
     joins back to the fact on the price key; dominance is row-local
     arithmetic."""
-    apply_engine_conf(spark)
     p = table(spark, sf_dir, "part").select("p_partkey", "p_retailprice", "p_size")
     per_price = p.groupBy("p_retailprice").agg(F.max("p_size").alias("grp_max"))
     # PERSIST the rid assignment: the SQL range exchange re-samples its
@@ -1033,7 +1016,6 @@ def win_hopping(spark: SparkSession, sf_dir: str) -> DataFrame:
     row multiplier applied map-side BEFORE the single cell-grain
     exchange — at 100 TB the shuffle carries (type, start, partial
     count/sum) cells, bounded by types x time-slots, not events."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     sec = F.expr(
         "timestampdiff(SECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
@@ -1108,7 +1090,6 @@ def win_rank_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     both windows ride that cell table with bounded partitions (suppliers
     per month / months per supplier) — two cell-grain exchanges, no
     global sort, nothing after the collapse touches a lineitem row."""
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     rev = li.groupBy(
         (F.year("l_shipdate") * 100 + F.month("l_shipdate"))
@@ -1174,7 +1155,6 @@ def win_reset_cumsum(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator is ONE user-keyed exchange (the sessionization exchange);
     values accumulate as exact micro-integers — the running sum is
     identical under any partition count.""".format(t=_RESET_TYPE)
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     w_seg = (
         Window.partitionBy("user_id")

@@ -19,7 +19,6 @@ from pyspark.sql import DataFrame, SparkSession
 from .functions.exact import exact_sum, exact_sum_sql
 from .functions.geo import haversine_m
 from .registry import register
-from .session import apply_engine_conf
 from .tables import table
 
 FLAGSHIP_ORACLE = f"""
@@ -50,7 +49,6 @@ def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial (map-side) before the exchange; the top-k plans as
     TakeOrderedAndProject (no global sort of the full aggregate).
     """
-    apply_engine_conf(spark)
     lineitem = table(spark, sf_dir, "lineitem")
     orders = table(spark, sf_dir, "orders")
     customer = table(spark, sf_dir, "customer")
@@ -396,5 +394,4 @@ def ref_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     full air-quality report (freshness + geo-radius + allowlist + validity
     filters, sensor join, coalesce fallbacks, 6-column projection) must
     match a DuckDB replica built from the same literals."""
-    apply_engine_conf(spark)
     return air_quality_report(spark)

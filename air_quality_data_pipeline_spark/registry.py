@@ -8,11 +8,14 @@ driver's comparison locally.
 
 from __future__ import annotations
 
+import functools
 import importlib
-from collections.abc import Callable
+from collections.abc import Callable, Mapping
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .session import _ENGINE_CONF, apply_engine_conf
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -24,6 +27,7 @@ class QuerySpec:
     oracle: str | None = None
     doc: str = ""
     tags: tuple[str, ...] = field(default_factory=tuple)
+    confs: Mapping[str, str] = field(default_factory=dict)
 
 
 QUERIES: dict[str, QuerySpec] = {}
@@ -53,11 +57,35 @@ _QUERY_MODULES = [
 ]
 
 
-def register(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
-    """Decorator: register a (spark, sf_dir) -> DataFrame query builder."""
+def register(
+    name: str,
+    oracle: str | None = None,
+    tags: tuple[str, ...] = (),
+    confs: Mapping[str, str] | None = None,
+):
+    """Decorator: register a (spark, sf_dir) -> DataFrame query builder.
+
+    ``QuerySpec.builder`` wraps it: each build first runs
+    ``apply_engine_conf``, then sets the query's ``confs``. Builders are
+    lazy, so confs are applied at build time, read at execution, and reset
+    by the next registered build — materialize each query before building
+    the next. Only ``_ENGINE_CONF`` keys are reset, so only they may be
+    declared. The decorator returns the undecorated function.
+    """
+    confs = dict(confs or {})
+    unreset = sorted(set(confs) - set(_ENGINE_CONF))
+    if unreset:
+        raise ValueError(f"{name}: confs {unreset} are not reset by apply_engine_conf")
 
     def deco(fn: QueryFn) -> QueryFn:
-        QUERIES[name] = QuerySpec(name, fn, oracle, fn.__doc__ or "", tags)
+        @functools.wraps(fn)
+        def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+            apply_engine_conf(spark)
+            for key, value in confs.items():
+                spark.conf.set(key, value)
+            return fn(spark, sf_dir)
+
+        QUERIES[name] = QuerySpec(name, build, oracle, fn.__doc__ or "", tags, confs)
         return fn
 
     return deco

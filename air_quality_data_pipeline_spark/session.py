@@ -15,9 +15,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 # DataFrames persisted for the duration of ONE registered query (see
-# scoped_persist). Drained by apply_engine_conf, which every query builder
-# calls first — so in a long-lived driver session (the verification driver,
-# a notebook) cached signature blocks from the previous query are released
+# scoped_persist). Drained by apply_engine_conf, which the registry runs
+# before every build — so in a long-lived driver session (the verification
+# driver, a notebook) cached blocks from the previous query are released
 # before the next query starts instead of lingering until session shutdown.
 _SCOPED_PERSISTS: list[DataFrame] = []
 
@@ -26,8 +26,8 @@ def scoped_persist(df: DataFrame) -> DataFrame:
     """Persist a DataFrame with query-scoped lifetime.
 
     The cache fills on the query's own actions as usual; the blocks are
-    freed when the NEXT registered query calls apply_engine_conf. This keeps
-    the laziness contract (builders return unexecuted DataFrames, the caller
+    freed when the NEXT registered query is built. This keeps the laziness
+    contract (builders return unexecuted DataFrames, the caller
     materializes) while bounding executor storage memory across a session
     running many queries back to back.
     """
@@ -45,12 +45,36 @@ def release_scoped_persists() -> None:
             pass  # session already stopped — nothing to release
 
 
+# Every runtime-mutable conf the engine owns, at its engine value (None =
+# unset). apply_engine_conf resets all of them before each registered
+# build; register() refuses a per-query override of any other key.
+_ENGINE_CONF: dict[str, str | None] = {
+    # the driver fixtures store TIMESTAMP(NANOS); read as long (tables.py)
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.adaptive.enabled": "true",
+    # Epoch-µs derivations (win_sessionize, join_asof) interpret
+    # TIMESTAMP_NTZ in the session zone; pin UTC so results don't shift
+    # under a non-UTC driver session.
+    "spark.sql.session.timeZone": "UTC",
+    # single-file-per-table fixtures: 16 MB splits instead of 128 MB so
+    # scans parallelize (row-group aligned; AQE re-coalesces shuffles).
+    "spark.sql.files.maxPartitionBytes": str(16 * 1024 * 1024),
+    # Spark 4 defaults; join_runtime_filter overrides them, and the plan
+    # gates in tests/test_plans.py count exchanges under these.
+    "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
+    "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "10GB",
+    "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": "10MB",
+    "spark.sql.autoBroadcastJoinThreshold": "10MB",
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "1MB",
+    # default is unset (falls back to autoBroadcastJoinThreshold)
+    "spark.sql.adaptive.autoBroadcastJoinThreshold": None,
+}
+
 # AQE's partition coalescer is byte-based and blind to per-row compute
 # (guide §2): a stage that shuffles MBs but burns seconds of CPU per MB
-# (minhash pair verify, IVF candidate rescore) gets folded onto 1-4 cores
-# under the stock 1MB floor. Builders of such queries lower the floor for
-# their own run via set_compute_dense_floor; apply_engine_conf restores
-# the stock value for every other query.
+# (minhash pair verify, IVF candidate rescore, the co-purchase self-join)
+# gets folded onto 1-4 cores under the stock 1MB floor. Such queries
+# declare ``register(..., confs=COMPUTE_DENSE)``.
 #
 # Why 16k (VERDICT r10 item 4 asked for the derivation): the floor only
 # has to satisfy floor <= stage_bytes / parallelism for the coalescer to
@@ -60,27 +84,7 @@ def release_scoped_persists() -> None:
 # compute these stages carry. At cluster scale the same stages shuffle
 # GBs, so the floor is never the binding constraint there — this is a
 # small-input guard, parameterized here instead of hard-coded per site.
-COMPUTE_DENSE_COALESCE_FLOOR = "16k"
-_STOCK_COALESCE_FLOOR = "1MB"
-
-
-def set_compute_dense_floor(spark: SparkSession) -> None:
-    """Lower the AQE coalesce floor for ONE query's execution.
-
-    SEQUENCING CONTRACT (ADVICE r10): builders are lazy — this override is
-    written at plan-BUILD time, read at EXECUTION time, and restored by
-    the NEXT builder's apply_engine_conf. Callers must therefore
-    materialize each built query before building the next one — which is
-    how every harness in this repo behaves (bench.py, sweep_all.py, the
-    verification driver: build → execute → build). A caller that builds
-    two queries before executing either would run the first execution
-    under the second query's floor; the effect is partitioning-only
-    (never values), but the perf intent would land on the wrong query.
-    """
-    spark.conf.set(
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        COMPUTE_DENSE_COALESCE_FLOOR,
-    )
+COMPUTE_DENSE = {"spark.sql.adaptive.coalescePartitions.minPartitionSize": "16k"}
 
 
 def get_spark(
@@ -123,42 +127,17 @@ def get_spark(
 
 
 def apply_engine_conf(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable engine confs to an externally built session.
-
-    Query builders call this so they work under the verification driver's
-    own SparkSession, not just ours. Only runtime-mutable confs here.
-    """
+    """Release the previous query's scoped persists and reset every
+    ``_ENGINE_CONF`` key, so queries work under the verification driver's
+    own SparkSession, not just ours. The registry calls this before every
+    build; only runtime-mutable confs here."""
     release_scoped_persists()
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    # Epoch-µs derivations (win_sessionize, join_asof) interpret TIMESTAMP_NTZ
-    # in the session zone; pin UTC so results don't shift under a non-UTC
-    # driver session. Runtime-settable, unlike most session confs.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # single-file-per-table fixtures: 16 MB splits instead of 128 MB so scans
-    # parallelize (row-group aligned; AQE re-coalesces downstream shuffles).
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(16 * 1024 * 1024))
-    # join_runtime_filter demonstrates bloom runtime filters by lowering the
-    # injection thresholds for its own run; restore the Spark 4 defaults here
-    # so every OTHER query plans under stock thresholds (plan gates in
-    # tests/test_plans.py count exchanges under these).
-    spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-    spark.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "10GB"
-    )
-    spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "10MB")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10MB")
-    # Compute-dense queries (llm_minhash_dedup's pair expansion / verify)
-    # lower the AQE coalescing floor for their own run via
-    # set_compute_dense_floor (see its derivation + sequencing contract
-    # above). Restore the stock floor here so every other query coalesces
-    # under stock settings.
-    spark.conf.set(
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        _STOCK_COALESCE_FLOOR,
-    )
-    try:  # default is unset (falls back to autoBroadcastJoinThreshold)
-        spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-    except Exception:
-        pass
+    for key, value in _ENGINE_CONF.items():
+        if value is not None:
+            spark.conf.set(key, value)
+        else:
+            try:
+                spark.conf.unset(key)
+            except Exception:
+                pass
     return spark

@@ -21,7 +21,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.exact import exact_sum, exact_sum_sql
 from ..registry import register
-from ..session import apply_engine_conf
 from ..tables import table
 
 _SRC_PARQUET_ORACLE = """
@@ -35,7 +34,6 @@ def src_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Columnar scan with predicate + projection pushdown: only 3 of 11
     lineitem columns are read and both filters reach the parquet reader
     (PushedFilters in the plan — asserted by tests/test_plans.py)."""
-    apply_engine_conf(spark)
     li = table(spark, sf_dir, "lineitem")
     return (
         li.filter(
@@ -59,7 +57,6 @@ def src_nested_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-structured ingestion with a declared schema (the reference's
     payload.get("results") dict-walking, main.py:119, 180): from_json with a
     StructType, then relational ops over the extracted field."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     parsed = ev.withColumn("p", F.from_json("props", "k BIGINT"))
     return (
@@ -156,7 +153,6 @@ def src_http(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows from pages 1-3) pins the skip. On Spark the policy is
     partition-local — one bad page costs one empty partition, not the
     driver-global abort a sequential loop risks."""
-    apply_engine_conf(spark)
 
     base_url = _http_fixture_url()
 
@@ -260,7 +256,6 @@ def snk_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     DATA (max o_orderdate), not wall-clock, so runs are deterministic.
     coalesce(1) mirrors its single-file output — for a 100 TB result you
     would drop the coalesce and let every task write its own part file."""
-    apply_engine_conf(spark)
     df = _region_revenue(spark, sf_dir)
     # data-derived timestamp for the reference's strftime filename: one
     # scalar read (an aggregate of an already-small dimension), not a
@@ -304,7 +299,6 @@ def snk_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partitioned parquet sink + read-back — the engine-native format
     (SURVEY §2.A snk_parquet). partitionBy(region) demonstrates the layout
     that enables partition pruning on subsequent scans."""
-    apply_engine_conf(spark)
     out = tempfile.mkdtemp(prefix="snk_parquet_")
     _region_revenue(spark, sf_dir).write.mode("overwrite").partitionBy("region").parquet(out)
     return spark.read.parquet(out).select("region", "order_cnt", "revenue")
@@ -318,7 +312,6 @@ def snk_object_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     Locally the same code targets a filesystem path; the key layout
     (prefix + date partition) is what an object store sees. The partition
     value derives from the data (not wall-clock) so runs are deterministic."""
-    apply_engine_conf(spark)
     out = tempfile.mkdtemp(prefix="snk_object_store_") + "/airquality"
     df = _region_revenue(spark, sf_dir).withColumn("dt", F.lit("19980802"))
     df.write.mode("overwrite").partitionBy("dt").parquet(out)
@@ -337,7 +330,6 @@ def src_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate. The filter becomes a PartitionFilter — directories for other
     event types are never opened (asserted in tests/test_plans.py). At
     100 TB partition pruning is the first and cheapest 10-100x."""
-    apply_engine_conf(spark)
     out = tempfile.mkdtemp(prefix="src_partitioned_")
     ev = table(spark, sf_dir, "events").select("event_id", "user_id", "value", "event_type")
     ev.write.mode("overwrite").partitionBy("event_type").parquet(out)
@@ -362,7 +354,6 @@ def src_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles must survive text formatting bit-exactly. CSV is a row format —
     no column pruning or predicate pushdown — so at scale it is an
     ingest-once format, converted to parquet on first touch (src_parquet)."""
-    apply_engine_conf(spark)
     out = tempfile.mkdtemp(prefix="src_csv_")
     cust = table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_acctbal", "c_mktsegment"
@@ -387,7 +378,6 @@ def src_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
     compares post-round-trip text length against the original, so JSON
     escaping must preserve every character. Like CSV, JSONL is row-major
     ingest-only at scale: first touch converts to parquet."""
-    apply_engine_conf(spark)
     out = tempfile.mkdtemp(prefix="src_jsonl_")
     docs = table(spark, sf_dir, "documents")
     docs.select(
@@ -413,7 +403,6 @@ def src_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet (stripe/row-group statistics drive predicate skipping); the
     write→read round trip must preserve int/double/varchar exactly. At
     scale ORC vs parquet is an ecosystem choice, not a capability gap."""
-    apply_engine_conf(spark)
     out = tempfile.mkdtemp(prefix="src_orc_")
     table(spark, sf_dir, "supplier").write.mode("overwrite").orc(out)
     return spark.read.orc(out).select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
@@ -438,7 +427,6 @@ def snk_part_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-run of one day/one source without rewriting (or locking) the rest;
     static overwrite mode would truncate the whole table. Read-back of the
     merged table is what gets oracle-checked."""
-    apply_engine_conf(spark)
     out = tempfile.mkdtemp(prefix="snk_part_overwrite_")
     ev = table(spark, sf_dir, "events").select("event_id", "user_id", "value", "event_type")
     ev.write.mode("overwrite").partitionBy("event_type").parquet(out)
@@ -482,7 +470,6 @@ def snk_sorted_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
     years. repartitionByRange keys the exchange on the sort column itself
     so file count stays bounded (one writer task per band, no tiny-file
     explosion)."""
-    apply_engine_conf(spark)
     out = tempfile.mkdtemp(prefix="snk_sorted_skip_")
     li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_shipdate", "l_quantity", "l_extendedprice"
@@ -520,7 +507,6 @@ def src_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     still prunes to exactly the requested columns per file. Default reads
     skip the footer union (first-file schema) — the option is per-scan, so
     only evolving tables pay the merge cost."""
-    apply_engine_conf(spark)
     out = tempfile.mkdtemp(prefix="src_schema_evo_")
     orders = table(spark, sf_dir, "orders")
     old = orders.filter(F.col("o_orderdate") < "1996-01-01").select(
@@ -563,7 +549,6 @@ def join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     the two pruning regimes that make a 100 TB star-join read 1% of its
     partitions. The dim here derives from the fixture (distinct types
     passing the filter) so the oracle is pure SQL."""
-    apply_engine_conf(spark)
     out = tempfile.mkdtemp(prefix="join_dpp_")
     ev = table(spark, sf_dir, "events").select(
         "event_id", "user_id", "value", "event_type"
@@ -607,7 +592,6 @@ def snk_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     (snk_sorted_skip's property, acquired as a side effect). The read-back
     proves the compaction is content-preserving — which is what makes it
     safe to run online."""
-    apply_engine_conf(spark)
     base = tempfile.mkdtemp(prefix="snk_compact_")
     frag, compact = base + "/frag", base + "/compact"
     orders = table(spark, sf_dir, "orders").select(
@@ -663,7 +647,6 @@ def snk_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     within-file sort, and is dropped before the write. The oracle checks
     the full round trip: clustered write, read back, both-dimension
     predicate — content must equal a direct filter of the source."""
-    apply_engine_conf(spark)
     out = tempfile.mkdtemp(prefix="snk_zorder_")
     li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_partkey", "l_shipdate", "l_extendedprice"
@@ -722,7 +705,6 @@ def src_corrupt_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     auditable version of that posture. Caveat encoded here: counting
     corrupt rows requires materializing the corrupt column through a
     cache/filter (Spark lazily prunes _corrupt_record otherwise)."""
-    apply_engine_conf(spark)
     out = tempfile.mkdtemp(prefix="src_corrupt_")
     orders = table(spark, sf_dir, "orders")
     (
@@ -790,7 +772,6 @@ def src_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingest job publishes. binaryFile never splits a file, so parallelism
     is one task per blob — exactly right for media; pathGlobFilter skips
     _SUCCESS markers at the listing, before any bytes are read."""
-    apply_engine_conf(spark)
     out = tempfile.mkdtemp(prefix="src_binary_files_")
     docs = table(spark, sf_dir, "documents").filter(
         F.col("doc_id") < _SRC_BINARY_FILES_N
@@ -830,7 +811,6 @@ def src_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
     src_csv contract, through a different serializer). Like CSV/JSONL,
     XML is row-major ingest-only at scale: first touch converts to
     parquet."""
-    apply_engine_conf(spark)
     out = tempfile.mkdtemp(prefix="src_xml_") + "/supplier_xml"
     sup = table(spark, sf_dir, "supplier")
     sup.write.mode("overwrite").format("xml").option("rootTag", "suppliers").option(
@@ -879,7 +859,6 @@ def snk_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     never depends on task order (a concat-then-hash digest would).
     Manifest equality vs the source table is the round-trip proof the
     release pipeline signs off on."""
-    apply_engine_conf(spark)
     docs = table(spark, sf_dir, "documents").select(
         "doc_id",
         "n_chars",

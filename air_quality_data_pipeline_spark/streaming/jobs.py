@@ -25,7 +25,6 @@ import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
-from ..session import apply_engine_conf
 from ..tables import table
 
 _COUNTER = itertools.count()
@@ -40,9 +39,8 @@ def read_events_stream(spark: SparkSession, sf_dir: str, ltz: bool = False) -> D
     ``tables.table``. ``ltz=True`` produces a TIMESTAMP (instant) column —
     required by watermarks — built either directly from the raw epoch nanos
     or by reinterpreting the NTZ value under the pinned-UTC session zone;
-    both are timezone-independent given ``apply_engine_conf``.
+    both are timezone-independent (the registry pins UTC before every build).
     """
-    apply_engine_conf(spark)
     batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     raw = (
         spark.readStream.schema(batch_schema)
@@ -154,7 +152,6 @@ def st_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle replicates the SEMANTICS — watermark = max event time − 1 h
     applied with Spark's one-batch filter lag, drop iff window end ≤
     watermark, emit iff window end ≤ final watermark — not the timing."""
-    apply_engine_conf(spark)
     d = tempfile.mkdtemp(prefix="st_watermark_fix_")
     batches = [("a", _WM_BATCH_A, 1_700_000_000), ("m", _WM_BATCH_M, 1_700_005_000),
                ("b", _WM_BATCH_B, 1_700_009_999)]
@@ -388,7 +385,6 @@ def st_incr_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     table. At 100 TB/day this is THE ingestion pattern: per-run cost is
     proportional to new data, restarts are safe at any point, and the
     file-log lookup is O(new files), not O(directory)."""
-    apply_engine_conf(spark)
     base = tempfile.mkdtemp(prefix="st_incr_resume_")
     src, ckpt, out = base + "/src", base + "/ckpt", base + "/out"
     os.makedirs(src)

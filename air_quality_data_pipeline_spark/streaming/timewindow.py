@@ -17,7 +17,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.exact import exact_sum
 from ..registry import register
-from ..session import apply_engine_conf
 from ..tables import table
 
 # Spark SQL fragment: NTZ timestamp → epoch seconds / microseconds (bigint)
@@ -38,7 +37,6 @@ def st_tumble(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-day window aggregate (the reference's daily run cadence,
     readme.md:86-89). Spark's window() aligns to the epoch, matching the
     oracle's integer floor-division bucketing."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "1 day").alias("w"))
@@ -64,7 +62,6 @@ def st_slide(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding window (6 h size, 3 h slide): each event lands in exactly two
     overlapping windows; Spark's window() replicates rows per window, the
     oracle replicates via UNNEST([0,1])."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "6 hours", "3 hours").alias("w"))
@@ -100,7 +97,6 @@ def st_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session window (30 min gap) per user. The oracle reproduces Spark's
     session semantics (end = last event + gap; a new session starts when the
     gap is ≥ the timeout) with gaps-and-islands SQL."""
-    apply_engine_conf(spark)
     ev = table(spark, sf_dir, "events")
     return (
         ev.groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))

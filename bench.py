@@ -68,8 +68,6 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
-    from air_quality_data_pipeline_spark.session import apply_engine_conf
-
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("air-quality-pipeline-bench")
@@ -78,7 +76,6 @@ def main() -> None:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    apply_engine_conf(spark)
 
     from air_quality_data_pipeline_spark.registry import load_all_queries
 
@@ -132,6 +129,9 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": sf,
+        "sf_dir": sf_dir,
+        "cpus": int(cpus),
+        "nproc": len(os.sched_getaffinity(0)),
         "runs_per_query": runs,
         "heavy_total_wall": round(sum(heavy.values()), 3),
         "heavy_queries": heavy,

@@ -62,9 +62,7 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
     from air_quality_data_pipeline_spark.registry import load_all_queries
-    from air_quality_data_pipeline_spark.session import apply_engine_conf
 
-    apply_engine_conf(spark)
     specs = load_all_queries()
     specs["flagship"].builder(spark, "/root/testdata/sf0.001").write.mode(
         "overwrite"

@@ -11,7 +11,7 @@ it as the last step of every round:
 
 Gates (BASELINE.md anchors):
   headline_17q_total_wall  <= 2 x 24.7 s  (r1 cold-protocol anchor)
-  heavy_total_wall         <= 2 x  8.2 s  (r8 pinned anchor)
+  heavy_total_wall         <= 2 x  3.4 s  (r11 cold-protocol anchor)
   every query present, zero "errors" entries
   driver-row freshness (VERDICT r9 item 5): every registered operator has a
   CORRECTNESS_r*.json row, or sits in the current DRIVER_WINDOW (getting one
@@ -128,24 +128,40 @@ def check_driver_row_freshness(extra_names: tuple = ()) -> list[str]:
 # latency jitter from tripping the gate.
 SWEEP_REGRESSION_FACTOR = 2.0
 SWEEP_ABS_FLOOR_SEC = 1.0
+SWEEP_TIMEOUT_SEC = 3600
+
+
+def newest_sweep_ref() -> str | None:
+    """The committed SWEEP_r<N>.json with the highest round number N."""
+    import glob
+    import re
+
+    rounds: dict[int, str] = {}
+    for path in glob.glob(os.path.join(REPO, "SWEEP_r*.json")):
+        m = re.fullmatch(r"SWEEP_r(\d+)\.json", os.path.basename(path))
+        if m:
+            rounds[int(m.group(1))] = path
+    return rounds[max(rounds)] if rounds else None
 
 
 def check_sweep(sweep_path: str | None) -> list[str]:
     """Compare a sweep JSON against the newest committed SWEEP_r*.json.
 
     Prints the slowest-15 table (the seal record). Returns problems for
-    queries that regressed >2x (and past the absolute floor) or vanished.
-    With no committed reference yet, records the table and passes.
+    queries that regressed >2x (and past the absolute floor) or vanished,
+    and for a sweep run that failed or timed out. With no committed
+    reference yet, records the table and passes.
     """
-    import glob
-
     if sweep_path is None:
         print("sweep guard: running scripts/sweep_all.py (use --sweep FILE to reuse)")
-        proc = subprocess.run(
-            [sys.executable, os.path.join(REPO, "scripts", "sweep_all.py"),
-             "--runs", "2", "--out", "/tmp/close_round_sweep.json"],
-            capture_output=True, text=True, timeout=3600,
-        )
+        try:
+            proc = subprocess.run(
+                [sys.executable, os.path.join(REPO, "scripts", "sweep_all.py"),
+                 "--runs", "2", "--out", "/tmp/close_round_sweep.json"],
+                capture_output=True, text=True, timeout=SWEEP_TIMEOUT_SEC,
+            )
+        except subprocess.TimeoutExpired:
+            return [f"sweep_all.py timed out after {SWEEP_TIMEOUT_SEC} s"]
         if proc.returncode != 0:
             return [f"sweep_all.py failed: {proc.stderr[-500:]}"]
         sweep_path = "/tmp/close_round_sweep.json"
@@ -156,22 +172,22 @@ def check_sweep(sweep_path: str | None) -> list[str]:
     print("sweep slowest-15 (the seal record):")
     for name, sec in sorted(timings.items(), key=lambda kv: -kv[1])[:15]:
         print(f"  {name:28s} {sec:7.3f}")
-    refs = sorted(glob.glob(os.path.join(REPO, "SWEEP_r*.json")))
-    if not refs:
+    ref_path = newest_sweep_ref()
+    if ref_path is None:
         print("sweep guard: no committed SWEEP_r*.json reference yet — recording only")
         return []
-    ref = json.load(open(refs[-1]))
+    ref = json.load(open(ref_path))
     ref_t: dict[str, float] = ref.get("timings", ref)
     problems = []
     for name, prev in ref_t.items():
         now = timings.get(name)
         if now is None:
-            problems.append(f"sweep: {name} present in {os.path.basename(refs[-1])} "
+            problems.append(f"sweep: {name} present in {os.path.basename(ref_path)} "
                             f"but missing from the current sweep")
         elif now > max(SWEEP_REGRESSION_FACTOR * prev, SWEEP_ABS_FLOOR_SEC):
             problems.append(
                 f"sweep: {name} regressed {prev:.3f}s -> {now:.3f}s "
-                f"(>{SWEEP_REGRESSION_FACTOR}x vs {os.path.basename(refs[-1])})"
+                f"(>{SWEEP_REGRESSION_FACTOR}x vs {os.path.basename(ref_path)})"
             )
     return problems
 

@@ -54,7 +54,6 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     from air_quality_data_pipeline_spark.registry import load_all_queries
-    from air_quality_data_pipeline_spark.session import apply_engine_conf
 
     spark = (
         SparkSession.builder.master("local[8]")
@@ -63,7 +62,6 @@ def main() -> None:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    apply_engine_conf(spark)
     specs = load_all_queries()
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
 

@@ -38,7 +38,6 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     from air_quality_data_pipeline_spark.registry import load_all_queries
-    from air_quality_data_pipeline_spark.session import apply_engine_conf
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = (
@@ -53,7 +52,6 @@ def main() -> None:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    apply_engine_conf(spark)
     specs = load_all_queries()
 
     # warm the session so the first profiled query doesn't carry JVM init

@@ -3,12 +3,16 @@ first 50 ``queries()`` entries, so the rotation in DRIVER_PRIORITY must
 actually land at the front of the dict. Entries past the 50-slot fold only
 order the remainder of the registry (DRIVER_WINDOW is the real window)."""
 
+import pytest
+
+from air_quality_data_pipeline_spark.operators.joins import join_runtime_filter
 from air_quality_data_pipeline_spark.registry import (
     DEFERRED_FIRST_ROW,
     DRIVER_PRIORITY,
     DRIVER_WINDOW,
     ROUND12_RESAMPLE,
     load_all_queries,
+    register,
 )
 
 SPECS = load_all_queries()
@@ -179,3 +183,49 @@ def test_close_round_freshness_gate():
         extra_names=("st_approx_distinct_like_orphan",)
     )
     assert flagged and "st_approx_distinct_like_orphan" in flagged[0]
+
+
+# --- per-query session conf lifecycle (register() owns it) -------------------
+
+_FLOOR = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+
+
+def test_compute_dense_floor_holds_on_every_build(spark, sf_dir):
+    """graph_cc declares COMPUTE_DENSE, so its floor must not depend on
+    whether an earlier build already memoized the co-purchase edges."""
+    for _ in range(2):  # the second build is an edge-memo hit
+        SPECS["graph_cc"].builder(spark, sf_dir)
+        assert spark.conf.get(_FLOOR) == "16k"
+
+
+def test_declared_confs_reset_by_next_build(spark, sf_dir):
+    keys = {
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "10GB",
+        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": "10MB",
+        "spark.sql.autoBroadcastJoinThreshold": "10MB",
+    }
+    SPECS["join_runtime_filter"].builder(spark, sf_dir)
+    assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == "-1"
+    SPECS["agg_stats"].builder(spark, sf_dir)
+    assert {k: spark.conf.get(k) for k in keys} == keys
+    assert spark.conf.get("spark.sql.adaptive.autoBroadcastJoinThreshold", None) is None
+    # the declaration, not the builder body, carries the overrides
+    join_runtime_filter(spark, sf_dir)
+    assert {k: spark.conf.get(k) for k in keys} == keys
+
+
+def test_every_build_releases_scoped_persists(spark, sf_dir):
+    """sql_recursive runs on a child session, but its build must still
+    release the previous query's scoped persists on the shared one."""
+    jsc = spark.sparkContext._jsc
+    SPECS["sql_recursive"].builder(spark, sf_dir)  # memoizes its child session
+    SPECS["win_ntile"].builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    persisted = jsc.getPersistentRDDs().size()
+    SPECS["sql_recursive"].builder(spark, sf_dir)
+    assert jsc.getPersistentRDDs().size() < persisted
+
+
+def test_register_refuses_confs_it_cannot_reset():
+    with pytest.raises(ValueError, match="spark.sql.not_reset"):
+        register("never_registered", confs={"spark.sql.not_reset": "1"})
+    assert "never_registered" not in load_all_queries()
