@@ -20,6 +20,9 @@ from pyspark.sql import DataFrame, SparkSession
 # driver, a notebook) cached blocks from the previous query are released
 # before the next query starts instead of lingering until session shutdown.
 _SCOPED_PERSISTS: list[DataFrame] = []
+# Temp views (memory-sink tables) with the same query-scoped lifetime, with
+# the session that owns each (see scoped_view).
+_SCOPED_VIEWS: list[tuple[SparkSession, str]] = []
 
 
 def scoped_persist(df: DataFrame) -> DataFrame:
@@ -43,6 +46,14 @@ def release_scoped_persists() -> None:
             _SCOPED_PERSISTS.pop().unpersist()
         except Exception:
             pass  # session already stopped — nothing to release
+
+
+def scoped_view(spark: SparkSession, name: str) -> str:
+    """Register a temp view name with query-scoped lifetime, like
+    scoped_persist: apply_engine_conf drops the view before the next
+    registered query is built. Returns ``name``."""
+    _SCOPED_VIEWS.append((spark, name))
+    return name
 
 
 # Every runtime-mutable conf the engine owns, at its engine value (None =
@@ -127,11 +138,17 @@ def get_spark(
 
 
 def apply_engine_conf(spark: SparkSession) -> SparkSession:
-    """Release the previous query's scoped persists and reset every
+    """Release the previous query's scoped persists and views and reset every
     ``_ENGINE_CONF`` key, so queries work under the verification driver's
     own SparkSession, not just ours. The registry calls this before every
     build; only runtime-mutable confs here."""
     release_scoped_persists()
+    while _SCOPED_VIEWS:
+        owner, name = _SCOPED_VIEWS.pop()
+        try:
+            owner.catalog.dropTempView(name)
+        except Exception:
+            pass  # session already stopped — nothing to drop
     for key, value in _ENGINE_CONF.items():
         if value is not None:
             spark.conf.set(key, value)

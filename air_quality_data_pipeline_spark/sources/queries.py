@@ -334,7 +334,7 @@ def src_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = table(spark, sf_dir, "events").select("event_id", "user_id", "value", "event_type")
     ev.write.mode("overwrite").partitionBy("event_type").parquet(out)
     return (
-        spark.read.parquet(out)
+        spark.read.schema(ev.schema).parquet(out)
         .filter(F.col("event_type") == "purchase")
         .select("event_id", "user_id", "value")
     )

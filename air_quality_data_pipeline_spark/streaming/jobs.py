@@ -25,10 +25,10 @@ import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
-from ..tables import table
+from ..session import scoped_view
+from ..tables import _NS_TO_TS_NTZ, raw_schema, table
 
 _COUNTER = itertools.count()
-_NS_TO_TS_NTZ = "timestampadd(MICROSECOND, {col} div 1000, TIMESTAMP_NTZ '1970-01-01 00:00:00')"
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str, ltz: bool = False) -> DataFrame:
@@ -41,7 +41,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str, ltz: bool = False) -> D
     or by reinterpreting the NTZ value under the pinned-UTC session zone;
     both are timezone-independent (the registry pins UTC before every build).
     """
-    batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    batch_schema = raw_schema(spark, sf_dir, "events")
     raw = (
         spark.readStream.schema(batch_schema)
         .option("pathGlobFilter", "events.parquet")
@@ -61,9 +61,11 @@ def read_events_stream(spark: SparkSession, sf_dir: str, ltz: bool = False) -> D
 
 def run_available_now(sdf: DataFrame, output_mode: str, query_name_prefix: str) -> DataFrame:
     """Run a streaming DataFrame to completion (AvailableNow) into a memory
-    sink and return the materialized table."""
+    sink and return the materialized table. The sink's temp view is
+    query-scoped (``scoped_view``): dropped when the next registered query
+    is built."""
     spark = sdf.sparkSession
-    name = f"{query_name_prefix}_{os.getpid()}_{next(_COUNTER)}"
+    name = scoped_view(spark, f"{query_name_prefix}_{os.getpid()}_{next(_COUNTER)}")
     q = (
         sdf.writeStream.format("memory")
         .queryName(name)
@@ -209,10 +211,11 @@ def st_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactly-once file semantics make the read-back oracle-checkable."""
     sdf = read_events_stream(spark, sf_dir)
     out_dir = tempfile.mkdtemp(prefix="st_sink_out_")
+    purchases = sdf.filter(F.col("event_type") == "purchase").select(
+        "event_id", "user_id", "event_type"
+    )
     q = (
-        sdf.filter(F.col("event_type") == "purchase")
-        .select("event_id", "user_id", "event_type")
-        .writeStream.format("parquet")
+        purchases.writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", tempfile.mkdtemp(prefix="st_sink_ckpt_"))
         .outputMode("append")
@@ -220,7 +223,7 @@ def st_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    return spark.read.parquet(out_dir)
+    return spark.read.schema(purchases.schema).parquet(out_dir)
 
 
 _ST_STREAM_JOIN_ORACLE = """

@@ -13,8 +13,16 @@ this module so schema quirks are handled in exactly one place:
   the dtype it actually observes, so either vintage produces the same
   canonical ``TIMESTAMP_NTZ`` column and both engines (Spark, DuckDB) agree
   to the microsecond.
-- every other table is a plain parquet scan (columnar, predicate/column
-  pushdown handled by Catalyst).
+- every table is read with an explicit schema from ``raw_schema``, so
+  opening a table runs no Spark job. ``raw_schema`` infers each file's
+  parquet schema once and caches it under ``(path, length, modification
+  time)`` from Hadoop ``FileSystem.getFileStatus`` (one code path for local
+  paths and object stores), plus the current values of ``_SCHEMA_CONFS``.
+  A rewritten file has a new length or mtime, so it gets a new key and is
+  inferred again. The confs are in the key because they change how parquet
+  types map to Spark types (e.g. ``nanosAsLong`` turns TIMESTAMP(NANOS) into
+  ``long``): with them, a cached entry equals what a fresh inference would
+  return, across sessions in one process.
 """
 
 from __future__ import annotations
@@ -40,6 +48,31 @@ TABLE_NAMES = [
 # exactly what DuckDB's parquet reader does with TIMESTAMP(NANOS)).
 _NS_TO_TS_NTZ = "timestampadd(MICROSECOND, {col} div 1000, TIMESTAMP_NTZ '1970-01-01 00:00:00')"
 
+# Confs that change the Spark schema parquet inference returns for a file.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+_SCHEMAS: dict[tuple, T.StructType] = {}
+
+
+def raw_schema(spark: SparkSession, sf_dir: str, name: str) -> T.StructType:
+    """The inferred parquet schema of one fixture file, cached per file
+    version and schema-conversion conf (see the module docstring)."""
+    path = spark._jvm.org.apache.hadoop.fs.Path(f"{sf_dir}/{name}.parquet")
+    status = path.getFileSystem(spark._jsc.hadoopConfiguration()).getFileStatus(path)
+    key = (
+        status.getPath().toString(),
+        status.getLen(),
+        status.getModificationTime(),
+        tuple(spark.conf.get(k) for k in _SCHEMA_CONFS),
+    )
+    if key not in _SCHEMAS:
+        _SCHEMAS[key] = spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
+    return _SCHEMAS[key]
+
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table as a DataFrame with canonical column types."""
@@ -47,12 +80,13 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # nanosAsLong is inert on timestamp[us] files, so it is safe to keep
         # enabled for old-vintage TIMESTAMP(NANOS) fixtures.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/events.parquet")
-        ts_type = df.schema["ts"].dataType
-        if isinstance(ts_type, T.LongType):
-            return df.withColumn("ts", F.expr(_NS_TO_TS_NTZ.format(col="ts")))
-        return df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    schema = raw_schema(spark, sf_dir, name)
+    df = spark.read.schema(schema).parquet(f"{sf_dir}/{name}.parquet")
+    if name != "events":
+        return df
+    if isinstance(schema["ts"].dataType, T.LongType):
+        return df.withColumn("ts", F.expr(_NS_TO_TS_NTZ.format(col="ts")))
+    return df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
 
 
 def tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:

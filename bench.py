@@ -62,7 +62,7 @@ HEAVY = [
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5")))
     sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf") or "0.1")
 

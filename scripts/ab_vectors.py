@@ -52,7 +52,7 @@ def set_arm(arm: str) -> None:
 
 
 def main() -> None:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("ab-vectors")
@@ -61,6 +61,7 @@ def main() -> None:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
+    print(f"# cpus={cpus} nproc={len(os.sched_getaffinity(0))}", file=sys.stderr, flush=True)
     from air_quality_data_pipeline_spark.registry import load_all_queries
 
     specs = load_all_queries()

@@ -46,7 +46,7 @@ def main() -> None:
 
     from air_quality_data_pipeline_spark.registry import load_all_queries
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("scale-study")
@@ -55,6 +55,7 @@ def main() -> None:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
+    print(f"# cpus={cpus} nproc={len(os.sched_getaffinity(0))}", file=sys.stderr, flush=True)
     specs = load_all_queries()
 
     def run_once(name: str, sf_dir: str) -> float:

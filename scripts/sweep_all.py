@@ -27,7 +27,7 @@ def main() -> None:
 
     from air_quality_data_pipeline_spark.registry import load_all_queries
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("sweep-all")
@@ -36,6 +36,7 @@ def main() -> None:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
+    print(f"# cpus={cpus} nproc={len(os.sched_getaffinity(0))}", file=sys.stderr, flush=True)
     specs = load_all_queries()
     specs["flagship"].builder(spark, "/root/testdata/sf0.001").write.mode(
         "overwrite"

@@ -17,7 +17,8 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import types as T
 
-from air_quality_data_pipeline_spark.tables import TABLE_NAMES, table
+from air_quality_data_pipeline_spark.streaming.jobs import read_events_stream
+from air_quality_data_pipeline_spark.tables import TABLE_NAMES, raw_schema, table
 
 from conftest import SF_SMALL
 
@@ -124,18 +125,18 @@ def test_fixture_schema_snapshot(name):
             )
 
 
-def test_events_loader_handles_legacy_long_nanos(spark, tmp_path):
-    """The old fixture vintage (BIGINT epoch-nanos under nanosAsLong — still
-    produced by scripts/make_sf1.py) must keep loading: synthesize a tiny
-    events.parquet with a long ts and assert the loader rebuilds the same
-    TIMESTAMP_NTZ values a native timestamp[us] file would give."""
+_MICROS = [1_704_500_000_000_000, 1_704_500_060_500_000]  # 2024-01-05-ish
+
+
+def _events_vintages():
+    """A tiny events table in the legacy long-nanos and the modern
+    timestamp[us] encodings of ts, with the same instants."""
     import pyarrow as pa
 
-    micros = [1_704_500_000_000_000, 1_704_500_060_500_000]  # 2024-01-05-ish
     legacy = pa.table(
         {
             "event_id": pa.array([1, 2], pa.int64()),
-            "ts": pa.array([m * 1000 for m in micros], pa.int64()),
+            "ts": pa.array([m * 1000 for m in _MICROS], pa.int64()),
             "user_id": pa.array([10, 11], pa.int64()),
             "event_type": pa.array(["view", "click"]),
             "value": pa.array([1.5, 2.5], pa.float64()),
@@ -143,8 +144,17 @@ def test_events_loader_handles_legacy_long_nanos(spark, tmp_path):
         }
     )
     modern = legacy.set_column(
-        1, "ts", pa.array(micros, pa.int64()).cast(pa.timestamp("us"))
+        1, "ts", pa.array(_MICROS, pa.int64()).cast(pa.timestamp("us"))
     )
+    return legacy, modern
+
+
+def test_events_loader_handles_legacy_long_nanos(spark, tmp_path):
+    """The old fixture vintage (BIGINT epoch-nanos under nanosAsLong — still
+    produced by scripts/make_sf1.py) must keep loading: synthesize a tiny
+    events.parquet with a long ts and assert the loader rebuilds the same
+    TIMESTAMP_NTZ values a native timestamp[us] file would give."""
+    legacy, modern = _events_vintages()
     d_legacy, d_modern = tmp_path / "legacy", tmp_path / "modern"
     for d, t in ((d_legacy, legacy), (d_modern, modern)):
         d.mkdir()
@@ -158,3 +168,65 @@ def test_events_loader_handles_legacy_long_nanos(spark, tmp_path):
         [r.ts for r in df_legacy.orderBy("event_id").collect()]
         == [r.ts for r in df_modern.orderBy("event_id").collect()]
     )
+
+
+# --- schema cache: tables.raw_schema -----------------------------------------
+
+
+def _jobs_run(spark, group, fn):
+    """Run fn under a fresh job group; return the number of Spark jobs."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("name", ["events", "lineitem"])
+def test_second_table_open_runs_no_job(spark, sf_dir, name):
+    table(spark, sf_dir, name)  # may infer
+    assert _jobs_run(spark, f"reopen_{name}", lambda: table(spark, sf_dir, name)) == 0
+
+
+def test_second_events_stream_open_runs_no_job(spark, sf_dir):
+    read_events_stream(spark, sf_dir)
+    assert _jobs_run(spark, "reopen_stream", lambda: read_events_stream(spark, sf_dir)) == 0
+
+
+def test_rewritten_file_is_inferred_again(spark, tmp_path):
+    """A file rewritten in place (modern -> legacy vintage) is a new cache
+    key: the loader must see the long-nanos dtype, not the cached one."""
+    legacy, modern = _events_vintages()
+    d = tmp_path / "rewrite"
+    d.mkdir()
+    pq.write_table(modern, d / "events.parquet")
+    ts_modern = [r.ts for r in table(spark, str(d), "events").orderBy("event_id").collect()]
+    pq.write_table(legacy, d / "events.parquet")
+    assert isinstance(raw_schema(spark, str(d), "events")["ts"].dataType, T.LongType)
+    ts = [r.ts for r in table(spark, str(d), "events").orderBy("event_id").collect()]
+    # a fresh read: the same bytes under a path the cache has never seen
+    fresh = tmp_path / "fresh"
+    fresh.mkdir()
+    pq.write_table(legacy, fresh / "events.parquet")
+    ts_fresh = [r.ts for r in table(spark, str(fresh), "events").orderBy("event_id").collect()]
+    assert ts == ts_fresh == ts_modern
+
+
+def test_schema_follows_inference_confs(spark, sf_dir):
+    """The conversion confs are part of the key: under each value of
+    inferTimestampNTZ the cached schema equals a bare inference."""
+    key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    before = spark.conf.get(key)
+    seen = {}
+    try:
+        for value in ("true", "false", "true"):
+            spark.conf.set(key, value)
+            bare = spark.read.parquet(f"{sf_dir}/orders.parquet").schema
+            seen[value] = raw_schema(spark, sf_dir, "orders")
+            assert seen[value] == bare
+    finally:
+        spark.conf.set(key, before)
+    assert seen["true"]["o_orderdate"].dataType == T.TimestampNTZType()
+    assert seen["false"]["o_orderdate"].dataType == T.TimestampType()

@@ -229,3 +229,13 @@ def test_register_refuses_confs_it_cannot_reset():
     with pytest.raises(ValueError, match="spark.sql.not_reset"):
         register("never_registered", confs={"spark.sql.not_reset": "1"})
     assert "never_registered" not in load_all_queries()
+
+
+def test_next_build_drops_memory_sink_views(spark, sf_dir):
+    """run_available_now's memory-sink view is query-scoped: the next
+    registered build drops it, and the already-built result stays readable."""
+    st = SPECS["st_ingest"].builder(spark, sf_dir)
+    assert any(t.name.startswith("st_ingest_") for t in spark.catalog.listTables())
+    SPECS["agg_stats"].builder(spark, sf_dir)
+    assert not [t.name for t in spark.catalog.listTables() if t.name.startswith("st_ingest_")]
+    assert st.count() > 0
