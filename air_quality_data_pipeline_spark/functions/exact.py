@@ -1,15 +1,39 @@
-"""Reproducible (order-independent) aggregation helpers.
+"""Reproducible (order-independent) money sums, bit-identical to DuckDB.
 
 Floating-point SUM is not associative, so a parallel engine's result depends
 on partitioning — unacceptable both for cross-engine verification and for
-run-to-run reproducibility of a 1000-executor job. We sum money-like doubles
-as DECIMAL(38,6) (exact, associative) and cast the total back to double:
-bit-identical regardless of partition count, in Spark and in the oracle.
+run-to-run reproducibility of a 1000-executor job. ``exact_sum`` therefore
+sums integers and touches floating point only per row and once per group:
 
-Averages are derived as exact-sum / count with a single double division —
-again deterministic. Columns known to hold integral values (e.g.
-``l_quantity``) sum exactly in double arithmetic already (integers < 2^53),
-so they need no decimal detour.
+- **Per row**, the double is quantized to 6 decimal places,
+  ``u = FLOOR(x * 1e6 + 0.5)`` as BIGINT: one IEEE multiply, one add and a
+  floor, identical in Spark and DuckDB. A row whose ``|x * 1e6 + 0.5|``
+  reaches 2^63, or that is NaN or ±Inf, raises in both engines (Spark's
+  ``floor(double)`` would saturate silently, so the Spark side guards it;
+  DuckDB's BIGINT cast raises on its own).
+- **Two limbs**, ``hi = u >> 20`` and ``lo = u & (2^20 - 1)``, are each
+  summed as BIGINT. Integer sums do not depend on order, and a BIGINT
+  overflow raises under ANSI (DuckDB's HUGEINT sum is cast back to BIGINT,
+  which raises at the same bound).
+- **Per group, once**, ``(DOUBLE(Σhi) * 2^20 + DOUBLE(Σlo)) / 1e6``. The
+  multiply by 2^20 is exact and the add and the divide are single IEEE-754
+  operations, so both engines agree bit for bit at any scale; there is no
+  int128/BigDecimal -> double conversion, whose last ulp differs between
+  the engines past 2^53.
+
+Bounds: ``Σlo`` is exact in a double below 2^53, i.e. up to 2^33 (8.6e9)
+rows per group; ``Σhi`` converts exactly while ``|Σu|`` stays below 2^73.
+While ``|Σu| < 2^53`` (totals under about 9e9) the combine is exact and the
+result is the correctly rounded decimal total.
+
+Why not DECIMAL: the previous kernel summed each row cast to a DECIMAL of
+precision 38 and scale 6. Precision 38 is above the 18 digits a long holds,
+so Spark keeps that aggregation buffer as bytes and allocates a BigDecimal
+per input row; the limb sums stay in primitive longs and run at the speed
+of a plain double SUM.
+
+Columns known to hold integral values (e.g. ``l_quantity``) sum exactly in
+double arithmetic already (integers < 2^53), so they need no quantization.
 """
 
 from __future__ import annotations
@@ -17,21 +41,37 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column
 
+_SCALE = 1e6  # 6 decimal places
+_LIMB_BITS = 20
+_LIMB = float(1 << _LIMB_BITS)
+_LO_MASK = (1 << _LIMB_BITS) - 1
+
+
+def _units(col: Column) -> Column:
+    """Per-row BIGINT micro-units; raises where DuckDB's BIGINT cast does."""
+    v = col * F.lit(_SCALE) + F.lit(0.5)
+    return (
+        F.when(F.abs(v) < F.lit(2.0**63), F.floor(v))
+        .when(
+            v.isNotNull(),
+            F.raise_error(
+                F.lit("exact_sum: value is NaN, Inf or |x * 1e6 + 0.5| >= 2^63")
+            ),
+        )
+    )
+
 
 def exact_sum(col: Column) -> Column:
     """Order-independent SUM of a double column, returned as double."""
-    return F.sum(col.cast("decimal(38,6)")).cast("double")
-
-
-def exact_avg(col: Column) -> Column:
-    """Order-independent AVG of a double column, returned as double."""
-    return F.sum(col.cast("decimal(38,6)")).cast("double") / F.count(col)
+    u = _units(col)
+    hi = F.sum(F.shiftright(u, _LIMB_BITS)).cast("double")
+    lo = F.sum(u.bitwiseAND(F.lit(_LO_MASK))).cast("double")
+    return (hi * F.lit(_LIMB) + lo) / F.lit(_SCALE)
 
 
 def exact_sum_sql(col: str) -> str:
-    """ANSI SQL fragment for the identical order-independent SUM."""
-    return f"CAST(SUM(CAST({col} AS DECIMAL(38,6))) AS DOUBLE)"
-
-
-def exact_avg_sql(col: str) -> str:
-    return f"(CAST(SUM(CAST({col} AS DECIMAL(38,6))) AS DOUBLE) / COUNT({col}))"
+    """DuckDB SQL fragment for the identical order-independent SUM."""
+    u = f"CAST(floor(({col}) * 1e6 + 5e-1) AS BIGINT)"
+    hi = f"CAST(CAST(SUM({u} >> {_LIMB_BITS}) AS BIGINT) AS DOUBLE)"
+    lo = f"CAST(CAST(SUM({u} & {_LO_MASK}) AS BIGINT) AS DOUBLE)"
+    return f"(({hi} * {_LIMB!r} + {lo}) / 1e6)"

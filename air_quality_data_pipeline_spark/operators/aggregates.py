@@ -5,7 +5,7 @@ The reference aggregates with Python sets and len() (main.py:162-167,
 aggregation before the shuffle, so at 100 TB the exchange carries one row
 per (partition, group), not per input row.
 
-Reproducibility: money sums go through DECIMAL(38,6) (functions/exact.py);
+Reproducibility: money sums go through functions/exact.py (BIGINT limbs);
 ``l_quantity`` is integral so plain double sums are already exact;
 set-valued results are canonicalized to sorted CSV strings.
 """
@@ -1709,7 +1709,7 @@ def agg_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ln(x) FLOOR-quantized to micro-units and 1/x to pico-units per ROW, so
 # both accumulations are order-free BIGINT sums (the agg_entropy recipe);
 # the closing exp/divisions see exact operands, ROUND(6) for the libm ulp.
-_GEOMEAN_ORACLE = """
+_GEOMEAN_ORACLE = f"""
 WITH t AS (
   SELECT l_returnflag,
          CAST(floor(ln(l_extendedprice) * 1000000.0) AS BIGINT) AS lg,
@@ -1724,8 +1724,7 @@ g AS (
 ),
 am AS (
   SELECT l_returnflag,
-         ROUND(CAST(SUM(CAST(l_extendedprice AS DECIMAL(38,6))) AS DOUBLE)
-               / COUNT(*), 6) AS arith_mean
+         ROUND({exact_sum_sql('l_extendedprice')} / COUNT(*), 6) AS arith_mean
   FROM lineitem GROUP BY l_returnflag
 )
 SELECT g.l_returnflag, g.n,
@@ -1769,10 +1768,9 @@ def agg_geomean(spark: SparkSession, sf_dir: str) -> DataFrame:
     return g.select(
         "l_returnflag",
         "n",
-        # ROUND(6): past 2^53 the exact decimal sum's double conversion can
-        # differ by one ulp between DuckDB's int128 path and Java's
-        # BigDecimal (the agg_weighted_avg sf1 finding) — first bites
-        # agg_geomean at sf10, caught by the session-4 sf10 replay.
+        # exact_sum is one IEEE combine of two BIGINT limb sums, so it is
+        # bit-identical in both engines at any scale, and the mean is one
+        # more division. ROUND(6) keeps the published precision.
         F.round(F.col("s_x") / F.col("n"), 6).alias("arith_mean"),
         F.round(F.exp(F.col("s_lg").cast("double") / (n_d * 1000000.0)), 6).alias(
             "geo_mean"

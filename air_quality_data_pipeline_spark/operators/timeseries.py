@@ -28,6 +28,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from ..functions.exact import exact_sum, exact_sum_sql
 from ..registry import register
 from ..session import scoped_persist
 from ..tables import table
@@ -4237,10 +4238,10 @@ def ts_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
 # integers (n_up, n_down, run count), so the only doubles are the final
 # mu/sigma/z expressions — one identical IEEE tree in both engines,
 # sigma nullif-guarded for degenerate one-sided series.
-_RUNS_TEST_ORACLE = """
+_RUNS_TEST_ORACLE = f"""
 WITH daily AS (
   SELECT event_type, CAST(ts AS DATE) AS day,
-         CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS v
+         {exact_sum_sql('value')} AS v
   FROM events GROUP BY 1, 2
 ),
 moves AS (
@@ -4281,15 +4282,15 @@ def ts_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit next to ts_autocorr's linear view.
 
     Scale shape: the corpus collapses map-side to (type, day) daily
-    cells (value summed exactly in DECIMAL); the sign/lag/run windows
-    ride the <= types x days cell table, and the final test is one
+    cells (value summed exactly by exact_sum); the sign/lag/run
+    windows ride the <= types x days cell table, and the final test is one
     4-integer row per type. The z expression is the same IEEE double
     tree in both engines over exact integer inputs, sigma
     nullif-guarded."""
     ev = table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.col("ts").cast("date").alias("day")
-    ).agg(F.sum(F.col("value").cast("decimal(38,6)")).cast("double").alias("v"))
+    ).agg(exact_sum(F.col("value")).alias("v"))
     w = Window.partitionBy("event_type").orderBy("day")
     moves = daily.select(
         "event_type",

@@ -15,7 +15,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..functions.exact import exact_sum
+from ..functions.exact import exact_sum, exact_sum_sql
 from ..registry import register
 from ..tables import table
 
@@ -23,10 +23,10 @@ from ..tables import table
 _TS_SEC = "timestampdiff(SECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', {col})"
 _TS_US = "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', {col})"
 
-_ST_TUMBLE_ORACLE = """
+_ST_TUMBLE_ORACLE = f"""
 SELECT (epoch_us(ts) // 86400000000) * 86400 AS win_start_sec,
        COUNT(*) AS cnt,
-       CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS sum_value
+       {exact_sum_sql('value')} AS sum_value
 FROM events
 GROUP BY win_start_sec
 """

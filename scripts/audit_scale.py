@@ -103,8 +103,9 @@ NARRATIVE = """
   (AQE coalesces the excess).
 - `spark.sql.adaptive.enabled` + skew-join: on — runtime re-planning from
   actual map output sizes replaces hand-tuned per-query partition counts.
-- `spark.sql.files.maxPartitionBytes`: 128 MB default keeps scan tasks
-  memory-bounded at any table size.
+- `spark.sql.files.maxPartitionBytes`: 16 MB (Spark's default is 128 MB),
+  so the one-file-per-table fixtures scan in parallel; splits stay
+  row-group aligned and scan tasks memory-bounded at any table size.
 """
 
 

@@ -3671,3 +3671,135 @@ def test_spearman_distributed_ranks_equal_single_window(spark, sf_dir):
             nn[r.flag] = nn.get(r.flag, 0) + r.c
         for f, n in nn.items():
             assert tot[f] == n * (n + 1), (key, f, tot[f], n * (n + 1))
+
+
+# --- exact_sum: the money-sum kernel's contract ------------------------------
+
+
+def _bits(rows) -> dict:
+    """{group: float.hex(sum)} so float results compare bit for bit."""
+    return {r.g: None if r.s is None else float.hex(r.s) for r in rows}
+
+
+def test_exact_sum_is_order_independent(spark):
+    """The same rows under one partition, seven partitions and reversed
+    row order give bit-identical sums — on data where a plain double sum
+    depends on the order (checked in Python first), with group totals
+    past 2^53 micro-units, where the final combine rounds."""
+    import random
+    import struct
+
+    from air_quality_data_pipeline_spark.functions.exact import exact_sum
+
+    rnd = random.Random(7)
+    rows = []
+    for i in range(4000):
+        mag = 10.0 ** rnd.randint(-6, 11)
+        x = round(rnd.uniform(-1.0, 1.0) * mag, rnd.randint(0, 9))
+        rows.append((i % 4, x))
+    xs = [x for _, x in rows]
+    assert struct.pack("d", sum(xs)) != struct.pack("d", sum(reversed(xs)))
+
+    def sums(df):
+        return _bits(df.groupBy("g").agg(exact_sum(F.col("x")).alias("s")).collect())
+
+    fwd = spark.createDataFrame(rows, "g int, x double").coalesce(1)
+    rev = spark.createDataFrame(rows[::-1], "g int, x double").coalesce(1)
+    one = sums(fwd.repartition(1))
+    assert len(one) == 4
+    assert sums(fwd.repartition(7)) == one
+    assert sums(rev) == one
+
+
+# (group, value) panel: negatives, exact half-units, sub-unit dust, values
+# near the 2^63 micro-unit guard (whose group total exceeds BIGINT in
+# micro-units, so only the limb split keeps it), NULLs, an all-NULL group,
+# and two billion-scale pairs on which the DECIMAL(38,6) kernel's
+# decimal -> double step differed between Spark and DuckDB by one ulp.
+_EXACT_SUM_PANEL = [
+    (0, 1.25), (0, -3.5), (0, 1234567.891234), (0, -0.000001),
+    (1, 2.5e-6), (1, -2.5e-6), (1, 2.5e-6), (1, 7.5e-6), (1, -7.5e-6),
+    (2, 1e-7), (2, 1e-7), (2, -1e-7), (2, 4e-7), (2, 5e-7),
+    (3, 9e12), (3, 9e12), (3, 8.999999999999e12), (3, 0.123457),
+    (4, -9e12), (4, -9e12), (4, 3.3),
+    (5, None), (5, 0.1), (5, 0.2),
+    (6, None), (6, None),
+    (7, 4149598564.908195), (7, 4903529679.89171),
+    (8, 2578137966.234), (8, 4436585897.880573),
+]
+
+
+def test_exact_sum_matches_duckdb_panel(spark):
+    """Spark exact_sum equals DuckDB exact_sum_sql bit for bit (through
+    oracle.compare_frames) on the adversarial panel, per group and over
+    an empty input."""
+    import duckdb
+    import pyarrow as pa
+
+    from air_quality_data_pipeline_spark.functions.exact import exact_sum, exact_sum_sql
+    from air_quality_data_pipeline_spark.oracle import compare_frames
+
+    sdf = spark.createDataFrame(_EXACT_SUM_PANEL, "g int, x double")
+    t = pa.table(
+        {
+            "g": pa.array([g for g, _ in _EXACT_SUM_PANEL], pa.int32()),
+            "x": pa.array([x for _, x in _EXACT_SUM_PANEL], pa.float64()),
+        }
+    )
+    con = duckdb.connect()
+    con.register("t", t)
+    try:
+        got = sdf.groupBy("g").agg(exact_sum(F.col("x")).alias("s")).toPandas()
+        want = con.sql(f"SELECT g, {exact_sum_sql('x')} AS s FROM t GROUP BY g").df()
+        assert compare_frames(got, want) == []
+        assert got["s"].isna().sum() == 1  # the all-NULL group
+
+        got = sdf.filter(F.lit(False)).agg(exact_sum(F.col("x")).alias("s")).toPandas()
+        want = con.sql(f"SELECT {exact_sum_sql('x')} AS s FROM t WHERE false").df()
+        assert compare_frames(got, want) == []
+        assert len(got) == 1 and got["s"].isna().all()
+    finally:
+        con.close()
+
+
+@pytest.mark.parametrize("x", [1e13, -1e13, float("nan"), float("inf"), float("-inf")])
+def test_exact_sum_out_of_range_raises(spark, x):
+    """A value past the 2^63 micro-unit guard, NaN or ±Inf raises in Spark
+    (where floor(double) would saturate silently) as it does in DuckDB."""
+    import duckdb
+
+    from air_quality_data_pipeline_spark.functions.exact import exact_sum, exact_sum_sql
+
+    df = spark.createDataFrame([(1.0,), (x,)], "x double")
+    with pytest.raises(Exception, match="exact_sum"):
+        df.agg(exact_sum(F.col("x"))).collect()
+    con = duckdb.connect()
+    try:
+        with pytest.raises(duckdb.ConversionException):
+            con.sql(
+                f"SELECT {exact_sum_sql('x')} FROM (VALUES (1.0::DOUBLE), (?)) v(x)",
+                params=[x],
+            ).fetchall()
+    finally:
+        con.close()
+
+
+def test_exact_sum_limb_overflow_raises(spark):
+    """A group whose high-limb BIGINT sum overflows raises in both engines
+    instead of wrapping: 1.1M rows of 9e12 put Σhi past 2^63."""
+    import duckdb
+
+    from air_quality_data_pipeline_spark.functions.exact import exact_sum, exact_sum_sql
+
+    n = 1_100_000
+    df = spark.range(n).select(F.lit(9e12).alias("x"))
+    with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW|overflow"):
+        df.agg(exact_sum(F.col("x"))).collect()
+    con = duckdb.connect()
+    try:
+        with pytest.raises(duckdb.ConversionException):
+            con.sql(
+                f"SELECT {exact_sum_sql('x')} FROM (SELECT 9e12 AS x FROM range({n}))"
+            ).fetchall()
+    finally:
+        con.close()
