@@ -6,5 +6,5 @@ UDF surface, reference main.py:60-97) all map to compositions of these.
 """
 
 from .geo import haversine_m  # noqa: F401
-from .hashing import poly_hash_long, token_hashes  # noqa: F401
+from .hashing import token_hashes  # noqa: F401
 from .vectors import cosine_similarity, dot_product, l2_norm  # noqa: F401

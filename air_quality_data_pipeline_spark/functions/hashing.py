@@ -6,9 +6,7 @@ md5 (present and bit-identical in both engines) folded to a bigint; shingle
 hashes compose token hashes with a polynomial ``h = (h*131 + t) mod
 1_000_003`` — exact integer math, identical in Spark and DuckDB, all
 Catalyst built-ins (md5/conv/transform) — no UDF, codegen-friendly, and
-embarrassingly parallel at 100 TB (per-row, no shuffle). A per-char
-polynomial variant (``poly_hash_*``) is kept for rolling-hash
-fingerprinting where md5 doesn't apply.
+embarrassingly parallel at 100 TB (per-row, no shuffle).
 
 MinHash uses the classic universal-hash family ``(a*h + b) mod P`` over the
 token hash, with fixed (a, b) pairs — again exact int64 math.
@@ -33,29 +31,6 @@ MINHASH_PARAMS = [
     (1299821, 882377),
     (1299827, 1020379),
 ]
-
-
-def poly_hash_spark_sql(col: str) -> str:
-    """Spark SQL fragment: polynomial hash of string expression ``col``."""
-    return (
-        f"aggregate(sequence(1, length({col})), 0L, "
-        f"(h, i) -> (h * {POLY_BASE} + ascii(substring({col}, i, 1))) % {POLY_MOD})"
-    )
-
-
-def poly_hash_long(s: Column | str) -> Column:
-    """Polynomial hash of a string column → bigint in [0, POLY_MOD)."""
-    name = s if isinstance(s, str) else s._jc.toString()  # noqa: SLF001
-    return F.expr(poly_hash_spark_sql(name))
-
-
-def poly_hash_duckdb(col: str) -> str:
-    """DuckDB SQL fragment computing the identical polynomial hash."""
-    return (
-        f"list_reduce(list_prepend(CAST(0 AS BIGINT), "
-        f"list_transform(range(1, length({col}) + 1), i -> CAST(ascii(substring({col}, i, 1)) AS BIGINT))), "
-        f"(h, c) -> (h * {POLY_BASE} + c) % {POLY_MOD})"
-    )
 
 
 def token_hashes_spark_sql(tokens_col: str) -> str:

@@ -4,6 +4,12 @@
 so dot products computed this way are bit-identical across engines after
 casting floats to double. No UDF, no shuffle: similarity math is per-row and
 scales linearly with the data.
+
+Higher-order-function folds run as an interpreted lambda per element
+(CodegenFallback). An unrolled 64-wide form with the same left-to-right
+addition order compiles to straight-line codegen, but its much larger
+expression tree lost where plans are built iteratively (llm_mmr_diversify
+0.37x), so the fold is the only form.
 """
 
 from __future__ import annotations
@@ -11,19 +17,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column
 
-# Fixture embedding width (TESTDATA.md). The fold helpers below carry an
-# unrolled fast path specialised to this width: higher-order-function
-# aggregates are CodegenFallback in Spark (interpreted lambda per element,
-# measured ~15 us per 64-dim pair in the round-10 llm_knn_graph study),
-# while an unrolled chain of binary ops compiles into straight-line
-# whole-stage codegen. ((0.0 + x1) + x2) + ... is the IDENTICAL left-to-right
-# IEEE addition sequence as the sequential fold, so values are bit-exact —
-# pinned by tests/test_round10_opt.py against the fold on the full fixture
-# and the degenerate-vector panel.
-_UNROLL_DIMS = 64
 
-
-def _fold_dot(a: Column, b: Column) -> Column:
+def dot_product(a: Column, b: Column) -> Column:
+    """Sequential-fold dot product of two array<float>/array<double> columns."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
@@ -31,57 +27,9 @@ def _fold_dot(a: Column, b: Column) -> Column:
     )
 
 
-def _fold_sqnorm(a: Column) -> Column:
-    return F.aggregate(a, F.lit(0.0), lambda s, x: s + x.cast("double") * x.cast("double"))
-
-
-def _unrolled_dot(a: Column, b: Column) -> Column:
-    # F.get is 0-based and never raises (vs element_at under ANSI); the
-    # size guard below keeps it in-bounds anyway.
-    s = F.lit(0.0)
-    for i in range(_UNROLL_DIMS):
-        s = s + F.get(a, i).cast("double") * F.get(b, i).cast("double")
-    return s
-
-
-def _unrolled_sqnorm(a: Column) -> Column:
-    s = F.lit(0.0)
-    for i in range(_UNROLL_DIMS):
-        x = F.get(a, i).cast("double")
-        s = s + x * x
-    return s
-
-
-def dot_product(a: Column, b: Column) -> Column:
-    """Sequential-fold dot product of two array<float>/array<double> columns."""
-    return _fold_dot(a, b)
-
-
 def l2_norm(a: Column) -> Column:
-    return F.sqrt(_fold_sqnorm(a))
-
-
-def dot_product_unrolled(a: Column, b: Column) -> Column:
-    """Unrolled 64-wide dot with fold fallback — bit-exact to dot_product.
-
-    Opt-in per call site: the straight-line codegen form wins on
-    scoring-bound map stages (measured 1.14-1.54x on llm_sim_search /
-    llm_ann_recall / llm_label_medoid at sf0.1) but LOSES where the plan
-    is built iteratively or the stage is already codegen-heavy (the ~50x
-    larger expression tree slows Column construction and can push a
-    generated method past the JVM codegen limits — llm_mmr_diversify
-    measured 0.37x with a global swap). Keep the fold the default; adopt
-    this only with an A/B on the specific operator (scripts/ab_vectors.py).
-    """
-    return F.when(
-        (F.size(a) == _UNROLL_DIMS) & (F.size(b) == _UNROLL_DIMS), _unrolled_dot(a, b)
-    ).otherwise(_fold_dot(a, b))
-
-
-def l2_norm_unrolled(a: Column) -> Column:
-    """Unrolled 64-wide l2 norm with fold fallback — bit-exact to l2_norm."""
     return F.sqrt(
-        F.when(F.size(a) == _UNROLL_DIMS, _unrolled_sqnorm(a)).otherwise(_fold_sqnorm(a))
+        F.aggregate(a, F.lit(0.0), lambda s, x: s + x.cast("double") * x.cast("double"))
     )
 
 
@@ -96,13 +44,6 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     for an undefined similarity."""
     denom = l2_norm(a) * l2_norm(b)
     return F.when(denom != 0.0, dot_product(a, b) / denom)
-
-
-def cosine_similarity_unrolled(a: Column, b: Column) -> Column:
-    """cosine_similarity on the unrolled fast path — same NULL guard,
-    bit-exact values; see dot_product_unrolled for when to use it."""
-    denom = l2_norm_unrolled(a) * l2_norm_unrolled(b)
-    return F.when(denom != 0.0, dot_product_unrolled(a, b) / denom)
 
 
 # DuckDB fragments computing the identical sequential folds over FLOAT[] lists.

@@ -257,10 +257,6 @@ def llm_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SIMHASH_BITS = 24  # token hashes are < 2^20·· (mod 1_000_003), 24 bits inspected
 
-_simhash_sum_cols_spark = ", ".join(
-    f"SUM(CASE WHEN (shiftright(h, {j}) & 1) = 1 THEN 1 ELSE -1 END) AS b{j}"
-    for j in range(_SIMHASH_BITS)
-)
 _simhash_sum_cols_duck = ", ".join(
     f"SUM(CASE WHEN ((h >> {j}) & 1) = 1 THEN 1 ELSE -1 END) AS b{j}"
     for j in range(_SIMHASH_BITS)

@@ -2705,7 +2705,6 @@ def ts_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # identical left-associative 3-term chain — no libm anywhere, flat
 # envelopes (max == min) pin NULL rather than 0/0.
 _STOCH_WIN = 14
-_STOCH_SMOOTH = 3
 
 _STOCH_ORACLE = f"""
 WITH daily AS (

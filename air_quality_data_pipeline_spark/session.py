@@ -117,23 +117,17 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # the driver fixtures store TIMESTAMP(NANOS) which Spark's parquet
-        # reader rejects; read as long and convert (tables.py).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # fixtures are one parquet file per table; 128 MB splits would scan
-        # them single-threaded. 16 MB keeps local[32] busy and is harmless on
-        # a real cluster (row-group-aligned splits, AQE re-coalesces shuffles).
-        .config("spark.sql.files.maxPartitionBytes", str(16 * 1024 * 1024))
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
     )
+    for key, value in _ENGINE_CONF.items():
+        if value is not None:
+            builder = builder.config(key, value)
     return builder.getOrCreate()
 
 

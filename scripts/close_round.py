@@ -13,16 +13,17 @@ Gates (BASELINE.md anchors):
   headline_17q_total_wall  <= 2 x 24.7 s  (r1 cold-protocol anchor)
   heavy_total_wall         <= 2 x  3.4 s  (r11 cold-protocol anchor)
   every query present, zero "errors" entries
-  driver-row freshness (VERDICT r9 item 5): every registered operator has a
-  CORRECTNESS_r*.json row, or sits in the current DRIVER_WINDOW (getting one
-  this round), or in an explicit deferral ledger — catches the
-  st_approx_distinct class (registered in r8, never sampled, unstaged)
-  automatically. Skip with --skip-freshness only to measure on a broken tree.
+  driver-row freshness (VERDICT r9 item 5): at most 50 registered
+  operators (one driver window) lack a passing CORRECTNESS_r*.json row, so
+  the derived driver order (registry.py) samples all of them next round.
+  Skip with --skip-freshness only to measure on a broken tree.
   long-tail sweep (VERDICT r10 item 8): a full-registry sweep_all run (or
   --sweep FILE to reuse one) is compared against the newest committed
-  SWEEP_r*.json — a >2x per-query regression past a 1 s floor, a vanished
-  query, or a sweep error refuses the seal; the slowest-15 table is printed
-  as the seal record. --skip-sweep skips it loudly.
+  SWEEP_r*.json — a >2x per-query regression past a 1 s floor, a query
+  still registered but missing from the sweep, or a sweep error refuses
+  the seal (a query no longer registered is reported as retired); the
+  slowest-15 table is printed as the seal record. --skip-sweep skips it
+  loudly.
 
 Exit 0 = sealed; exit 1 = DO NOT SEAL (fix or re-measure on an idle host —
 concurrent scaling studies inflate readings ~20%, BASELINE.md round-8 note).
@@ -36,6 +37,7 @@ import subprocess
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 HEADLINE_ANCHOR = 24.7  # sec, sf0.1 (BASELINE.md r1 median)
 # Re-anchored in round 11 (BASELINE.md): bench.py now evicts the graph
@@ -84,37 +86,29 @@ def check(parsed: dict) -> list[str]:
     return problems
 
 
-def check_driver_row_freshness(extra_names: tuple = ()) -> list[str]:
-    """Every registered operator must have driver evidence or a staged slot.
+def registered_names() -> list[str]:
+    from air_quality_data_pipeline_spark.registry import load_all_queries
 
-    A name is OK if it appears in ANY CORRECTNESS_r*.json (the driver saw
-    it at least once), in DRIVER_WINDOW (it gets a row this round), or in
-    a deferral ledger (explicitly staged for the next window). A name in
-    none of those is exactly how st_approx_distinct went two rounds
-    without evidence."""
-    import glob
+    return list(load_all_queries())
 
-    sampled: set[str] = set()
-    for f in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
-        try:
-            sampled |= set(json.load(open(f)))
-        except Exception:
-            pass  # a malformed round file must not mask missing names
-    sys.path.insert(0, REPO)
-    from air_quality_data_pipeline_spark.registry import (
-        DEFERRED_FIRST_ROW,
-        DRIVER_WINDOW,
-        ROUND12_RESAMPLE,
-        load_all_queries,
-    )
 
-    staged = set(DRIVER_WINDOW) | DEFERRED_FIRST_ROW | ROUND12_RESAMPLE
-    names = [*load_all_queries(), *extra_names]  # extras: test seam
-    orphans = sorted(n for n in names if n not in sampled | staged)
-    if orphans:
+DRIVER_SLOTS = 50  # the driver checks the first 50 entries of queries()
+
+
+def check_driver_row_freshness(extra_names: tuple = (), history_dir: str = REPO) -> list[str]:
+    """Refuse when more operators lack a passing driver row than one driver
+    window holds. The registry sorts those first, so up to DRIVER_SLOTS of
+    them all get a row next round; more is how st_approx_distinct went two
+    rounds without evidence."""
+    from air_quality_data_pipeline_spark.registry import driver_history
+
+    key = driver_history(history_dir)
+    names = [*registered_names(), *extra_names]  # extras: test seam
+    unpassed = sorted(n for n in names if key.get(n, 0) == 0)
+    if len(unpassed) > DRIVER_SLOTS:
         return [
-            f"{len(orphans)} operators have NO driver row and NO staged "
-            f"window slot: {orphans[:10]}{'...' if len(orphans) > 10 else ''}"
+            f"{len(unpassed)} operators have no passing driver row, more than the "
+            f"{DRIVER_SLOTS}-slot driver window: {unpassed[:10]}..."
         ]
     return []
 
@@ -179,12 +173,21 @@ def check_sweep(sweep_path: str | None) -> list[str]:
     ref = json.load(open(ref_path))
     ref_t: dict[str, float] = ref.get("timings", ref)
     problems = []
+    missing = [n for n in ref_t if n not in timings]
+    if missing:
+        registered = set(registered_names())
+        retired = [n for n in missing if n not in registered]
+        if retired:
+            print(f"sweep guard: retired (no longer registered): {retired}")
+        problems += [
+            f"sweep: {n} present in {os.path.basename(ref_path)} "
+            f"but missing from the current sweep"
+            for n in missing
+            if n in registered
+        ]
     for name, prev in ref_t.items():
         now = timings.get(name)
-        if now is None:
-            problems.append(f"sweep: {name} present in {os.path.basename(ref_path)} "
-                            f"but missing from the current sweep")
-        elif now > max(SWEEP_REGRESSION_FACTOR * prev, SWEEP_ABS_FLOOR_SEC):
+        if now is not None and now > max(SWEEP_REGRESSION_FACTOR * prev, SWEEP_ABS_FLOOR_SEC):
             problems.append(
                 f"sweep: {name} regressed {prev:.3f}s -> {now:.3f}s "
                 f"(>{SWEEP_REGRESSION_FACTOR}x vs {os.path.basename(ref_path)})"

@@ -60,6 +60,7 @@ def test_sweep_guard_flags_regressions_and_missing(tmp_path, monkeypatch):
     ref = {"timings": {"q_slow": 3.0, "q_fast": 0.2, "q_gone": 1.0}}
     (tmp_path / "SWEEP_r98.json").write_text(json.dumps(ref))
     monkeypatch.setattr(close_round, "REPO", str(tmp_path))
+    monkeypatch.setattr(close_round, "registered_names", lambda: list(ref["timings"]))
 
     cur = tmp_path / "sweep.json"
     # regressed + missing
@@ -75,6 +76,32 @@ def test_sweep_guard_flags_regressions_and_missing(tmp_path, monkeypatch):
     # sweep-side errors refuse the seal
     cur.write_text(json.dumps({"timings": {}, "errors": {"q_slow": "boom"}}))
     assert close_round.check_sweep(str(cur))
+
+
+def test_sweep_guard_passes_retired_query(tmp_path, monkeypatch, capsys):
+    """A reference name that is no longer registered is retired, not lost."""
+    import close_round
+
+    ref = {"timings": {"flagship": 1.0, "q_retired_from_registry": 1.0}}
+    (tmp_path / "SWEEP_r98.json").write_text(json.dumps(ref))
+    monkeypatch.setattr(close_round, "REPO", str(tmp_path))
+    cur = tmp_path / "sweep.json"
+    cur.write_text(json.dumps({"timings": {"flagship": 1.0}}))
+    assert close_round.check_sweep(str(cur)) == []
+    assert "retired" in capsys.readouterr().out
+
+
+def test_sweep_guard_refuses_registered_query_missing(tmp_path, monkeypatch):
+    """A reference name still in the registry must be in the current sweep."""
+    import close_round
+
+    ref = {"timings": {"flagship": 1.0, "agg_stats": 1.0}}
+    (tmp_path / "SWEEP_r98.json").write_text(json.dumps(ref))
+    monkeypatch.setattr(close_round, "REPO", str(tmp_path))
+    cur = tmp_path / "sweep.json"
+    cur.write_text(json.dumps({"timings": {"flagship": 1.0}}))
+    probs = close_round.check_sweep(str(cur))
+    assert len(probs) == 1 and "agg_stats" in probs[0]
 
 
 def test_sweep_guard_picks_newest_round_numerically(tmp_path, monkeypatch):

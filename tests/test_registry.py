@@ -1,138 +1,92 @@
-"""Registry-ordering contract: the driver's correctness pass reads only the
-first 50 ``queries()`` entries, so the rotation in DRIVER_PRIORITY must
-actually land at the front of the dict. Entries past the 50-slot fold only
-order the remainder of the registry (DRIVER_WINDOW is the real window)."""
+"""Registry contract. The driver's correctness pass reads only the first 50
+``queries()`` entries; ``load_all_queries`` derives that order from the
+driver's ``CORRECTNESS_r<N>.json`` history (see registry.py). The order tests
+plant history files in ``tmp_path``."""
+
+import json
+import os
+import re
+import sys
 
 import pytest
 
 from air_quality_data_pipeline_spark.operators.joins import join_runtime_filter
 from air_quality_data_pipeline_spark.registry import (
-    DEFERRED_FIRST_ROW,
-    DRIVER_PRIORITY,
-    DRIVER_WINDOW,
-    ROUND12_RESAMPLE,
+    QUERIES,
+    driver_history,
     load_all_queries,
     register,
 )
 
 SPECS = load_all_queries()
+NAMES = list(QUERIES)  # registration order
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(REPO, "scripts"))
+
+PASS = {"hash_match": True, "spark_rows": 5, "err": None}
+FAIL = {"hash_match": False, "spark_rows": 5, "err": None}
 
 
-def test_priority_names_all_registered():
-    missing = [n for n in DRIVER_PRIORITY if n not in SPECS]
-    assert not missing, f"DRIVER_PRIORITY names not in registry: {missing}"
+def _plant(tmp_path, round_no: int, rows: dict) -> str:
+    (tmp_path / f"CORRECTNESS_r{round_no:02d}.json").write_text(json.dumps(rows))
+    return str(tmp_path)
 
 
-def test_first_window_is_exactly_the_priority_list():
-    assert list(SPECS)[: len(DRIVER_PRIORITY)] == DRIVER_PRIORITY
+def _order(history_dir: str) -> list[str]:
+    return list(load_all_queries(history_dir))
 
 
-def test_priority_window_fits_driver_cap():
-    assert len(DRIVER_WINDOW) == 50
-    assert DRIVER_WINDOW == DRIVER_PRIORITY[:50]
+def test_never_sampled_name_sorts_first(tmp_path):
+    unsampled = NAMES[5]
+    d = _plant(tmp_path, 1, {n: PASS for n in NAMES if n != unsampled})
+    assert _order(d)[0] == unsampled
 
 
-def test_no_duplicate_priority_names():
-    assert len(set(DRIVER_PRIORITY)) == len(DRIVER_PRIORITY)
+def test_newest_failed_row_sorts_as_never_sampled(tmp_path):
+    failed, unsampled = NAMES[3], NAMES[7]
+    _plant(tmp_path, 1, {n: PASS for n in NAMES if n != unsampled})
+    d = _plant(tmp_path, 2, {failed: FAIL, NAMES[0]: PASS})
+    assert driver_history(d)[failed] == 0
+    # both key 0: registration order between them
+    assert _order(d)[:2] == [failed, unsampled]
 
 
-# Rows-only queries normally waste a window slot (the driver records only a
-# weaker rows-only check for them) — but llm_minhash_lsh is deliberately
-# spending one in round 5: it is the single registered query with no driver
-# row after four rounds of rotation, and a recorded rows-only check is the
-# strongest driver evidence its non-reproducible JVM hash family allows
-# (its value-level anchor is the pair-superset test in test_properties.py).
-ROWS_ONLY_WINDOW_ALLOWED = {
-    "llm_minhash_lsh",
-    # round 10: first-ever driver row for the streaming HLL++ sketch
-    # (VERDICT r8 item 2 / r9 item 1) — rows-only by design, value anchor
-    # is the within-5%-of-exact property test (test_properties.py)
-    "st_approx_distinct",
-    # new in round 5, never sampled; rows-only by design (Apache DataSketches
-    # HLL registers aren't DuckDB-reproducible) — its value-level anchor is
-    # the within-5%-of-exact assertion in test_properties.py, and the query
-    # itself carries the exact count for self-audit.
-    "agg_sketch_union",
-}
-
-
-def test_priority_window_is_oracle_checked():
-    rows_only = [
-        n
-        for n in DRIVER_WINDOW
-        if SPECS[n].oracle is None and n not in ROWS_ONLY_WINDOW_ALLOWED
-    ]
-    assert not rows_only, f"rows-only queries occupying window slots: {rows_only}"
-
-
-def test_priority_window_covers_unsampled_queries():
-    """The driver verifies only the first 50 registry entries, so every
-    oracle-checked query the driver has NEVER sampled (per the recorded
-    CORRECTNESS_r*.json files) must sit inside the 50-slot window — or be
-    in the explicit, documented DEFERRED_FIRST_ROW set (round 5 has 56
-    first-row candidates for 50 slots; the deferral must be a decision,
-    never an accident). Rows-only queries are exempt (they'd waste a slot
-    on a weaker check)."""
-    import glob
-    import json
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sampled: set[str] = set()
-    for path in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")):
-        try:
-            sampled |= set(json.load(open(path)))
-        except Exception:
-            pass
-    if not sampled:  # fresh checkout without driver artifacts
-        return
-    window = set(DRIVER_WINDOW)
-    missed = [
-        n
-        for n, spec in SPECS.items()
-        if spec.oracle is not None
-        and n not in sampled
-        and n not in window
-        and n not in DEFERRED_FIRST_ROW
-    ]
-    assert not missed, (
-        f"oracle-checked queries never driver-sampled AND outside the "
-        f"50-slot priority window (add to DEFERRED_FIRST_ROW only with "
-        f"justification): {sorted(missed)}"
+def test_no_oracle_row_with_rows_counts_as_pass(tmp_path):
+    rows_only, empty = NAMES[0], NAMES[1]
+    _plant(tmp_path, 1, {n: PASS for n in NAMES})
+    d = _plant(
+        tmp_path,
+        2,
+        {
+            rows_only: {"hash_match": None, "spark_rows": 600, "err": "no_oracle"},
+            empty: {"hash_match": None, "spark_rows": 0, "err": "no_oracle"},
+        },
     )
+    assert driver_history(d)[rows_only] == 2
+    assert driver_history(d)[empty] == 0
+    order = _order(d)
+    assert order[0] == empty and order[-1] == rows_only
 
 
-def test_deferred_set_is_minimal_and_real():
-    """Everything in DEFERRED_FIRST_ROW must actually be registered,
-    oracle-checked, and genuinely outside the window — a stale deferral
-    entry would silently excuse a future coverage gap."""
-    for n in DEFERRED_FIRST_ROW:
-        assert n in SPECS, f"deferred name not registered: {n}"
-        assert SPECS[n].oracle is not None, f"deferred name is rows-only: {n}"
-        assert n not in DRIVER_WINDOW, f"deferred name is inside the window: {n}"
+def test_ties_keep_registration_order(tmp_path):
+    _plant(tmp_path, 1, {n: PASS for n in NAMES})
+    assert _order(str(tmp_path)) == NAMES
+    # newer evidence for every other name moves it behind the rest
+    d = _plant(tmp_path, 3, {n: PASS for n in NAMES[::2]})
+    assert _order(d) == NAMES[1::2] + NAMES[::2]
 
 
-def test_next_round_resample_names_real():
-    """ROUND12_RESAMPLE entries must be registered and genuinely outside
-    the current window (otherwise they are already being sampled and the
-    bookkeeping is stale)."""
-    for n in ROUND12_RESAMPLE:
-        assert n in SPECS, f"resample name not registered: {n}"
-        assert n not in DRIVER_WINDOW, f"resample name is inside the window: {n}"
+def test_no_history_gives_registration_order(tmp_path):
+    assert _order(str(tmp_path)) == NAMES
 
 
-def test_next_window_budget_not_exceeded():
-    """VERDICT r8 item 3: per-round registry growth is capped at what the
-    NEXT driver window can clear. Every query owed a future driver row —
-    new operators (DEFERRED_FIRST_ROW), changed-code re-samples and the
-    deliberate rows-only slots (ROUND12_RESAMPLE) — must fit in 50 slots,
-    so adding an operator without window headroom fails the suite in the
-    same commit."""
-    owed = len(DEFERRED_FIRST_ROW | ROUND12_RESAMPLE)
-    assert owed <= 50, (
-        f"{owed} queries owed a driver row exceed the 50-slot next-round "
-        f"window; stop adding operators or rotate first"
-    )
+def test_committed_history_orders_by_key():
+    """The default history is the repository's own CORRECTNESS files."""
+    key = driver_history()
+    keys = [key.get(n, 0) for n in SPECS]
+    assert keys == sorted(keys)
+    assert list(SPECS) == sorted(NAMES, key=lambda n: key.get(n, 0))
 
 
 def test_survey_section2_matches_registry():
@@ -141,11 +95,7 @@ def test_survey_section2_matches_registry():
     drift. Every registry key must appear in the §2 inventory text, and
     every §2 table-row ID must be a registered query (round-6 lesson:
     five operators shipped §2-absent)."""
-    import os
-    import re
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    text = open(os.path.join(repo, "SURVEY.md")).read()
+    text = open(os.path.join(REPO, "SURVEY.md")).read()
     start = text.index("## 2. Operator inventory")
     end = text.index("\n## 3")
     sec2 = text[start:end]
@@ -165,24 +115,18 @@ def test_survey_section2_matches_registry():
     assert not ghost_rows, f"SURVEY §2 table rows with no registered query: {ghost_rows}"
 
 
-def test_close_round_freshness_gate():
-    """VERDICT r9 item 5: the round-close seal refuses when a registered
-    operator has neither a CORRECTNESS row nor a staged window slot —
-    the exact hole st_approx_distinct fell through in rounds 8-9. The
-    current tree must be clean, and an unstaged unsampled name must be
-    flagged (proving the gate would have caught it)."""
-    import os
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, os.path.join(repo, "scripts"))
+def test_close_round_freshness_gate(tmp_path):
+    """The round-close seal refuses when more registered operators lack a
+    passing driver row than one 50-slot window can sample."""
     import close_round
 
     assert close_round.check_driver_row_freshness() == []
+    d = _plant(tmp_path, 1, {n: PASS for n in NAMES[50:]})
+    assert close_round.check_driver_row_freshness(history_dir=d) == []
     flagged = close_round.check_driver_row_freshness(
-        extra_names=("st_approx_distinct_like_orphan",)
+        extra_names=("st_approx_distinct_like_orphan",), history_dir=d
     )
-    assert flagged and "st_approx_distinct_like_orphan" in flagged[0]
+    assert flagged and "51 operators" in flagged[0]
 
 
 # --- per-query session conf lifecycle (register() owns it) -------------------
