@@ -13,7 +13,7 @@ set-valued results are canonicalized to sorted CSV strings.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from ..functions.exact import exact_sum, exact_sum_sql
 from ..registry import register
@@ -176,14 +176,33 @@ GROUP BY ROLLUP(l_returnflag, l_linestatus)
 """
 
 
+def _flag_status_partials(spark: SparkSession, sf_dir: str, qty: Column) -> DataFrame:
+    """lineitem aggregated on the finest grouping set of the CUBE / ROLLUP
+    builders below: one row per (l_returnflag, l_linestatus) with its row
+    count ``n`` and partial quantity sum ``q``.
+
+    Those builders re-aggregate this with SUM(n) and SUM(q), so their
+    Expand fans out one row per key pair, not one per lineitem row (x4
+    for a two-column CUBE, before any aggregation). The two levels are
+    exact: counts add as integers, DECIMAL sums add exactly, and
+    ``l_quantity`` holds integers below 2^53, so its double sums are exact
+    in any order (Spark already splits them across tasks)."""
+    return (
+        table(spark, sf_dir, "lineitem")
+        .groupBy("l_returnflag", "l_linestatus")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum(qty).alias("q"))
+    )
+
+
 @register("agg_rollup", oracle=_AGG_ROLLUP_ORACLE, tags=("agg",))
 def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROLLUP hierarchical aggregate with grouping-id disambiguation."""
-    li = table(spark, sf_dir, "lineitem")
-    return li.rollup("l_returnflag", "l_linestatus").agg(
+    """ROLLUP hierarchical aggregate with grouping-id disambiguation,
+    over the per-key partials of ``_flag_status_partials``."""
+    pre = _flag_status_partials(spark, sf_dir, F.col("l_quantity"))
+    return pre.rollup("l_returnflag", "l_linestatus").agg(
         F.grouping_id().alias("gid"),
-        F.count(F.lit(1)).alias("cnt"),
-        F.sum("l_quantity").alias("sum_qty"),
+        F.sum("n").alias("cnt"),
+        F.sum("q").alias("sum_qty"),
     )
 
 
@@ -198,12 +217,13 @@ GROUP BY CUBE(l_returnflag, l_linestatus)
 
 @register("agg_cube", oracle=_AGG_CUBE_ORACLE, tags=("agg",))
 def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE aggregate over all grouping-set combinations."""
-    li = table(spark, sf_dir, "lineitem")
-    return li.cube("l_returnflag", "l_linestatus").agg(
+    """CUBE aggregate over all grouping-set combinations, over the per-key
+    partials of ``_flag_status_partials``."""
+    pre = _flag_status_partials(spark, sf_dir, F.col("l_quantity"))
+    return pre.cube("l_returnflag", "l_linestatus").agg(
         F.grouping_id().alias("gid"),
-        F.count(F.lit(1)).alias("cnt"),
-        F.sum("l_quantity").alias("sum_qty"),
+        F.sum("n").alias("cnt"),
+        F.sum("q").alias("sum_qty"),
     )
 
 
@@ -712,19 +732,24 @@ def agg_grouping_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates over col), and any report/BI layer on top of agg_cube needs
     it. The level column is the standard bit-packed grouping id
     (2·g_flag + g_status), computed identically in both engines from the
-    per-column bits. Same single Expand + hash-aggregate plan as agg_cube
-    — GROUPING() reads the expand-generated bitmask for free, no extra
-    pass."""
-    li = table(spark, sf_dir, "lineitem")
+    per-column bits.
+
+    Two-level plan, like agg_cube: lineitem is first aggregated on the
+    finest grouping set (one DECIMAL partial sum per key pair), then the
+    Expand + hash aggregate run over those few rows, and GROUPING() reads
+    the Expand's bitmask as before. Exact because DECIMAL sums add
+    exactly; a NULL key value stays its own group in the first level, so
+    GROUPING() still tells it from a subtotal."""
+    pre = _flag_status_partials(spark, sf_dir, F.col("l_quantity").cast("decimal(20,4)"))
     return (
-        li.cube("l_returnflag", "l_linestatus").agg(
+        pre.cube("l_returnflag", "l_linestatus").agg(
             F.grouping("l_returnflag").cast("int").alias("g_flag"),
             F.grouping("l_linestatus").cast("int").alias("g_status"),
             (
                 2 * F.grouping("l_returnflag").cast("bigint")
                 + F.grouping("l_linestatus").cast("bigint")
             ).alias("grouping_level"),
-            F.sum(F.col("l_quantity").cast("decimal(20,4)")).cast("double").alias("sum_qty"),
+            F.sum("q").cast("double").alias("sum_qty"),
         )
     ).select(
         "l_returnflag", "l_linestatus", "g_flag", "g_status", "grouping_level", "sum_qty"

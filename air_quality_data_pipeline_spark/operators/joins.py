@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..functions.exact import exact_sum, exact_sum_sql
 from ..registry import register
+from ..session import scoped_table, scoped_tempdir
 from ..tables import rebalance_for_map, table
 
 _BUCKET_COUNTER = itertools.count()
@@ -225,11 +226,10 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffling two fact tables per join and shuffling them once at write
     time for every future join; the groupBy on the same key also reuses
     the bucketing."""
-    import tempfile
-
-    base = tempfile.mkdtemp(prefix="bucketed_")
+    base = scoped_tempdir("bucketed_")
     n = next(_BUCKET_COUNTER)
-    ot, ct = f"orders_b_{os.getpid()}_{n}", f"customer_b_{os.getpid()}_{n}"
+    ot = scoped_table(spark, f"orders_b_{os.getpid()}_{n}")
+    ct = scoped_table(spark, f"customer_b_{os.getpid()}_{n}")
     orders = table(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
     cust = table(spark, sf_dir, "customer").select("c_custkey", "c_name")
     (orders.write.mode("overwrite").option("path", f"{base}/{ot}")

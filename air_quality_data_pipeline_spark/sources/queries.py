@@ -8,19 +8,20 @@ partitions are the pages (parallel fetch instead of a sequential loop),
 from_json ingestion, and CSV/Parquet writers — on a cluster the "upload" is
 just writing to the object store URI, no separate copy step.
 
-Sink queries write to a fresh temp dir and return the read-back DataFrame,
-so the full write→read round trip is what gets oracle-checked.
+Sink queries write to a fresh query-scoped temp dir (``scoped_tempdir``:
+removed when the next registered query is built) and return the read-back
+DataFrame, read with the written frame's schema (no inference job), so the
+full write→read round trip is what gets oracle-checked.
 """
 
 from __future__ import annotations
-
-import tempfile
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.exact import exact_sum, exact_sum_sql
 from ..registry import register
+from ..session import scoped_persist, scoped_tempdir
 from ..tables import table
 
 _SRC_PARQUET_ORACLE = """
@@ -265,7 +266,7 @@ def snk_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.date_format(F.max("o_orderdate"), "yyyyMMdd_HHmmss").alias("s"))
         .first()
     )
-    out = tempfile.mkdtemp(prefix="snk_csv_") + f"/openaq_data_{stamp_row['s']}"
+    out = scoped_tempdir("snk_csv_") + f"/openaq_data_{stamp_row['s']}"
     df.coalesce(1).write.mode("overwrite").option("header", True).option(
         "encoding", "utf-8"
     ).csv(out)
@@ -299,9 +300,10 @@ def snk_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partitioned parquet sink + read-back — the engine-native format
     (SURVEY §2.A snk_parquet). partitionBy(region) demonstrates the layout
     that enables partition pruning on subsequent scans."""
-    out = tempfile.mkdtemp(prefix="snk_parquet_")
-    _region_revenue(spark, sf_dir).write.mode("overwrite").partitionBy("region").parquet(out)
-    return spark.read.parquet(out).select("region", "order_cnt", "revenue")
+    out = scoped_tempdir("snk_parquet_")
+    df = _region_revenue(spark, sf_dir)
+    df.write.mode("overwrite").partitionBy("region").parquet(out)
+    return spark.read.schema(df.schema).parquet(out).select("region", "order_cnt", "revenue")
 
 
 @register("snk_object_store", oracle=_SNK_BASE_SQL, tags=("sink",))
@@ -312,10 +314,10 @@ def snk_object_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     Locally the same code targets a filesystem path; the key layout
     (prefix + date partition) is what an object store sees. The partition
     value derives from the data (not wall-clock) so runs are deterministic."""
-    out = tempfile.mkdtemp(prefix="snk_object_store_") + "/airquality"
+    out = scoped_tempdir("snk_object_store_") + "/airquality"
     df = _region_revenue(spark, sf_dir).withColumn("dt", F.lit("19980802"))
     df.write.mode("overwrite").partitionBy("dt").parquet(out)
-    return spark.read.parquet(out).select("region", "order_cnt", "revenue")
+    return spark.read.schema(df.schema).parquet(out).select("region", "order_cnt", "revenue")
 
 
 _SRC_PARTITIONED_ORACLE = """
@@ -330,7 +332,7 @@ def src_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate. The filter becomes a PartitionFilter — directories for other
     event types are never opened (asserted in tests/test_plans.py). At
     100 TB partition pruning is the first and cheapest 10-100x."""
-    out = tempfile.mkdtemp(prefix="src_partitioned_")
+    out = scoped_tempdir("src_partitioned_")
     ev = table(spark, sf_dir, "events").select("event_id", "user_id", "value", "event_type")
     ev.write.mode("overwrite").partitionBy("event_type").parquet(out)
     return (
@@ -354,7 +356,7 @@ def src_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles must survive text formatting bit-exactly. CSV is a row format —
     no column pruning or predicate pushdown — so at scale it is an
     ingest-once format, converted to parquet on first touch (src_parquet)."""
-    out = tempfile.mkdtemp(prefix="src_csv_")
+    out = scoped_tempdir("src_csv_")
     cust = table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_acctbal", "c_mktsegment"
     )
@@ -378,7 +380,7 @@ def src_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
     compares post-round-trip text length against the original, so JSON
     escaping must preserve every character. Like CSV, JSONL is row-major
     ingest-only at scale: first touch converts to parquet."""
-    out = tempfile.mkdtemp(prefix="src_jsonl_")
+    out = scoped_tempdir("src_jsonl_")
     docs = table(spark, sf_dir, "documents")
     docs.select(
         F.to_json(F.struct("doc_id", "text", "lang", "source")).alias("line")
@@ -403,9 +405,12 @@ def src_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet (stripe/row-group statistics drive predicate skipping); the
     write→read round trip must preserve int/double/varchar exactly. At
     scale ORC vs parquet is an ecosystem choice, not a capability gap."""
-    out = tempfile.mkdtemp(prefix="src_orc_")
-    table(spark, sf_dir, "supplier").write.mode("overwrite").orc(out)
-    return spark.read.orc(out).select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
+    out = scoped_tempdir("src_orc_")
+    sup = table(spark, sf_dir, "supplier")
+    sup.write.mode("overwrite").orc(out)
+    return spark.read.schema(sup.schema).orc(out).select(
+        "s_suppkey", "s_name", "s_nationkey", "s_acctbal"
+    )
 
 
 _SNK_PART_OVERWRITE_ORACLE = """
@@ -427,7 +432,7 @@ def snk_part_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-run of one day/one source without rewriting (or locking) the rest;
     static overwrite mode would truncate the whole table. Read-back of the
     merged table is what gets oracle-checked."""
-    out = tempfile.mkdtemp(prefix="snk_part_overwrite_")
+    out = scoped_tempdir("snk_part_overwrite_")
     ev = table(spark, sf_dir, "events").select("event_id", "user_id", "value", "event_type")
     ev.write.mode("overwrite").partitionBy("event_type").parquet(out)
     # scope the dynamic-overwrite conf to this one write so no session-level
@@ -444,7 +449,9 @@ def snk_part_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
         else:
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    return spark.read.parquet(out).select("event_id", "user_id", "event_type", "value")
+    return spark.read.schema(ev.schema).parquet(out).select(
+        "event_id", "user_id", "event_type", "value"
+    )
 
 
 _SNK_SORTED_SKIP_ORACLE = """
@@ -470,14 +477,14 @@ def snk_sorted_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
     years. repartitionByRange keys the exchange on the sort column itself
     so file count stays bounded (one writer task per band, no tiny-file
     explosion)."""
-    out = tempfile.mkdtemp(prefix="snk_sorted_skip_")
+    out = scoped_tempdir("snk_sorted_skip_")
     li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_shipdate", "l_quantity", "l_extendedprice"
     )
     li.repartitionByRange(16, "l_shipdate").sortWithinPartitions(
         "l_shipdate"
     ).write.mode("overwrite").parquet(out)
-    return spark.read.parquet(out).filter(
+    return spark.read.schema(li.schema).parquet(out).filter(
         (F.col("l_shipdate") >= F.lit("1996-03-01").cast("date"))
         & (F.col("l_shipdate") < F.lit("1996-04-01").cast("date"))
     )
@@ -507,7 +514,7 @@ def src_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     still prunes to exactly the requested columns per file. Default reads
     skip the footer union (first-file schema) — the option is per-scan, so
     only evolving tables pay the merge cost."""
-    out = tempfile.mkdtemp(prefix="src_schema_evo_")
+    out = scoped_tempdir("src_schema_evo_")
     orders = table(spark, sf_dir, "orders")
     old = orders.filter(F.col("o_orderdate") < "1996-01-01").select(
         "o_orderkey", "o_totalprice"
@@ -549,12 +556,12 @@ def join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     the two pruning regimes that make a 100 TB star-join read 1% of its
     partitions. The dim here derives from the fixture (distinct types
     passing the filter) so the oracle is pure SQL."""
-    out = tempfile.mkdtemp(prefix="join_dpp_")
+    out = scoped_tempdir("join_dpp_")
     ev = table(spark, sf_dir, "events").select(
         "event_id", "user_id", "value", "event_type"
     )
     ev.write.mode("overwrite").partitionBy("event_type").parquet(out)
-    fact = spark.read.parquet(out)
+    fact = spark.read.schema(ev.schema).parquet(out)
     dim = (
         table(spark, sf_dir, "events")
         .filter(F.col("event_type").startswith("p"))
@@ -592,14 +599,15 @@ def snk_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     (snk_sorted_skip's property, acquired as a side effect). The read-back
     proves the compaction is content-preserving — which is what makes it
     safe to run online."""
-    base = tempfile.mkdtemp(prefix="snk_compact_")
+    base = scoped_tempdir("snk_compact_")
     frag, compact = base + "/frag", base + "/compact"
     orders = table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderkey", "o_totalprice"
     )
     orders.repartition(64).write.mode("overwrite").parquet(frag)
     (
-        spark.read.parquet(frag)
+        spark.read.schema(orders.schema)
+        .parquet(frag)
         .repartitionByRange(4, "o_custkey")
         .sortWithinPartitions("o_custkey", "o_orderkey")
         .write.mode("overwrite")
@@ -607,7 +615,7 @@ def snk_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # expose the two directories so tests can assert the file-count collapse
     snk_compact.last_paths = (frag, compact)
-    return spark.read.parquet(compact)
+    return spark.read.schema(orders.schema).parquet(compact)
 
 
 # --- snk_zorder: two-dimension Morton clustering for multi-column skipping ---
@@ -647,7 +655,7 @@ def snk_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     within-file sort, and is dropped before the write. The oracle checks
     the full round trip: clustered write, read back, both-dimension
     predicate — content must equal a direct filter of the source."""
-    out = tempfile.mkdtemp(prefix="snk_zorder_")
+    out = scoped_tempdir("snk_zorder_")
     li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_partkey", "l_shipdate", "l_extendedprice"
     )
@@ -664,7 +672,7 @@ def snk_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(out)
     )
-    return spark.read.parquet(out).filter(
+    return spark.read.schema(li.schema).parquet(out).filter(
         (F.col("l_shipdate") >= F.lit("1996-07-01").cast("date"))
         & (F.col("l_shipdate") < F.lit("1996-08-01").cast("date"))
         & F.col("l_partkey").between(100, 299)
@@ -705,7 +713,7 @@ def src_corrupt_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     auditable version of that posture. Caveat encoded here: counting
     corrupt rows requires materializing the corrupt column through a
     cache/filter (Spark lazily prunes _corrupt_record otherwise)."""
-    out = tempfile.mkdtemp(prefix="src_corrupt_")
+    out = scoped_tempdir("src_corrupt_")
     orders = table(spark, sf_dir, "orders")
     (
         orders.filter(F.col("o_orderkey") < 100)
@@ -718,8 +726,6 @@ def src_corrupt_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
         fh.write("1,2.0,unexpected,extra\n")
         fh.write("this is not a csv line at all\n")
         fh.write("12,not_a_number\n")
-    from ..session import scoped_persist
-
     # The documented corrupt-record caveat, demonstrated the right way:
     # with CSV column pruning (default on), an aggregate that references
     # only a subset of columns lets the parser skip conversions, so type
@@ -772,7 +778,7 @@ def src_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingest job publishes. binaryFile never splits a file, so parallelism
     is one task per blob — exactly right for media; pathGlobFilter skips
     _SUCCESS markers at the listing, before any bytes are read."""
-    out = tempfile.mkdtemp(prefix="src_binary_files_")
+    out = scoped_tempdir("src_binary_files_")
     docs = table(spark, sf_dir, "documents").filter(
         F.col("doc_id") < _SRC_BINARY_FILES_N
     )
@@ -811,7 +817,7 @@ def src_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
     src_csv contract, through a different serializer). Like CSV/JSONL,
     XML is row-major ingest-only at scale: first touch converts to
     parquet."""
-    out = tempfile.mkdtemp(prefix="src_xml_") + "/supplier_xml"
+    out = scoped_tempdir("src_xml_") + "/supplier_xml"
     sup = table(spark, sf_dir, "supplier")
     sup.write.mode("overwrite").format("xml").option("rootTag", "suppliers").option(
         "rowTag", "supplier"
@@ -868,9 +874,9 @@ def snk_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
             f" % {_MANIFEST_SHARDS}"
         ).alias("shard"),
     )
-    out = tempfile.mkdtemp(prefix="snk_manifest_")
+    out = scoped_tempdir("snk_manifest_")
     docs.write.mode("overwrite").partitionBy("shard").parquet(out)
-    back = spark.read.parquet(out)
+    back = spark.read.schema(docs.schema).parquet(out)
     return back.groupBy("shard").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_chars").cast("bigint").alias("total_chars"),

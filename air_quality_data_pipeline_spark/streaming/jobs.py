@@ -18,14 +18,13 @@ from __future__ import annotations
 
 import itertools
 import os
-import tempfile
 
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
-from ..session import scoped_view
+from ..session import scoped_tempdir, scoped_view
 from ..tables import _NS_TO_TS_NTZ, raw_schema, table
 
 _COUNTER = itertools.count()
@@ -70,7 +69,7 @@ def run_available_now(sdf: DataFrame, output_mode: str, query_name_prefix: str) 
         sdf.writeStream.format("memory")
         .queryName(name)
         .outputMode(output_mode)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix=f"ckpt_{name}_"))
+        .option("checkpointLocation", scoped_tempdir(f"ckpt_{name}_"))
         .trigger(availableNow=True)
         .start()
     )
@@ -154,7 +153,7 @@ def st_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle replicates the SEMANTICS — watermark = max event time − 1 h
     applied with Spark's one-batch filter lag, drop iff window end ≤
     watermark, emit iff window end ≤ final watermark — not the timing."""
-    d = tempfile.mkdtemp(prefix="st_watermark_fix_")
+    d = scoped_tempdir("st_watermark_fix_")
     batches = [("a", _WM_BATCH_A, 1_700_000_000), ("m", _WM_BATCH_M, 1_700_005_000),
                ("b", _WM_BATCH_B, 1_700_009_999)]
     for name, rows, mtime in batches:
@@ -210,14 +209,14 @@ def st_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     upload, main.py:283-303): filtered stream → parquet sink → read back.
     Exactly-once file semantics make the read-back oracle-checkable."""
     sdf = read_events_stream(spark, sf_dir)
-    out_dir = tempfile.mkdtemp(prefix="st_sink_out_")
+    out_dir = scoped_tempdir("st_sink_out_")
     purchases = sdf.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "event_type"
     )
     q = (
         purchases.writeStream.format("parquet")
         .option("path", out_dir)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="st_sink_ckpt_"))
+        .option("checkpointLocation", scoped_tempdir("st_sink_ckpt_"))
         .outputMode("append")
         .trigger(availableNow=True)
         .start()
@@ -343,7 +342,7 @@ def st_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     an aggregate-and-overwrite into parquet, the pattern used for upserts
     into warehouses that lack a streaming writer. Complete mode makes the
     final file state equal the batch aggregate → oracle-checkable."""
-    out_dir = tempfile.mkdtemp(prefix="st_feb_out_")
+    out_dir = scoped_tempdir("st_feb_out_")
     sdf = read_events_stream(spark, sf_dir)
     agg = (
         sdf.filter(F.col("event_type") == "purchase")
@@ -360,12 +359,12 @@ def st_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = (
         agg.writeStream.foreachBatch(upsert)
         .outputMode("complete")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="st_feb_ckpt_"))
+        .option("checkpointLocation", scoped_tempdir("st_feb_ckpt_"))
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
-    return spark.read.parquet(out_dir)
+    return spark.read.schema(agg.schema).parquet(out_dir)
 
 
 # --- st_incr_resume: checkpoint-resume incremental processing ---------------
@@ -388,7 +387,7 @@ def st_incr_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     table. At 100 TB/day this is THE ingestion pattern: per-run cost is
     proportional to new data, restarts are safe at any point, and the
     file-log lookup is O(new files), not O(directory)."""
-    base = tempfile.mkdtemp(prefix="st_incr_resume_")
+    base = scoped_tempdir("st_incr_resume_")
     src, ckpt, out = base + "/src", base + "/ckpt", base + "/out"
     os.makedirs(src)
     ev = table(spark, sf_dir, "events").select(
@@ -415,7 +414,7 @@ def st_incr_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     # arrival 2: the rest lands later; the resumed run must process ONLY it
     ev.filter(F.col("event_id") % 3 == 2).write.mode("append").parquet(src)
     _run_once()
-    return spark.read.parquet(out)
+    return spark.read.schema(schema).parquet(out)
 
 
 # --- st_static_join: stream-static dimension enrichment ----------------------

@@ -106,6 +106,13 @@ NARRATIVE = """
 - `spark.sql.files.maxPartitionBytes`: 16 MB (Spark's default is 128 MB),
   so the one-file-per-table fixtures scan in parallel; splits stay
   row-group aligned and scan tasks memory-bounded at any table size.
+- `spark.sql.files.openCostInBytes`: 1 MB (Spark's default is 4 MB).
+  Spark sizes a split as min(maxPartitionBytes, max(openCostInBytes,
+  bytes / cores)), so the open cost is a floor on split size: at 4 MB a
+  5 MB single-file table scans in 2 splits on any core count. At 1 MB a
+  file of a few MB spreads over the cores, a file under 1 MB still scans
+  as one split, and at cluster scale (bytes / cores far above 1 MB) the
+  floor never binds.
 """
 
 

@@ -87,6 +87,22 @@ def test_relational_core_has_no_cartesian(spark, sf_dir, name):
     assert "CartesianProduct" not in plan, f"{name} plans a cartesian product"
 
 
+@pytest.mark.parametrize(
+    "name", ["agg_cube", "agg_rollup", "agg_grouping_id", "agg_grouping_sets"]
+)
+def test_grouping_sets_expand_aggregated_keys(spark, sf_dir, name):
+    # the Expand's child is the final aggregate on (l_returnflag,
+    # l_linestatus), so the Expand reads one row per key pair, not one per
+    # lineitem row
+    lines = _executed_plan(spark, name, sf_dir).splitlines()
+    at = [i for i, line in enumerate(lines) if "Expand [" in line]
+    assert len(at) == 1, f"{name}: expected one Expand:\n" + "\n".join(lines)
+    child = lines[at[0] + 1]
+    assert "HashAggregate(keys=[l_returnflag" in child and "partial_" not in child, (
+        f"{name}: Expand must read the per-key aggregate, got:\n{child}"
+    )
+
+
 def test_partitioned_scan_prunes_partitions(spark, sf_dir):
     fmt = _formatted(spark, "src_partitioned", sf_dir)
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", fmt)

@@ -5,9 +5,15 @@ plant history files in ``tmp_path``."""
 
 import json
 import os
+import pathlib
 import re
 import sys
+import urllib.parse
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pyspark.sql.functions as F
 import pytest
 
 from air_quality_data_pipeline_spark.operators.joins import join_runtime_filter
@@ -17,6 +23,7 @@ from air_quality_data_pipeline_spark.registry import (
     load_all_queries,
     register,
 )
+from air_quality_data_pipeline_spark.session import apply_engine_conf
 
 SPECS = load_all_queries()
 NAMES = list(QUERIES)  # registration order
@@ -183,3 +190,57 @@ def test_next_build_drops_memory_sink_views(spark, sf_dir):
     SPECS["agg_stats"].builder(spark, sf_dir)
     assert not [t.name for t in spark.catalog.listTables() if t.name.startswith("st_ingest_")]
     assert st.count() > 0
+
+
+def test_next_build_removes_scoped_tempdirs(spark, sf_dir):
+    """Sink outputs are query-scoped: the returned DataFrame reads its temp
+    dir lazily, so the dir lives until the next registered build removes it."""
+    snk = SPECS["snk_csv"].builder(spark, sf_dir)
+    assert snk.count() > 0
+    part = pathlib.Path(urllib.parse.urlparse(snk.inputFiles()[0]).path)
+    out = part.parent.parent  # the scoped dir holding openaq_data_<stamp>/
+    assert out.name.startswith("snk_csv_") and out.is_dir()
+    SPECS["agg_stats"].builder(spark, sf_dir)
+    assert not out.exists()
+
+
+def test_next_build_drops_scoped_tables(spark, sf_dir):
+    """join_bucketed's catalog tables live in its scoped temp dir, so the
+    next registered build drops them before it removes their files."""
+    jb = SPECS["join_bucketed"].builder(spark, sf_dir)
+    names = [t.name for t in spark.catalog.listTables() if t.name.startswith(("orders_b_", "customer_b_"))]
+    assert len(names) == 2 and jb.count() > 0
+    SPECS["agg_stats"].builder(spark, sf_dir)
+    assert not [t.name for t in spark.catalog.listTables() if t.name in names]
+
+
+def test_open_cost_lets_a_few_mb_file_span_the_cores(spark, tmp_path):
+    """Split size is min(maxPartitionBytes, max(openCostInBytes, bytes /
+    cores)). Under the engine conf a ~5 MB single-file table scans in at
+    least 4 non-empty splits on 4 cores; Spark's 4 MB default open cost
+    floors the split at 4 MB, so the same file scans in 2."""
+    rng = np.random.default_rng(0)
+    n = 320_000
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(
+        pa.table({"a": rng.random(n), "b": rng.random(n)}),
+        path,
+        row_group_size=16_000,
+        compression="none",
+    )
+
+    def splits() -> tuple[int, int]:
+        df = spark.read.schema("a double, b double").parquet(path)
+        nonempty = df.select(F.spark_partition_id()).distinct().count()
+        return nonempty, df.rdd.getNumPartitions()
+
+    spark.conf.set("spark.sql.files.minPartitionNum", "4")  # 4 cores on any host
+    try:
+        apply_engine_conf(spark)
+        nonempty, total = splits()
+        assert nonempty >= 4 and nonempty == total
+        spark.conf.unset("spark.sql.files.openCostInBytes")
+        assert splits() == (2, 2)
+    finally:
+        spark.conf.unset("spark.sql.files.minPartitionNum")
+        apply_engine_conf(spark)
