@@ -8,7 +8,7 @@ and streaming aggregation, UDF tiers, file/REST sources, CSV/Parquet sinks, and
 LLM-data-pipeline operators (dedup, similarity search, text analysis, multimodal
 columns).
 
-Design principles (see ARCHITECTURE.md):
+Design principles:
 - Declarative DataFrame/SQL plans; Catalyst + AQE pick physical strategies.
 - No driver-side collects in any operator; everything scales by partitioning.
 - Built-in JVM expressions over Python UDFs; Arrow-batched pandas UDFs where

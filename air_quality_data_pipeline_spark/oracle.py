@@ -15,18 +15,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-TABLE_NAMES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
+from .tables import TABLE_NAMES
 
 
 def duckdb_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:

@@ -1,11 +1,12 @@
-"""SparkSession construction with scale-oriented defaults.
+"""The engine's SparkSession recipe and the conf every registered build resets.
 
-The reference runs a single Python process (reference main.py:198-309); our
-engine targets a multi-executor cluster. These defaults are chosen for that:
-AQE re-plans shuffles at runtime (coalesces small partitions, splits skewed
-ones, flips sort-merge joins to broadcast when runtime stats allow), Arrow
-makes any pandas-UDF exchange columnar, and a UTC session timezone keeps
-timestamp semantics deterministic across engines and machines.
+The verification driver runs ``__spark_entry__.py`` in its own default
+SparkSession, so a query may depend on no session conf it does not set
+itself: the registry runs ``apply_engine_conf`` before every build, which
+resets each ``_ENGINE_CONF`` key (AQE on, a UTC session timezone, split
+sizes) and releases the previous query's scoped resources. ``get_spark``,
+the one recipe the tests and every script share, therefore only sizes the
+local session (cores, shuffle partitions, driver heap) and turns the UI off.
 """
 
 from __future__ import annotations
@@ -126,37 +127,39 @@ _ENGINE_CONF: dict[str, str | None] = {
 COMPUTE_DENSE = {"spark.sql.adaptive.coalescePartitions.minPartitionSize": "16k"}
 
 
+def local_cores() -> int:
+    """Cores for ``local[n]``: ``$SPARK_GRAFT_CPUS``, else the CPUs this
+    process may run on (its affinity mask, not the host's core count)."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def driver_heap(phys_bytes: int | None = None) -> str:
+    """Driver JVM heap: half the host's physical memory (``phys_bytes``,
+    read from sysconf when None), leaving the other half to the Python
+    workers and anything else on the host."""
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{phys_bytes // 2 // 2**20}m"
+
+
 def get_spark(
     app_name: str = "air-quality-data-pipeline-spark",
-    master: str | None = None,
-    shuffle_partitions: int | None = None,
+    conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession with engine defaults.
-
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally; on a real
-    cluster pass ``None`` with an external cluster manager configured.
-    """
-    if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 4)
-        master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 4)
-
+    """Build (or reuse) a local SparkSession: ``local[local_cores()]`` with
+    as many shuffle partitions, a ``driver_heap()`` heap, no UI, then the
+    static confs in ``conf`` (an event log, say) and the engine conf."""
+    cores = str(local_cores())
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.compression.codec", "zstd")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .master(f"local[{cores}]")
+        .config("spark.sql.shuffle.partitions", cores)
+        .config("spark.driver.memory", driver_heap())
         .config("spark.ui.enabled", "false")
     )
-    for key, value in _ENGINE_CONF.items():
-        if value is not None:
-            builder = builder.config(key, value)
-    return builder.getOrCreate()
+    for key, value in (conf or {}).items():
+        builder = builder.config(key, value)
+    return apply_engine_conf(builder.getOrCreate())
 
 
 def apply_engine_conf(spark: SparkSession) -> SparkSession:

@@ -435,20 +435,17 @@ def snk_part_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = scoped_tempdir("snk_part_overwrite_")
     ev = table(spark, sf_dir, "events").select("event_id", "user_id", "value", "event_type")
     ev.write.mode("overwrite").partitionBy("event_type").parquet(out)
-    # scope the dynamic-overwrite conf to this one write so no session-level
-    # behavior change leaks to whatever query the driver runs next
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        correction = ev.filter(F.col("event_type") == "purchase").withColumn(
-            "value", F.col("value") * 2.0
-        )
-        correction.write.mode("overwrite").partitionBy("event_type").parquet(out)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        else:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    correction = ev.filter(F.col("event_type") == "purchase").withColumn(
+        "value", F.col("value") * 2.0
+    )
+    # a writer option overrides the session conf for this write only, so no
+    # session state leaks to whatever query the driver runs next
+    (
+        correction.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("event_type")
+        .parquet(out)
+    )
     return spark.read.schema(ev.schema).parquet(out).select(
         "event_id", "user_id", "event_type", "value"
     )

@@ -62,22 +62,14 @@ HEAVY = [
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5")))
     sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf") or "0.1")
 
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("air-quality-pipeline-bench")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.driver.memory", "24g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
     from air_quality_data_pipeline_spark.registry import load_all_queries
+    from air_quality_data_pipeline_spark.session import get_spark
+
+    spark = get_spark("air-quality-pipeline-bench")
+    spark.sparkContext.setLogLevel("ERROR")
 
     specs = load_all_queries()
 
@@ -130,7 +122,7 @@ def main() -> None:
         "queries": timings,
         "sf": sf,
         "sf_dir": sf_dir,
-        "cpus": int(cpus),
+        "cpus": spark.sparkContext.defaultParallelism,
         "nproc": len(os.sched_getaffinity(0)),
         "runs_per_query": runs,
         "heavy_total_wall": round(sum(heavy.values()), 3),

@@ -19,9 +19,8 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from pyspark.sql import SparkSession
-
 from air_quality_data_pipeline_spark.registry import load_all_queries
+from air_quality_data_pipeline_spark.session import get_spark
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -50,7 +49,7 @@ NARRATIVE = """
 - **Joins**: dimensions broadcast (0 shuffles of the fact side); fact-fact
   joins shuffle both sides once on the join key. Skew is handled twice:
   statically (join_salted — content-derived salt × dim explode) and at
-  runtime (AQE skew-join splitting, enabled in session.py). Co-located
+  runtime (AQE skew-join splitting, on by default in Spark 4). Co-located
   repeats use bucketed tables (join_bucketed: zero exchanges, plan-asserted).
 - **Aggregation**: every `groupBy` in the repo plans as partial+final hash
   aggregate — the exchange carries one row per (map task × group), not per
@@ -98,7 +97,7 @@ NARRATIVE = """
 
 ## Knobs that move with cluster size (session.py)
 
-- `spark.sql.shuffle.partitions`: 32 locally; at 1000 executors set to
+- `spark.sql.shuffle.partitions`: one per core locally; at 1000 executors set to
   2-3× total cores so each post-shuffle partition lands ≤ ~200 MB
   (AQE coalesces the excess).
 - `spark.sql.adaptive.enabled` + skew-join: on — runtime re-planning from
@@ -117,14 +116,9 @@ NARRATIVE = """
 
 
 def main() -> None:
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("scale-audit")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark("scale-audit")
     spark.sparkContext.setLogLevel("ERROR")
+    print(f"# cores={spark.sparkContext.defaultParallelism}", flush=True)
 
     specs = load_all_queries()
     rows = []

@@ -35,24 +35,17 @@ def main() -> None:
     log_dir = f"/tmp/spark-events-{os.getpid()}"
     os.makedirs(log_dir, exist_ok=True)
 
-    from pyspark.sql import SparkSession
-
     from air_quality_data_pipeline_spark.registry import load_all_queries
+    from air_quality_data_pipeline_spark.session import get_spark
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("profile-query")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.driver.memory", "24g")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", log_dir)
-        .config("spark.eventLog.compress", "false")
-        .config("spark.eventLog.rolling.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark("profile-query", conf={
+        "spark.eventLog.enabled": "true",
+        "spark.eventLog.dir": log_dir,
+        "spark.eventLog.compress": "false",
+        "spark.eventLog.rolling.enabled": "false",
+    })
     spark.sparkContext.setLogLevel("ERROR")
-    print(f"# cpus={cpus} nproc={len(os.sched_getaffinity(0))}", file=sys.stderr, flush=True)
+    print(f"# cores={spark.sparkContext.defaultParallelism}", file=sys.stderr, flush=True)
     specs = load_all_queries()
 
     # warm the session so the first profiled query doesn't carry JVM init

@@ -17,7 +17,6 @@ SF_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 
 @pytest.fixture(scope="session")
 def spark():
-    # local[$SPARK_GRAFT_CPUS] with as many shuffle partitions (get_spark)
     s = get_spark(app_name="aqps-tests")
     s.sparkContext.setLogLevel("ERROR")
     yield s
