@@ -75,11 +75,7 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     hit = _EDGE_MEMO.get(key)
     if hit is not None:
         return hit
-    for k in list(_EDGE_MEMO):
-        try:
-            _EDGE_MEMO.pop(k).unpersist()
-        except Exception:
-            pass  # stale session already stopped
+    reset_edge_memo()
     # round-11: the self-join's map side (scan + hash + shuffle write of
     # 600k key pairs at sf0.1) ran on the 1-3 tasks the one-row-group
     # fixture scan yields, and the reduce side coalesced to ~11 tasks

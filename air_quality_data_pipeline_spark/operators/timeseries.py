@@ -28,7 +28,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from ..functions.exact import exact_sum, exact_sum_sql
+from ..functions.exact import exact_round, exact_round_sql, exact_sum, exact_sum_sql
 from ..registry import register
 from ..session import scoped_persist
 from ..tables import table
@@ -3290,9 +3290,14 @@ def ts_sax(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 7-day mean/std — one row per observation, ready for a regressor. All
 # features are derived from exact micro-integer daily cells: lags are
 # integer copies, the rolling mean is an exact integer ratio, the rolling
-# std uses DECIMAL(38,0) squares; the only doubles are final divisions
-# under ROUND(9).
-_LAGFEAT_ORACLE = """
+# std uses DECIMAL(38,0) squares; the only doubles are final divisions,
+# rounded to 9 places by exact_round, which both engines compute alike
+# (ROUND(double, 9) differed from DuckDB's in one roll7_std row at sf0.1).
+_LAGFEAT_STD_SQL = """sqrt(greatest(0.0,
+                 (r_ssq - CAST(r_s AS DOUBLE) * CAST(r_s AS DOUBLE)
+                          / CAST(r_n AS DOUBLE)) / (CAST(r_n AS DOUBLE) - 1.0)))
+               / 1000000.0"""
+_LAGFEAT_ORACLE = f"""
 WITH daily AS (
   SELECT event_type, CAST(ts AS DATE) AS d,
          CAST(SUM(CAST(floor(value * 1000000.0) AS BIGINT)) AS BIGINT) AS qv
@@ -3312,16 +3317,13 @@ feat AS (
                 ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
 )
 SELECT event_type, CAST(d AS VARCHAR) AS d, day_cycle,
-       ROUND(CAST(qv AS DOUBLE) / 1000000.0, 9) AS y,
-       ROUND(CAST(lag1 AS DOUBLE) / 1000000.0, 9) AS lag1,
-       ROUND(CAST(lag7 AS DOUBLE) / 1000000.0, 9) AS lag7,
-       ROUND(CAST(r_s AS DOUBLE) / CAST(r_n AS DOUBLE) / 1000000.0, 9)
+       {exact_round_sql('CAST(qv AS DOUBLE) / 1000000.0', 9)} AS y,
+       {exact_round_sql('CAST(lag1 AS DOUBLE) / 1000000.0', 9)} AS lag1,
+       {exact_round_sql('CAST(lag7 AS DOUBLE) / 1000000.0', 9)} AS lag7,
+       {exact_round_sql('CAST(r_s AS DOUBLE) / CAST(r_n AS DOUBLE) / 1000000.0', 9)}
          AS roll7_mean,
        CASE WHEN r_n > 1 THEN
-         ROUND(sqrt(greatest(0.0,
-                 (r_ssq - CAST(r_s AS DOUBLE) * CAST(r_s AS DOUBLE)
-                          / CAST(r_n AS DOUBLE)) / (CAST(r_n AS DOUBLE) - 1.0)))
-               / 1000000.0, 9)
+         {exact_round_sql(_LAGFEAT_STD_SQL, 9)}
        END AS roll7_std
 FROM feat
 """
@@ -3369,13 +3371,13 @@ def ts_lag_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.col("d").cast("string").alias("d"),
         "day_cycle",
-        F.round(F.col("qv").cast("double") / 1000000.0, 9).alias("y"),
-        F.round(F.col("lag1").cast("double") / 1000000.0, 9).alias("lag1"),
-        F.round(F.col("lag7").cast("double") / 1000000.0, 9).alias("lag7"),
-        F.round(rs / rn / 1000000.0, 9).alias("roll7_mean"),
+        exact_round(F.col("qv").cast("double") / 1000000.0, 9).alias("y"),
+        exact_round(F.col("lag1").cast("double") / 1000000.0, 9).alias("lag1"),
+        exact_round(F.col("lag7").cast("double") / 1000000.0, 9).alias("lag7"),
+        exact_round(rs / rn / 1000000.0, 9).alias("roll7_mean"),
         F.when(
             F.col("r_n") > 1,
-            F.round(
+            exact_round(
                 F.sqrt(
                     F.greatest(
                         F.lit(0.0),

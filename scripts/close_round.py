@@ -24,6 +24,9 @@ Gates (BASELINE.md anchors):
   the seal (a query no longer registered is reported as retired); the
   slowest-15 table is printed as the seal record. --skip-sweep skips it
   loudly.
+  Headline/heavy refusals name the bench's cores and the anchors'
+  local[32]; sweep refusals name both sweeps' cores when they differ (a
+  SWEEP_r*.json without "cores" reads "cores unknown"). No gate scales.
 
 Exit 0 = sealed; exit 1 = DO NOT SEAL (fix or re-measure on an idle host —
 concurrent scaling studies inflate readings ~20%, BASELINE.md round-8 note).
@@ -46,6 +49,11 @@ HEADLINE_ANCHOR = 24.7  # sec, sf0.1 (BASELINE.md r1 median)
 # wedge-join form. 3.4 s = the round-11 closing cold heavy total.
 HEAVY_ANCHOR = 3.4  # sec, sf0.1 (BASELINE.md r11 cold-protocol anchor)
 GATE_FACTOR = 2.0
+ANCHOR_HOST = "local[32]"  # where BASELINE.md measured both anchors
+
+
+def cores_text(n: int | None) -> str:
+    return f"{n} cores" if n else "cores unknown"
 
 
 def fresh_bench() -> dict:
@@ -71,16 +79,17 @@ def check(parsed: dict) -> list[str]:
     problems: list[str] = []
     headline = parsed.get("value")
     heavy = parsed.get("heavy_total_wall")
+    host = f"(bench on {cores_text(parsed.get('cpus'))}, anchors on {ANCHOR_HOST})"
     if headline is None:
         problems.append("no headline total in bench output")
     elif headline > GATE_FACTOR * HEADLINE_ANCHOR:
         problems.append(
-            f"headline {headline:.2f}s > gate {GATE_FACTOR * HEADLINE_ANCHOR:.1f}s"
+            f"headline {headline:.2f}s > gate {GATE_FACTOR * HEADLINE_ANCHOR:.1f}s {host}"
         )
     if heavy is None:
         problems.append("no heavy_total_wall in bench output")
     elif heavy > GATE_FACTOR * HEAVY_ANCHOR:
-        problems.append(f"heavy {heavy:.2f}s > gate {GATE_FACTOR * HEAVY_ANCHOR:.1f}s")
+        problems.append(f"heavy {heavy:.2f}s > gate {GATE_FACTOR * HEAVY_ANCHOR:.1f}s {host}")
     if parsed.get("errors"):
         problems.append(f"bench recorded query errors: {parsed['errors']}")
     return problems
@@ -161,16 +170,23 @@ def check_sweep(sweep_path: str | None) -> list[str]:
         sweep_path = "/tmp/close_round_sweep.json"
     cur = json.load(open(sweep_path))
     timings: dict[str, float] = cur.get("timings", cur)
+    ref_path = newest_sweep_ref()
+    ref = json.load(open(ref_path)) if ref_path else {}
+    hosts = ""
+    if ref_path:
+        compared = (f"{os.path.basename(ref_path)}: {cores_text(ref.get('cores'))}, "
+                    f"this sweep: {cores_text(cur.get('cores'))}")
+        print(f"sweep guard: {compared}")
+        if ref.get("cores") != cur.get("cores"):
+            hosts = f" [hosts differ: {compared}]"
     if cur.get("errors"):
-        return [f"sweep recorded query errors: {cur['errors']}"]
+        return [f"sweep recorded query errors: {cur['errors']}{hosts}"]
     print("sweep slowest-15 (the seal record):")
     for name, sec in sorted(timings.items(), key=lambda kv: -kv[1])[:15]:
         print(f"  {name:28s} {sec:7.3f}")
-    ref_path = newest_sweep_ref()
     if ref_path is None:
         print("sweep guard: no committed SWEEP_r*.json reference yet — recording only")
         return []
-    ref = json.load(open(ref_path))
     ref_t: dict[str, float] = ref.get("timings", ref)
     problems = []
     missing = [n for n in ref_t if n not in timings]
@@ -192,7 +208,7 @@ def check_sweep(sweep_path: str | None) -> list[str]:
                 f"sweep: {name} regressed {prev:.3f}s -> {now:.3f}s "
                 f"(>{SWEEP_REGRESSION_FACTOR}x vs {os.path.basename(ref_path)})"
             )
-    return problems
+    return [p + hosts for p in problems]
 
 
 def main() -> int:
@@ -213,7 +229,8 @@ def main() -> int:
         del sys.argv[i : i + 2]
     if len(sys.argv) > 2 and sys.argv[1] == "--reuse":
         blob = json.load(open(sys.argv[2]))
-        parsed = blob.get("parsed", blob)  # accept BENCH_r{N}.json or raw line
+        # accept BENCH_r{N}.json (cpus beside "parsed") or the raw line
+        parsed = {"cpus": blob.get("cpus"), **blob.get("parsed", blob)}
         src = sys.argv[2]
     else:
         parsed = fresh_bench()
@@ -223,7 +240,7 @@ def main() -> int:
     headline = parsed.get("value")
     heavy = parsed.get("heavy_total_wall")
     print(
-        f"closing bench ({src}): headline={headline}s "
+        f"closing bench ({src}, {cores_text(parsed.get('cpus'))}): headline={headline}s "
         f"(anchor {HEADLINE_ANCHOR}, gate {GATE_FACTOR * HEADLINE_ANCHOR:.1f}), "
         f"heavy={heavy}s (anchor {HEAVY_ANCHOR}, gate {GATE_FACTOR * HEAVY_ANCHOR:.1f})"
     )

@@ -9,6 +9,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from air_quality_data_pipeline_spark.registry import load_all_queries
 from air_quality_data_pipeline_spark.session import get_spark
 
 SF_SMALL = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
@@ -25,3 +26,9 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMALL
+
+
+def executed_plan(spark, name, sf_dir) -> str:
+    """A registered query's physical plan, as the plan-shape gates read it."""
+    df = load_all_queries()[name].builder(spark, sf_dir)
+    return df._jdf.queryExecution().executedPlan().toString()

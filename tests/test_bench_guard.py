@@ -51,6 +51,37 @@ def test_check_flags_regressions():
     assert not check({"value": 10.0, "heavy_total_wall": 5.0})
 
 
+def test_gate_refusal_names_bench_cores_and_anchor_host():
+    """A headline/heavy refusal says which host it compared: the bench's
+    cores against the anchors' local[32]."""
+    probs = check({"value": 10.0, "heavy_total_wall": 20.0, "cpus": 4})
+    assert len(probs) == 1 and "4 cores" in probs[0] and "local[32]" in probs[0]
+    assert "cores unknown" in check({"value": 10.0, "heavy_total_wall": 20.0})[0]
+
+
+def test_sweep_guard_refuses_across_hosts_and_names_both(tmp_path, monkeypatch, capsys):
+    """A 3x regression of a 4-core sweep against a 32-core reference is
+    still refused (no factor scales with cores), and the refusal names
+    both core counts."""
+    import close_round
+
+    ref = {"timings": {"q_slow": 2.0, "q_flat": 1.0}, "errors": {}, "cores": 32}
+    (tmp_path / "SWEEP_r98.json").write_text(json.dumps(ref))
+    monkeypatch.setattr(close_round, "REPO", str(tmp_path))
+    monkeypatch.setattr(close_round, "registered_names", lambda: list(ref["timings"]))
+    cur = tmp_path / "sweep.json"
+    cur.write_text(json.dumps({"timings": {"q_slow": 6.0, "q_flat": 1.0}, "errors": {},
+                               "cores": 4}))
+    probs = close_round.check_sweep(str(cur))
+    assert len(probs) == 1 and "q_slow" in probs[0]
+    assert "32 cores" in probs[0] and "4 cores" in probs[0]
+    assert "SWEEP_r98.json: 32 cores, this sweep: 4 cores" in capsys.readouterr().out
+    # a reference without the field reads "cores unknown"
+    (tmp_path / "SWEEP_r98.json").write_text(json.dumps({"timings": ref["timings"]}))
+    probs = close_round.check_sweep(str(cur))
+    assert len(probs) == 1 and "cores unknown" in probs[0] and "4 cores" in probs[0]
+
+
 def test_sweep_guard_flags_regressions_and_missing(tmp_path, monkeypatch):
     """check_sweep must refuse a >2x long-tail regression (past the 1 s
     absolute floor) and a query that vanished from the sweep, and must

@@ -3803,3 +3803,63 @@ def test_exact_sum_limb_overflow_raises(spark):
             ).fetchall()
     finally:
         con.close()
+
+
+def test_exact_round_matches_duckdb_near_ties(spark, tmp_path):
+    """exact_round and exact_round_sql agree bit for bit at n = 0..9 on 10^5
+    values within two ulps of a decimal tie (10^4 ties per n, jittered),
+    where Spark's and DuckDB's ROUND(double, 9) are known to disagree."""
+    import duckdb
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from air_quality_data_pipeline_spark.functions.exact import exact_round, exact_round_sql
+
+    rng = np.random.default_rng(11)
+    per_n = 10**4
+    ties = np.concatenate(
+        [(rng.integers(-(10**8), 10**8, per_n) + 0.5) / 10.0**n for n in range(10)]
+    )
+    x = (ties.view(np.int64) + rng.integers(-2, 3, ties.size)).view(np.float64)
+    src = str(tmp_path / "ties.parquet")
+    pq.write_table(pa.table({"id": np.arange(x.size), "x": x}), src)
+
+    got = str(tmp_path / "spark_out")
+    spark.read.parquet(src).select(
+        "id",
+        *(exact_round(F.col("x"), n).alias(f"r{n}") for n in range(10)),
+        F.round("x", 9).alias("round9"),
+    ).write.parquet(got)
+    spark_out = pq.read_table(got).sort_by("id")
+    cols = ", ".join(f"{exact_round_sql('x', n)} AS r{n}" for n in range(10))
+    duck_out = duckdb.sql(
+        f"SELECT id, {cols}, ROUND(x, 9) AS round9 FROM read_parquet('{src}') ORDER BY id"
+    ).arrow()
+
+    def bits(table, col):
+        return table.column(col).to_numpy().view(np.int64)
+
+    assert spark_out.num_rows == duck_out.num_rows == 10**5
+    for n in range(10):
+        assert np.array_equal(bits(spark_out, f"r{n}"), bits(duck_out, f"r{n}")), n
+    # the panel really sits on ties: plain ROUND splits the engines there
+    assert not np.array_equal(bits(spark_out, "round9"), bits(duck_out, "round9"))
+
+
+@pytest.mark.parametrize("x", [float("nan"), float("inf"), float("-inf"), 1e10])
+def test_exact_round_out_of_range_raises(spark, x):
+    """NaN, ±Inf and |x * 10^9 + 0.5| >= 2^63 raise in both engines; NULL
+    passes through."""
+    import duckdb
+
+    from air_quality_data_pipeline_spark.functions.exact import exact_round, exact_round_sql
+
+    df = spark.createDataFrame([(1.0,), (x,)], "x double")
+    with pytest.raises(Exception, match="exact_round"):
+        df.select(exact_round(F.col("x"), 9)).collect()
+    with pytest.raises(duckdb.ConversionException):
+        duckdb.sql(f"SELECT {exact_round_sql('?', 9)}", params=[x]).fetchall()
+    null = spark.createDataFrame([(None,)], "x double").select(exact_round(F.col("x"), 9))
+    assert null.collect()[0][0] is None
+    assert duckdb.sql(f"SELECT {exact_round_sql('NULL::DOUBLE', 9)}").fetchall() == [(None,)]

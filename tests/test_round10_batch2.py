@@ -15,13 +15,9 @@ import math
 import pytest
 
 from air_quality_data_pipeline_spark.registry import load_all_queries
+from conftest import executed_plan
 
 SPECS = load_all_queries()
-
-
-def _executed_plan(spark, name, sf_dir) -> str:
-    df = SPECS[name].builder(spark, sf_dir)
-    return df._jdf.queryExecution().executedPlan().toString()
 
 
 # --- plan gates ---------------------------------------------------------------
@@ -32,7 +28,7 @@ def test_ols2_part_dim_broadcasts(spark, sf_dir):
     shuffle join), and the fit is ONE brand-keyed aggregate exchange."""
     import re
 
-    plan = _executed_plan(spark, "agg_ols2", sf_dir)
+    plan = executed_plan(spark, "agg_ols2", sf_dir)
     assert "BroadcastHashJoin" in plan, plan[:2000]
     assert "SortMergeJoin" not in plan, plan[:2000]
     ids = {
@@ -49,7 +45,7 @@ def test_km_and_runs_windows_ride_cells(spark, sf_dir, name):
     """The cumulative/lag windows must consume an AGGREGATED cell table
     (priority x day / type x day), never raw corpus rows: every Window
     in the plan has a HashAggregate below it."""
-    plan = _executed_plan(spark, name, sf_dir)
+    plan = executed_plan(spark, name, sf_dir)
     idx = plan.find("Window")
     assert idx >= 0, plan[:2000]
     # last Window printed is the deepest one; an aggregate must sit below it
@@ -63,7 +59,7 @@ def test_rrf_fusion_no_global_sort(spark, sf_dir):
     """llm_rrf_fusion: both list truncations and the final top-20 must be
     TakeOrderedAndProject partial top-k — a rangepartitioning exchange
     would mean a corpus-wide sort."""
-    plan = _executed_plan(spark, "llm_rrf_fusion", sf_dir)
+    plan = executed_plan(spark, "llm_rrf_fusion", sf_dir)
     assert "TakeOrderedAndProject" in plan, plan[:2000]
     assert "rangepartitioning" not in plan, plan[:2000]
 
@@ -72,7 +68,7 @@ def test_rrf_fusion_no_global_sort(spark, sf_dir):
 def test_audit_ops_single_corpus_collapse(spark, sf_dir, name):
     """llm_ece / llm_filter_funnel: one corpus pass, one collapse — no
     join anywhere and at most the cell/global aggregate exchanges."""
-    plan = _executed_plan(spark, name, sf_dir)
+    plan = executed_plan(spark, name, sf_dir)
     for join in ("SortMergeJoin", "BroadcastHashJoin", "CartesianProduct"):
         assert join not in plan, f"{name} plans a {join}:\n" + plan[:2000]
 
@@ -81,7 +77,7 @@ def test_neyman_alloc_broadcasts(spark, sf_dir):
     """sample_neyman: the 5-row allocation table must broadcast onto the
     rank window's output — a shuffle join there would re-exchange the
     corpus a third time."""
-    plan = _executed_plan(spark, "sample_neyman", sf_dir)
+    plan = executed_plan(spark, "sample_neyman", sf_dir)
     assert "BroadcastHashJoin" in plan, plan[:2000]
     assert "SortMergeJoin" not in plan, plan[:2000]
 

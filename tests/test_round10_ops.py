@@ -15,13 +15,9 @@ import math
 import pytest
 
 from air_quality_data_pipeline_spark.registry import load_all_queries
+from conftest import executed_plan
 
 SPECS = load_all_queries()
-
-
-def _executed_plan(spark, name, sf_dir) -> str:
-    df = SPECS[name].builder(spark, sf_dir)
-    return df._jdf.queryExecution().executedPlan().toString()
 
 
 # --- plan gates ---------------------------------------------------------------
@@ -31,7 +27,7 @@ def test_hodges_lehmann_pairs_ride_the_cell_grain(spark, sf_dir):
     """The Walsh-pair expansion must be a self-join of the (flag, qty)
     CELL table, never of lineitem rows: the plan may contain no join
     whose both inputs scan lineitem without an intervening aggregate."""
-    plan = _executed_plan(spark, "agg_hodges_lehmann", sf_dir)
+    plan = executed_plan(spark, "agg_hodges_lehmann", sf_dir)
     # the cell collapse is a hash aggregate below the join
     join_at = min(
         i for i in (plan.find("SortMergeJoin"), plan.find("BroadcastHashJoin"),
@@ -50,7 +46,7 @@ def test_basket_pairs_single_corpus_shuffle(spark, sf_dir):
     re-exchange both aliased sides), and the brand dim broadcasts."""
     import re
 
-    plan = _executed_plan(spark, "agg_basket_pairs", sf_dir)
+    plan = executed_plan(spark, "agg_basket_pairs", sf_dir)
     # the cached subtree's text repeats under every InMemoryTableScan —
     # dedupe physical exchanges by plan_id
     ids = {
@@ -70,7 +66,7 @@ def test_katz_walks_never_enumerate(spark, sf_dir):
     """graph_katz composes walk COUNTS by joins on the edge table; no
     cartesian product may appear (the memoized edge build is equi-join
     only) and walk aggregation must be hash aggregates."""
-    plan = _executed_plan(spark, "graph_katz", sf_dir)
+    plan = executed_plan(spark, "graph_katz", sf_dir)
     assert "CartesianProduct" not in plan, plan[:2000]
     assert "HashAggregate" in plan
 
@@ -81,7 +77,7 @@ def test_series_ops_collapse_before_fanout(spark, sf_dir, name):
     collapse (hourly/daily cells), so the explode multiplies cells, not
     raw events: the plan below the Generate must contain the cell
     aggregate."""
-    plan = _executed_plan(spark, name, sf_dir)
+    plan = executed_plan(spark, name, sf_dir)
     gen = plan.index("Generate explode")
     below = plan[gen:]
     assert "HashAggregate" in below, (
@@ -94,7 +90,7 @@ def test_entropy_rate_windows_ride_the_cell_table(spark, sf_dir):
     lag window; the global/row-total windows run on the <= |types|^2 cell
     table AFTER the bigram aggregate (window above aggregate in the
     printed plan)."""
-    plan = _executed_plan(spark, "ts_entropy_rate", sf_dir)
+    plan = executed_plan(spark, "ts_entropy_rate", sf_dir)
     first_window = plan.index("Window")
     assert "HashAggregate" in plan[first_window:], plan[:2000]
 
@@ -106,7 +102,7 @@ def test_budget_ops_single_source_collapse(spark, sf_dir, name):
     broadcast/row-local."""
     import re
 
-    plan = _executed_plan(spark, name, sf_dir)
+    plan = executed_plan(spark, name, sf_dir)
     ids = {
         m.group(1)
         for m in re.finditer(

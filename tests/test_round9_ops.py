@@ -13,13 +13,9 @@ from __future__ import annotations
 import pytest
 
 from air_quality_data_pipeline_spark.registry import load_all_queries
+from conftest import executed_plan
 
 SPECS = load_all_queries()
-
-
-def _executed_plan(spark, name, sf_dir) -> str:
-    df = SPECS[name].builder(spark, sf_dir)
-    return df._jdf.queryExecution().executedPlan().toString()
 
 
 # --- plan gates ---------------------------------------------------------------
@@ -28,7 +24,7 @@ def _executed_plan(spark, name, sf_dir) -> str:
 @pytest.mark.parametrize("name", ["llm_code_detect", "llm_script_mix"])
 def test_text_audits_are_zero_shuffle(spark, sf_dir, name):
     """Pure row-local regex/ratio projections: no Exchange of any kind."""
-    plan = _executed_plan(spark, name, sf_dir)
+    plan = executed_plan(spark, name, sf_dir)
     assert "Exchange" not in plan, f"{name} shuffled:\n{plan[:1500]}"
 
 
@@ -37,7 +33,7 @@ def test_bootstrap_fanout_combines_map_side(spark, sf_dir):
     aggregate before any exchange — the exchange carries B*k cells, not
     B*N rows. A plan whose first post-Generate exchange precedes the
     partial agg ships the fan-out through the wire."""
-    plan = _executed_plan(spark, "agg_bootstrap_ci", sf_dir)
+    plan = executed_plan(spark, "agg_bootstrap_ci", sf_dir)
     assert "Generate explode" in plan
     gen = plan.index("Generate explode")
     # the executed-plan string prints consumers ABOVE producers, so the
@@ -53,7 +49,7 @@ def test_tail_contrib_has_no_single_partition_value_window(spark, sf_dir):
     """agg_tail_contrib's cumulative scan must be the range-distributed
     two-level prefix (the agg_spearman/win_skyline treatment): no window
     may run on a SinglePartition exchange."""
-    plan = _executed_plan(spark, "agg_tail_contrib", sf_dir)
+    plan = executed_plan(spark, "agg_tail_contrib", sf_dir)
     assert "rangepartitioning" in plan.lower(), plan[:1500]
     lines = plan.splitlines()
     for i, ln in enumerate(lines):
@@ -72,7 +68,7 @@ def test_knn_graph_scores_in_cogrouped_arrow_cells(spark, sf_dir):
     window exchanged ~100 GB and spilled). The salt replication stays a
     deliberate broadcast nested-loop cross of the tiny salt dim; no
     other cartesian is allowed."""
-    plan = _executed_plan(spark, "llm_knn_graph", sf_dir)
+    plan = executed_plan(spark, "llm_knn_graph", sf_dir)
     assert "FlatMapCoGroupsInPandas" in plan, plan[:1500]
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan, (
@@ -90,7 +86,7 @@ def test_reset_cumsum_single_exchange(spark, sf_dir):
     """win_reset_cumsum: both windows share the user clustering, so the
     whole operator pays exactly ONE shuffle (hashpartitioning(user_id)
     satisfies the (user_id, segment) clustering of the second window)."""
-    plan = _executed_plan(spark, "win_reset_cumsum", sf_dir)
+    plan = executed_plan(spark, "win_reset_cumsum", sf_dir)
     n_shuffles = sum(
         1
         for ln in plan.splitlines()
@@ -102,7 +98,7 @@ def test_reset_cumsum_single_exchange(spark, sf_dir):
 def test_hurst_windows_are_chunk_bounded(spark, sf_dir):
     """ts_hurst: every window partitions by (type, size, chunk) — at most
     32 rows per partition by construction; no single-partition window."""
-    plan = _executed_plan(spark, "ts_hurst", sf_dir)
+    plan = executed_plan(spark, "ts_hurst", sf_dir)
     lines = plan.splitlines()
     for i, ln in enumerate(lines):
         if "Window" in ln and "windowspecdefinition" in ln.lower():
@@ -372,7 +368,7 @@ def test_null_correlation_detects_planting(spark, sf_dir):
 def test_curriculum_thresholds_are_range_distributed(spark, sf_dir):
     """The tertile scan must be the two-level prefix, not a
     single-partition window over the score grain."""
-    plan = _executed_plan(spark, "llm_curriculum_phase", sf_dir)
+    plan = executed_plan(spark, "llm_curriculum_phase", sf_dir)
     assert "rangepartitioning" in plan.lower(), plan[:1500]
 
 
