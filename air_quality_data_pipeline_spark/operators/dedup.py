@@ -82,6 +82,18 @@ _MH_SPARK_ARR_INT = "array(" + ", ".join(
 ) + ")"
 _MH_DUCK_ARR = "[" + ", ".join(minhash_signature_duckdb("sh_hashes", 8)) + "]"
 
+# LSH banding over a ``sigs`` CTE (doc_id, sig): one band per signature
+# slot; a candidate pair shares a (band, mh) bucket. Shared by the
+# llm_minhash_dedup and llm_dedup_audit oracles.
+_LSH_CAND_DUCK = """bands AS (
+  SELECT doc_id, i AS band, sig[i] AS mh
+  FROM sigs, UNNEST(range(1, 9)) AS t(i)
+),
+cand AS (
+  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+  FROM bands a JOIN bands b ON a.band = b.band AND a.mh = b.mh AND a.doc_id < b.doc_id
+)"""
+
 _MINHASH_ORACLE = f"""
 WITH corpus AS (
   SELECT doc_id, text FROM documents
@@ -103,14 +115,7 @@ shingled AS (
 sigs AS (
   SELECT doc_id, sh_hashes, {_MH_DUCK_ARR} AS sig FROM shingled
 ),
-bands AS (
-  SELECT doc_id, i AS band, sig[i] AS mh
-  FROM sigs, UNNEST(range(1, 9)) AS t(i)
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b ON a.band = b.band AND a.mh = b.mh AND a.doc_id < b.doc_id
-),
+{_LSH_CAND_DUCK},
 verified AS (
   SELECT c.doc_a, c.doc_b,
          len(list_intersect(sa.sh_hashes, sb.sh_hashes)) AS n_inter,
@@ -305,8 +310,10 @@ def llm_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- llm_ngram_jaccard ---------------------------------------------------------
 
-_NGRAM_JACCARD_ORACLE = f"""
-WITH sub AS (
+# The bounded exact panel (doc_id < 100): distinct shingles per document,
+# the shingle intersection count of every pair and each set's size.
+# llm_lsh_tune's oracle scores the same pairs.
+_PANEL_PAIRS_DUCK = f"""sub AS (
   SELECT doc_id, list_distinct({shingles_duckdb(tokens_duckdb('text'))}) AS sh
   FROM documents WHERE doc_id < 100
 ),
@@ -316,7 +323,10 @@ inter AS (
   FROM e a JOIN e b ON a.s = b.s AND a.doc_id < b.doc_id
   GROUP BY 1, 2
 ),
-sz AS (SELECT doc_id, len(sh) AS n FROM sub)
+sz AS (SELECT doc_id, len(sh) AS n FROM sub)"""
+
+_NGRAM_JACCARD_ORACLE = f"""
+WITH {_PANEL_PAIRS_DUCK}
 SELECT doc_a, doc_b,
        CAST(n_inter AS DOUBLE) / (sa.n + sb.n - n_inter) AS jaccard
 FROM inter JOIN sz sa ON sa.doc_id = doc_a JOIN sz sb ON sb.doc_id = doc_b
@@ -665,14 +675,7 @@ truth AS (
 sigs AS (
   SELECT doc_id, {_MH_DUCK_ARR} AS sig FROM shingled
 ),
-bands AS (
-  SELECT doc_id, i AS band, sig[i] AS mh
-  FROM sigs, UNNEST(range(1, 9)) AS t(i)
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b ON a.band = b.band AND a.mh = b.mh AND a.doc_id < b.doc_id
-),
+{_LSH_CAND_DUCK},
 hits AS (SELECT * FROM cand INTERSECT SELECT * FROM truth)
 SELECT (SELECT COUNT(*) FROM truth) AS n_truth,
        (SELECT COUNT(*) FROM cand) AS n_candidates,
@@ -1382,17 +1385,7 @@ def llm_prefix_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # wide bands catch high-similarity pairs only, one-row bands catch
 # everything including noise.
 _LSH_TUNE_ORACLE = f"""
-WITH sub AS (
-  SELECT doc_id, list_distinct({shingles_duckdb(tokens_duckdb('text'))}) AS sh
-  FROM documents WHERE doc_id < 100
-),
-e AS (SELECT doc_id, UNNEST(sh) AS s FROM sub),
-inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-  FROM e a JOIN e b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-),
-sz AS (SELECT doc_id, len(sh) AS n FROM sub),
+WITH {_PANEL_PAIRS_DUCK},
 j AS (
   SELECT doc_a, doc_b,
          CAST(n_inter AS DOUBLE) / (sa.n + sb.n - n_inter) AS s

@@ -107,6 +107,32 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     _EDGE_MEMO[key] = edges
     return edges
 
+
+# DuckDB twin of _copurchase_edges for the oracles. The CTEs are
+# MATERIALIZED: DuckDB inlines a multiply-referenced CTE by default, and
+# the oracles' fan-out (edges consumed by several CTEs, each pulling
+# pair_counts again) re-expands the lineitem self-join enough times to
+# spill tens of GB at sf1 — materializing computes each once.
+_PAIR_COUNTS_SQL = """pair_counts AS MATERIALIZED (
+  SELECT l1.l_suppkey AS src, l2.l_suppkey AS dst, COUNT(*) AS w
+  FROM lineitem l1
+  JOIN lineitem l2
+    ON l1.l_orderkey = l2.l_orderkey AND l1.l_suppkey <> l2.l_suppkey
+  GROUP BY l1.l_suppkey, l2.l_suppkey
+)"""
+_ABOVE_MEAN_SQL = """SELECT src, dst FROM pair_counts
+  WHERE w > (SELECT CAST(SUM(w) AS DOUBLE) / COUNT(*) FROM pair_counts)"""
+_EDGES_SQL = f"""{_PAIR_COUNTS_SQL},
+edges AS MATERIALIZED (
+  {_ABOVE_MEAN_SQL}
+)"""
+
+
+def _deg_sql(col: str) -> str:
+    """Per-node degree over the oracles' ``edges``, as BIGINT column ``col``."""
+    return f"SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS {col} FROM edges GROUP BY src"
+
+
 def _oriented_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Every triangle of the co-purchase graph as one (a < b < c) row —
     the edge-iterator adjacency-intersection form shared by
@@ -144,26 +170,31 @@ def _oriented_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# DuckDB twin of _oriented_triangles over a forward edge CTE ``fwd``
+# (src < dst): every triangle once as (a < b < c), and graph_triangles'
+# per-corner count of them.
+_TRI_SQL = """tri AS MATERIALIZED (
+  SELECT e1.src AS a, e1.dst AS b, e2.dst AS c
+  FROM fwd e1
+  JOIN fwd e2 ON e2.src = e1.dst
+  JOIN fwd e3 ON e3.src = e1.src AND e3.dst = e2.dst
+)"""
+_PER_NODE_SQL = """per_node AS (
+  SELECT node, CAST(COUNT(*) AS BIGINT) AS n_triangles FROM (
+    SELECT a AS node FROM tri
+    UNION ALL SELECT b FROM tri
+    UNION ALL SELECT c FROM tri
+  ) GROUP BY node
+)"""
+
+
 # The oracle spells the identical integer algebra as chained CTEs — one CTE
 # pair (inflowK, prK) per iteration. // is DuckDB's integer division; the
 # Spark side uses DIV. Both truncate toward zero and every value is
-# positive, so they agree exactly. pair_counts/edges/deg are MATERIALIZED:
-# DuckDB inlines multiply-referenced CTEs by default, and the reference
-# fan-out here (edges consumed by deg + all three iterations, each pulling
-# pair_counts again) re-expands the lineitem self-join enough times to
-# spill tens of GB at sf1 — materializing computes each once.
+# positive, so they agree exactly. deg is MATERIALIZED for the same
+# reason as _EDGES_SQL: every iteration consumes it.
 _PAGERANK_ORACLE = f"""
-WITH pair_counts AS MATERIALIZED (
-  SELECT l1.l_suppkey AS src, l2.l_suppkey AS dst, COUNT(*) AS w
-  FROM lineitem l1
-  JOIN lineitem l2
-    ON l1.l_orderkey = l2.l_orderkey AND l1.l_suppkey <> l2.l_suppkey
-  GROUP BY l1.l_suppkey, l2.l_suppkey
-),
-edges AS MATERIALIZED (
-  SELECT src, dst FROM pair_counts
-  WHERE w > (SELECT CAST(SUM(w) AS DOUBLE) / COUNT(*) FROM pair_counts)
-),
+WITH {_EDGES_SQL},
 deg AS MATERIALIZED (
   SELECT src AS node, COUNT(*) AS outdeg FROM edges GROUP BY src
 ),
@@ -278,33 +309,15 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # triangles are counted on the CANONICAL orientation src < dst, so each
 # triangle is generated exactly once as (a < b < c). All-integer — exact
 # in both engines. The CTEs are MATERIALIZED for the same inlining reason
-# as the pagerank oracle.
-_TRIANGLES_ORACLE = """
-WITH pair_counts AS MATERIALIZED (
-  SELECT l1.l_suppkey AS src, l2.l_suppkey AS dst, COUNT(*) AS w
-  FROM lineitem l1
-  JOIN lineitem l2
-    ON l1.l_orderkey = l2.l_orderkey AND l1.l_suppkey <> l2.l_suppkey
-  GROUP BY l1.l_suppkey, l2.l_suppkey
-),
+# as _EDGES_SQL.
+_TRIANGLES_ORACLE = f"""
+WITH {_PAIR_COUNTS_SQL},
 fwd AS MATERIALIZED (
-  SELECT src, dst FROM pair_counts
-  WHERE w > (SELECT CAST(SUM(w) AS DOUBLE) / COUNT(*) FROM pair_counts)
+  {_ABOVE_MEAN_SQL}
     AND src < dst
 ),
-tri AS MATERIALIZED (
-  SELECT e1.src AS a, e1.dst AS b, e2.dst AS c
-  FROM fwd e1
-  JOIN fwd e2 ON e2.src = e1.dst
-  JOIN fwd e3 ON e3.src = e1.src AND e3.dst = e2.dst
-),
-per_node AS (
-  SELECT node, CAST(COUNT(*) AS BIGINT) AS n_triangles FROM (
-    SELECT a AS node FROM tri
-    UNION ALL SELECT b FROM tri
-    UNION ALL SELECT c FROM tri
-  ) GROUP BY node
-)
+{_TRI_SQL},
+{_PER_NODE_SQL}
 SELECT CAST(node AS BIGINT) AS suppkey, n_triangles
 FROM per_node
 ORDER BY n_triangles DESC, suppkey
@@ -387,17 +400,7 @@ def _cc_oracle() -> str:
 )""")
         labs.append(cur)
     return f"""
-WITH pair_counts AS MATERIALIZED (
-  SELECT l1.l_suppkey AS src, l2.l_suppkey AS dst, COUNT(*) AS w
-  FROM lineitem l1
-  JOIN lineitem l2
-    ON l1.l_orderkey = l2.l_orderkey AND l1.l_suppkey <> l2.l_suppkey
-  GROUP BY l1.l_suppkey, l2.l_suppkey
-),
-edges AS MATERIALIZED (
-  SELECT src, dst FROM pair_counts
-  WHERE w > (SELECT CAST(SUM(w) AS DOUBLE) / COUNT(*) FROM pair_counts)
-),
+WITH {_EDGES_SQL},
 lab0 AS MATERIALIZED (
   SELECT DISTINCT src AS node, src AS lbl FROM edges
 ),{",".join(iters)},
@@ -505,28 +508,11 @@ def graph_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (each canonical triangle a<b<c explodes to its three edge pairs); the
 # union size is deg(a) + deg(b) - common (a and b stay members — b ∈ N(a)).
 # All integers until one final division on identical operands → exact.
-_JACCARD_ORACLE = """
-WITH pair_counts AS MATERIALIZED (
-  SELECT l1.l_suppkey AS src, l2.l_suppkey AS dst, COUNT(*) AS w
-  FROM lineitem l1
-  JOIN lineitem l2
-    ON l1.l_orderkey = l2.l_orderkey AND l1.l_suppkey <> l2.l_suppkey
-  GROUP BY l1.l_suppkey, l2.l_suppkey
-),
-edges AS MATERIALIZED (
-  SELECT src, dst FROM pair_counts
-  WHERE w > (SELECT CAST(SUM(w) AS DOUBLE) / COUNT(*) FROM pair_counts)
-),
-deg AS MATERIALIZED (
-  SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS d FROM edges GROUP BY src
-),
+_JACCARD_ORACLE = f"""
+WITH {_EDGES_SQL},
+deg AS MATERIALIZED ({_deg_sql('d')}),
 fwd AS MATERIALIZED (SELECT src, dst FROM edges WHERE src < dst),
-tri AS MATERIALIZED (
-  SELECT e1.src AS a, e1.dst AS b, e2.dst AS c
-  FROM fwd e1
-  JOIN fwd e2 ON e2.src = e1.dst
-  JOIN fwd e3 ON e3.src = e1.src AND e3.dst = e2.dst
-),
+{_TRI_SQL},
 common AS (
   SELECT x, y, CAST(COUNT(*) AS BIGINT) AS common FROM (
     SELECT a AS x, b AS y FROM tri
@@ -612,21 +598,9 @@ def graph_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # a hash aggregate on (node, nb2), and direct-neighbor removal is a
 # LEFT ANTI join back to the edge set — exchanges never carry more than
 # two ints per row.
-_TWOHOP_ORACLE = """
-WITH pair_counts AS MATERIALIZED (
-  SELECT l1.l_suppkey AS src, l2.l_suppkey AS dst, COUNT(*) AS w
-  FROM lineitem l1
-  JOIN lineitem l2
-    ON l1.l_orderkey = l2.l_orderkey AND l1.l_suppkey <> l2.l_suppkey
-  GROUP BY l1.l_suppkey, l2.l_suppkey
-),
-edges AS MATERIALIZED (
-  SELECT src, dst FROM pair_counts
-  WHERE w > (SELECT CAST(SUM(w) AS DOUBLE) / COUNT(*) FROM pair_counts)
-),
-deg AS (
-  SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS degree FROM edges GROUP BY src
-),
+_TWOHOP_ORACLE = f"""
+WITH {_EDGES_SQL},
+deg AS ({_deg_sql('degree')}),
 wedge AS (
   SELECT DISTINCT e1.src AS node, e2.dst AS nb2
   FROM edges e1 JOIN edges e2 ON e2.src = e1.dst
@@ -740,17 +714,7 @@ def _kcore_oracle() -> str:
         names.append(cur)
     last = names[-1]
     return f"""
-WITH pair_counts AS MATERIALIZED (
-  SELECT l1.l_suppkey AS src, l2.l_suppkey AS dst, COUNT(*) AS w
-  FROM lineitem l1
-  JOIN lineitem l2
-    ON l1.l_orderkey = l2.l_orderkey AND l1.l_suppkey <> l2.l_suppkey
-  GROUP BY l1.l_suppkey, l2.l_suppkey
-),
-edges AS MATERIALIZED (
-  SELECT src, dst FROM pair_counts
-  WHERE w > (SELECT CAST(SUM(w) AS DOUBLE) / COUNT(*) FROM pair_counts)
-),
+WITH {_EDGES_SQL},
 n0 AS MATERIALIZED (
   SELECT DISTINCT src AS node FROM edges
 ),{",".join(rounds)}
@@ -859,17 +823,7 @@ d{h} AS (
         )
     chain = ",\n".join(ctes)
     return f"""
-WITH pair_counts AS MATERIALIZED (
-  SELECT l1.l_suppkey AS src, l2.l_suppkey AS dst, COUNT(*) AS w
-  FROM lineitem l1
-  JOIN lineitem l2
-    ON l1.l_orderkey = l2.l_orderkey AND l1.l_suppkey <> l2.l_suppkey
-  GROUP BY l1.l_suppkey, l2.l_suppkey
-),
-edges AS MATERIALIZED (
-  SELECT src, dst FROM pair_counts
-  WHERE w > (SELECT CAST(SUM(w) AS DOUBLE) / COUNT(*) FROM pair_counts)
-),
+WITH {_EDGES_SQL},
 {chain}
 SELECT CAST(node AS BIGINT) AS suppkey, CAST(dist AS INT) AS dist
 FROM d{_BFS_HOPS}
@@ -942,18 +896,8 @@ def graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # removes a 400M-row broadcast-join probe from the Spark side.
 _AA_SCALE = 1_000_000
 
-_ADAMIC_ADAR_ORACLE = """
-WITH pair_counts AS MATERIALIZED (
-  SELECT l1.l_suppkey AS src, l2.l_suppkey AS dst, COUNT(*) AS w
-  FROM lineitem l1
-  JOIN lineitem l2
-    ON l1.l_orderkey = l2.l_orderkey AND l1.l_suppkey <> l2.l_suppkey
-  GROUP BY l1.l_suppkey, l2.l_suppkey
-),
-edges AS MATERIALIZED (
-  SELECT src, dst FROM pair_counts
-  WHERE w > (SELECT CAST(SUM(w) AS DOUBLE) / COUNT(*) FROM pair_counts)
-),
+_ADAMIC_ADAR_ORACLE = f"""
+WITH {_EDGES_SQL},
 wt AS MATERIALIZED (
   -- deg-1 nodes: ln(1)=0 would divide by zero (ANSI Spark throws, DuckDB
   -- yields inf) — but a degree-1 node can never be a COMMON neighbor of
@@ -1214,18 +1158,8 @@ def graph_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # exact-operand inputs, and the global Q is the division of two exact
 # BIGINTs (Q_num = m2·Σe_c − ΣK_c², denominator m2²) — no float
 # accumulation anywhere.
-_MODULARITY_ORACLE = """
-WITH pair_counts AS MATERIALIZED (
-  SELECT l1.l_suppkey AS src, l2.l_suppkey AS dst, COUNT(*) AS w
-  FROM lineitem l1
-  JOIN lineitem l2
-    ON l1.l_orderkey = l2.l_orderkey AND l1.l_suppkey <> l2.l_suppkey
-  GROUP BY l1.l_suppkey, l2.l_suppkey
-),
-edges AS MATERIALIZED (
-  SELECT src, dst FROM pair_counts
-  WHERE w > (SELECT CAST(SUM(w) AS DOUBLE) / COUNT(*) FROM pair_counts)
-),
+_MODULARITY_ORACLE = f"""
+WITH {_EDGES_SQL},
 lab AS (
   SELECT e.src, e.dst,
          ss.s_nationkey AS c_src, sd.s_nationkey AS c_dst
@@ -1329,34 +1263,12 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # triangle enumerated ONCE — joined back to the degree table so
 # zero-triangle nodes still appear; nodes of degree < 2 are excluded
 # (coefficient undefined). The division sees two exact BIGINTs.
-_CLUSTERING_ORACLE = """
-WITH pair_counts AS MATERIALIZED (
-  SELECT l1.l_suppkey AS src, l2.l_suppkey AS dst, COUNT(*) AS w
-  FROM lineitem l1
-  JOIN lineitem l2
-    ON l1.l_orderkey = l2.l_orderkey AND l1.l_suppkey <> l2.l_suppkey
-  GROUP BY l1.l_suppkey, l2.l_suppkey
-),
-edges AS MATERIALIZED (
-  SELECT src, dst FROM pair_counts
-  WHERE w > (SELECT CAST(SUM(w) AS DOUBLE) / COUNT(*) FROM pair_counts)
-),
+_CLUSTERING_ORACLE = f"""
+WITH {_EDGES_SQL},
 fwd AS MATERIALIZED (SELECT src, dst FROM edges WHERE src < dst),
-deg AS (SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS degree
-        FROM edges GROUP BY src),
-tri AS MATERIALIZED (
-  SELECT e1.src AS a, e1.dst AS b, e2.dst AS c
-  FROM fwd e1
-  JOIN fwd e2 ON e2.src = e1.dst
-  JOIN fwd e3 ON e3.src = e1.src AND e3.dst = e2.dst
-),
-per_node AS (
-  SELECT node, CAST(COUNT(*) AS BIGINT) AS n_triangles FROM (
-    SELECT a AS node FROM tri
-    UNION ALL SELECT b FROM tri
-    UNION ALL SELECT c FROM tri
-  ) GROUP BY node
-)
+deg AS ({_deg_sql('degree')}),
+{_TRI_SQL},
+{_PER_NODE_SQL}
 SELECT CAST(d.node AS BIGINT) AS suppkey, d.degree,
        COALESCE(p.n_triangles, 0) AS n_triangles,
        CAST(2 * COALESCE(p.n_triangles, 0) AS DOUBLE)
@@ -1534,19 +1446,9 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
 # are derived WITHOUT libm: length(bin(deg)) == floor(log2(deg)) + 1 is
 # pure integer/string arithmetic in both engines, so there is no
 # power-of-two ulp cliff (ln(8)/ln(2) can round below 3).
-_DEGREE_DIST_ORACLE = """
-WITH pair_counts AS MATERIALIZED (
-  SELECT l1.l_suppkey AS src, l2.l_suppkey AS dst, COUNT(*) AS w
-  FROM lineitem l1
-  JOIN lineitem l2
-    ON l1.l_orderkey = l2.l_orderkey AND l1.l_suppkey <> l2.l_suppkey
-  GROUP BY l1.l_suppkey, l2.l_suppkey
-),
-edges AS MATERIALIZED (
-  SELECT src, dst FROM pair_counts
-  WHERE w > (SELECT CAST(SUM(w) AS DOUBLE) / COUNT(*) FROM pair_counts)
-),
-deg AS (SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS d FROM edges GROUP BY src),
+_DEGREE_DIST_ORACLE = f"""
+WITH {_EDGES_SQL},
+deg AS ({_deg_sql('d')}),
 n AS (SELECT COUNT(*) AS c FROM deg),
 hist AS (
   SELECT CAST(length(bin(d)) AS BIGINT) AS bucket,
@@ -1625,17 +1527,7 @@ def _label_prop_oracle() -> str:
 )""")
         labs.append(cur)
     return f"""
-WITH pair_counts AS MATERIALIZED (
-  SELECT l1.l_suppkey AS src, l2.l_suppkey AS dst, COUNT(*) AS w
-  FROM lineitem l1
-  JOIN lineitem l2
-    ON l1.l_orderkey = l2.l_orderkey AND l1.l_suppkey <> l2.l_suppkey
-  GROUP BY l1.l_suppkey, l2.l_suppkey
-),
-edges AS MATERIALIZED (
-  SELECT src, dst FROM pair_counts
-  WHERE w > (SELECT CAST(SUM(w) AS DOUBLE) / COUNT(*) FROM pair_counts)
-),
+WITH {_EDGES_SQL},
 lab0 AS MATERIALIZED (
   SELECT DISTINCT src AS node, src AS lbl FROM edges
 ),{",".join(iters)},
@@ -1781,21 +1673,9 @@ def graph_cc_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Degrees are small integers, so every moment is an exact DECIMAL(38,0)
 # sum — order-free, map-side combinable — and the closing ratio sees
 # exact operands; ROUND(9) absorbs the int128/BigDecimal double ulp.
-_ASSORTATIVITY_ORACLE = """
-WITH pair_counts AS MATERIALIZED (
-  SELECT l1.l_suppkey AS src, l2.l_suppkey AS dst, COUNT(*) AS w
-  FROM lineitem l1
-  JOIN lineitem l2
-    ON l1.l_orderkey = l2.l_orderkey AND l1.l_suppkey <> l2.l_suppkey
-  GROUP BY l1.l_suppkey, l2.l_suppkey
-),
-edges AS MATERIALIZED (
-  SELECT src, dst FROM pair_counts
-  WHERE w > (SELECT CAST(SUM(w) AS DOUBLE) / COUNT(*) FROM pair_counts)
-),
-deg AS MATERIALIZED (
-  SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS d FROM edges GROUP BY src
-),
+_ASSORTATIVITY_ORACLE = f"""
+WITH {_EDGES_SQL},
+deg AS MATERIALIZED ({_deg_sql('d')}),
 m AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS ne,
          SUM(CAST(da.d AS HUGEINT)) AS sx,
@@ -1882,18 +1762,8 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # self; exactly-3 = one step from the exactly-2 frontier minus
 # everything nearer), so H is pure integer arithmetic in micro-units:
 # n1/1 + n2/2 + n3/3 -> n1*1000000 + n2*500000 + n3*333333.
-_HARMONIC_ORACLE = """
-WITH pair_counts AS MATERIALIZED (
-  SELECT l1.l_suppkey AS src, l2.l_suppkey AS dst, COUNT(*) AS w
-  FROM lineitem l1
-  JOIN lineitem l2
-    ON l1.l_orderkey = l2.l_orderkey AND l1.l_suppkey <> l2.l_suppkey
-  GROUP BY l1.l_suppkey, l2.l_suppkey
-),
-edges AS MATERIALIZED (
-  SELECT src, dst FROM pair_counts
-  WHERE w > (SELECT CAST(SUM(w) AS DOUBLE) / COUNT(*) FROM pair_counts)
-),
+_HARMONIC_ORACLE = f"""
+WITH {_EDGES_SQL},
 d1 AS MATERIALIZED (SELECT DISTINCT src AS a, dst AS b FROM edges),
 d2 AS MATERIALIZED (
   SELECT DISTINCT x.a, e.dst AS b
@@ -2029,21 +1899,9 @@ def graph_harmonic(spark: SparkSession, sf_dir: str) -> DataFrame:
 # score CANDIDATE pairs — non-adjacent node pairs sharing at least one
 # neighbor (the open-wedge endpoints) — by deg(u) * deg(v), the
 # preferential-attachment product. Pure integer counts end to end.
-_PREF_ATTACH_ORACLE = """
-WITH pair_counts AS MATERIALIZED (
-  SELECT l1.l_suppkey AS src, l2.l_suppkey AS dst, COUNT(*) AS w
-  FROM lineitem l1
-  JOIN lineitem l2
-    ON l1.l_orderkey = l2.l_orderkey AND l1.l_suppkey <> l2.l_suppkey
-  GROUP BY l1.l_suppkey, l2.l_suppkey
-),
-edges AS MATERIALIZED (
-  SELECT src, dst FROM pair_counts
-  WHERE w > (SELECT CAST(SUM(w) AS DOUBLE) / COUNT(*) FROM pair_counts)
-),
-deg AS MATERIALIZED (
-  SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS d FROM edges GROUP BY src
-),
+_PREF_ATTACH_ORACLE = f"""
+WITH {_EDGES_SQL},
+deg AS MATERIALIZED ({_deg_sql('d')}),
 wedge AS (
   SELECT e1.dst AS u, e2.dst AS v, CAST(COUNT(*) AS BIGINT) AS n_common
   FROM edges e1 JOIN edges e2
@@ -2152,21 +2010,9 @@ def graph_pref_attach(spark: SparkSession, sf_dir: str) -> DataFrame:
 # |V|-grain table, ceil(pct*n/100) index — EXACT rank selection, no
 # interpolated percentile whose closing ulp could flip a floor), so the
 # sweep is scale-invariant with no magic constants at sf1000.
-_RICHCLUB_ORACLE = """
-WITH pair_counts AS MATERIALIZED (
-  SELECT l1.l_suppkey AS src, l2.l_suppkey AS dst, COUNT(*) AS w
-  FROM lineitem l1
-  JOIN lineitem l2
-    ON l1.l_orderkey = l2.l_orderkey AND l1.l_suppkey <> l2.l_suppkey
-  GROUP BY l1.l_suppkey, l2.l_suppkey
-),
-edges AS MATERIALIZED (
-  SELECT src, dst FROM pair_counts
-  WHERE w > (SELECT CAST(SUM(w) AS DOUBLE) / COUNT(*) FROM pair_counts)
-),
-deg AS MATERIALIZED (
-  SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS d FROM edges GROUP BY src
-),
+_RICHCLUB_ORACLE = f"""
+WITH {_EDGES_SQL},
+deg AS MATERIALIZED ({_deg_sql('d')}),
 ranked AS (
   SELECT d, ROW_NUMBER() OVER (ORDER BY d, node) AS rn,
          (SELECT CAST(COUNT(*) AS BIGINT) FROM deg) AS n
@@ -2512,17 +2358,7 @@ def graph_triad_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 _EIGEN_SCALE = 1000000
 
 _EIGEN_ORACLE = f"""
-WITH pair_counts AS MATERIALIZED (
-  SELECT l1.l_suppkey AS src, l2.l_suppkey AS dst, COUNT(*) AS w
-  FROM lineitem l1
-  JOIN lineitem l2
-    ON l1.l_orderkey = l2.l_orderkey AND l1.l_suppkey <> l2.l_suppkey
-  GROUP BY 1, 2
-),
-m AS (SELECT CAST(SUM(w) AS DOUBLE) / COUNT(*) AS mean_w FROM pair_counts),
-edges AS MATERIALIZED (
-  SELECT src, dst FROM pair_counts CROSS JOIN m WHERE CAST(w AS DOUBLE) > mean_w
-),
+WITH {_EDGES_SQL},
 nodes AS MATERIALIZED (SELECT DISTINCT src AS node FROM edges),
 x0 AS (SELECT node, CAST({_EIGEN_SCALE} AS BIGINT) AS x FROM nodes),
 s1 AS (
@@ -2614,18 +2450,8 @@ def graph_eigencentrality(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Walk counts are exact BIGINT path aggregates (two edge joins), and the
 # alpha-weighting collapses to pure integer arithmetic in 1/1000 units:
 # katz_milli = 100*w1 + 10*w2 + w3 — no float until the final /1000.
-_KATZ_ORACLE = """
-WITH pair_counts AS MATERIALIZED (
-  SELECT l1.l_suppkey AS src, l2.l_suppkey AS dst, COUNT(*) AS w
-  FROM lineitem l1
-  JOIN lineitem l2
-    ON l1.l_orderkey = l2.l_orderkey AND l1.l_suppkey <> l2.l_suppkey
-  GROUP BY l1.l_suppkey, l2.l_suppkey
-),
-edges AS MATERIALIZED (
-  SELECT src, dst FROM pair_counts
-  WHERE w > (SELECT CAST(SUM(w) AS DOUBLE) / COUNT(*) FROM pair_counts)
-),
+_KATZ_ORACLE = f"""
+WITH {_EDGES_SQL},
 w1 AS MATERIALIZED (
   SELECT dst AS node, CAST(COUNT(*) AS BIGINT) AS walks1
   FROM edges GROUP BY dst

@@ -48,6 +48,12 @@ def _media(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# DuckDB twin of _media's audio rows (odd doc_id) with the payload length
+# n, shared by the mm_audio_frames and mm_audio_vad oracles.
+_AUDIO_DUCK = """SELECT doc_id, text, CAST(strlen(text) AS BIGINT) AS n
+  FROM documents WHERE doc_id % 2 = 1"""
+
+
 def _require_pil():
     """Import-gate for the optional image codec dependency."""
     try:
@@ -324,10 +330,7 @@ _AUDIO_FRAME_LEN = 32
 _AUDIO_HOP = 16
 
 _AUDIO_FRAMES_ORACLE = f"""
-WITH audio AS (
-  SELECT doc_id, text, CAST(strlen(text) AS BIGINT) AS n
-  FROM documents WHERE doc_id % 2 = 1
-),
+WITH audio AS ({_AUDIO_DUCK}),
 frames AS (
   SELECT a.doc_id, t.i AS frame_idx,
          t.i * {_AUDIO_HOP} AS start_byte,
@@ -838,8 +841,7 @@ _AUDIO_VAD_ORACLE = f"""
 WITH audio AS (
   -- NULL text == NULL payload: no signal, no frames, no output row
   -- (the mm_phash NULL-payload lesson, excluded identically both sides)
-  SELECT doc_id, text, CAST(strlen(text) AS BIGINT) AS n
-  FROM documents WHERE doc_id % 2 = 1 AND text IS NOT NULL
+  {_AUDIO_DUCK} AND text IS NOT NULL
 ),
 frames AS (
   SELECT a.doc_id, t.i AS frame_idx,

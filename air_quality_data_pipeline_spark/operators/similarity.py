@@ -65,24 +65,29 @@ def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# DuckDB twins of _vectors (plain and with each vector's label), and of the
+# per-query top-k rank over a ``scored`` (qid, vec_id, cosine) CTE: cosine
+# descending, vec_id breaking ties.
+_VECTORS_DUCK = """SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec
+  FROM embeddings"""
+_LABELED_VECTORS_DUCK = """SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec
+  FROM embeddings"""
+_RANKED_DUCK = """SELECT qid, vec_id, cosine,
+         row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, vec_id) AS rnk
+  FROM scored"""
+
+
 # --- llm_sim_search: brute-force cosine top-k --------------------------------
 
 _SIM_SEARCH_ORACLE = f"""
-WITH v AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec
-  FROM embeddings
-),
+WITH v AS ({_VECTORS_DUCK}),
 q AS (SELECT vec_id AS qid, vec AS qvec FROM v WHERE vec_id < 10),
 scored AS (
   SELECT q.qid, v.vec_id,
          {cosine_similarity_duckdb('q.qvec', 'v.vec', DIMS)} AS cosine
   FROM q JOIN v ON v.vec_id >= 10
 ),
-ranked AS (
-  SELECT qid, vec_id, cosine,
-         row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, vec_id) AS rnk
-  FROM scored
-)
+ranked AS ({_RANKED_DUCK})
 SELECT qid, vec_id, cosine, rnk FROM ranked WHERE rnk <= 5
 """
 
@@ -115,10 +120,7 @@ def llm_sim_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- llm_emb_neardup: cosine near-duplicate pairs ----------------------------
 
 _EMB_NEARDUP_ORACLE = f"""
-WITH base AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec
-  FROM embeddings WHERE vec_id < 150
-),
+WITH base AS ({_VECTORS_DUCK} WHERE vec_id < 150),
 corpus AS (
   SELECT vec_id, vec FROM base
   UNION ALL
@@ -213,10 +215,7 @@ def llm_emb_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _KM_ASSIGN_DUCK = f"""
-v AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec
-  FROM embeddings
-),
+v AS ({_VECTORS_DUCK}),
 cent AS (SELECT vec_id AS cid, vec AS cvec FROM v WHERE vec_id < {{k}}),
 assign_scored AS (
   SELECT v.vec_id, cent.cid,
@@ -285,10 +284,7 @@ def _kmeans_train_oracle(k: int, iters: int) -> str:
     i+1's seeds. Unrolling keeps the oracle plain ANSI SQL."""
     cos = cosine_similarity_duckdb
     sql = f"""
-WITH v AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec
-  FROM embeddings
-),
+WITH v AS ({_VECTORS_DUCK}),
 cent0 AS (SELECT vec_id AS cid, vec AS cvec FROM v WHERE vec_id < {k})"""
     for i in range(1, iters + 1):
         sql += f""",
@@ -368,10 +364,7 @@ def llm_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _IVF_CTES = f"""
-WITH v AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec
-  FROM embeddings
-),
+WITH v AS ({_VECTORS_DUCK}),
 cent AS (SELECT vec_id AS cid, vec AS cvec FROM v WHERE vec_id < {_N_CENT}),
 assign_scored AS (
   SELECT v.vec_id, cent.cid,
@@ -407,12 +400,8 @@ scored AS (
 
 _IVF_ORACLE = (
     _IVF_CTES
-    + """
-SELECT qid, vec_id, cosine, rnk FROM (
-  SELECT qid, vec_id, cosine,
-         row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, vec_id) AS rnk
-  FROM scored
-) WHERE rnk <= 5
+    + f"""
+SELECT qid, vec_id, cosine, rnk FROM ({_RANKED_DUCK}) WHERE rnk <= 5
 """
 )
 
@@ -621,10 +610,7 @@ def _lsh_band_expr_duck(g: int) -> str:
 
 
 _EMB_LSH_ORACLE = f"""
-WITH base AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec
-  FROM embeddings WHERE vec_id < {_LSH_CAP}
-),
+WITH base AS ({_VECTORS_DUCK} WHERE vec_id < {_LSH_CAP}),
 corpus AS (
   SELECT vec_id, vec FROM base
   UNION ALL
@@ -736,8 +722,7 @@ _SEM_NEAR_TAU = 0.3  # member counts as a semantic duplicate of the rep
 
 _SEMANTIC_DEDUP_ORACLE = f"""
 WITH v AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec
-  FROM embeddings
+  {_VECTORS_DUCK}
   UNION ALL
   SELECT vec_id + 1000000 AS vec_id, {_PERTURB_DUCK} AS vec
   FROM embeddings WHERE vec_id % 4 = 1
@@ -862,10 +847,7 @@ _QUANT_AMAX_DUCK = (
 )
 
 _EMB_QUANTIZE_ORACLE = f"""
-WITH v AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec
-  FROM embeddings
-),
+WITH v AS ({_VECTORS_DUCK}),
 a AS (
   SELECT vec_id, vec, {_QUANT_AMAX_DUCK} AS amax FROM v
 ),
@@ -925,10 +907,7 @@ def llm_emb_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 _HARD_NEG_QUERIES = 20
 
 _HARD_NEG_ORACLE = f"""
-WITH v AS (
-  SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec
-  FROM embeddings
-),
+WITH v AS ({_LABELED_VECTORS_DUCK}),
 q AS (SELECT vec_id AS qid, label AS qlabel, vec AS qvec FROM v
       WHERE vec_id < {_HARD_NEG_QUERIES}),
 scored AS (
@@ -1012,10 +991,7 @@ _MMR_CANDS = 8
 _MMR_PICKS = 3
 
 _MMR_ORACLE = f"""
-WITH v AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec
-  FROM embeddings
-),
+WITH v AS ({_VECTORS_DUCK}),
 q AS (SELECT vec_id AS qid, vec AS qvec FROM v WHERE vec_id < 10),
 scored AS (
   SELECT q.qid, v.vec_id, v.vec,
@@ -1448,10 +1424,7 @@ def llm_emb_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KNN_K = 3
 
 _KNN_ORACLE = f"""
-WITH v AS (
-  SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec
-  FROM embeddings
-),
+WITH v AS ({_LABELED_VECTORS_DUCK}),
 pairs AS (
   SELECT a.vec_id AS qid, a.label, b.vec_id AS nid,
          {cosine_similarity_duckdb('a.vec', 'b.vec', DIMS)} AS cosine
@@ -1633,11 +1606,8 @@ def llm_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 # every member's squared distance to it accumulates over EXACT quantized
 # integer terms, so the argmin (min over a (dist, vec_id) struct) is
 # bit-deterministic in both engines.
-_MEDOID_ORACLE = """
-WITH v AS (
-  SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec
-  FROM embeddings
-),
+_MEDOID_ORACLE = f"""
+WITH v AS ({_LABELED_VECTORS_DUCK}),
 e AS (
   SELECT vec_id, label, i AS dim, vec[i] AS val
   FROM v, UNNEST(range(1, 65)) AS t(i)
@@ -1757,10 +1727,7 @@ kw_top AS (
          row_number() OVER (ORDER BY kw_score DESC, doc_id) AS kw_rank
   FROM (SELECT * FROM kw ORDER BY kw_score DESC, doc_id LIMIT {_RRF_M}) t
 ),
-v AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec
-  FROM embeddings
-),
+v AS ({_VECTORS_DUCK}),
 q AS (SELECT vec AS qvec FROM v WHERE vec_id = 0),
 vec_top AS (
   SELECT vec_id, cosine,

@@ -22,15 +22,16 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
-from ..session import apply_engine_conf
+from ..session import scoped_view
 from ..tables import table
 
 # --- the SQL layer -----------------------------------------------------------
 
 
 def _views(spark: SparkSession, sf_dir: str, *names: str) -> None:
+    """Register each fixture table as a query-scoped temp view of its name."""
     for n in names:
-        table(spark, sf_dir, n).createOrReplaceTempView(n)
+        table(spark, sf_dir, n).createOrReplaceTempView(scoped_view(spark, n))
 
 
 _SQL_Q1 = """
@@ -986,12 +987,12 @@ GROUP BY anc.part
 """
 
 
-# One child session per SparkContext for the raised recursion limit —
-# created lazily, reused across invocations (see sql_recursive docstring).
-_RECURSIVE_CHILD: dict[str, SparkSession] = {}
-
-
-@register("sql_recursive", oracle=_SQL_RECURSIVE, tags=("sql", "recursive"))
+@register(
+    "sql_recursive",
+    oracle=_SQL_RECURSIVE,
+    tags=("sql", "recursive"),
+    confs={"spark.sql.cteRecursionRowLimit": str(10**9)},
+)
 def sql_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recursive CTE (WITH RECURSIVE, new in Spark 4): ancestor-chain walk
     over the part hierarchy parent(k) = floor(k/2) — the BOM-explosion /
@@ -1015,23 +1016,14 @@ def sql_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     total is still enforced: the WHERE node > 1 step strictly halves the
     key, so termination is structural, not limit-dependent.
 
-    The raised limit is scoped to a CHILD session (same SparkContext, own
-    SQLConf): the returned DataFrame executes under the child's conf, so
-    the shared session keeps the 1M default guard for every other
-    recursive query in the same driver pass (ADVICE r5). The child is
-    memoized per applicationId — one SessionState for the process's
-    lifetime, not one per invocation (a long driver pass calls this
-    builder many times)."""
-    app_id = spark.sparkContext.applicationId
-    child = _RECURSIVE_CHILD.get(app_id)
-    if child is None:
-        _RECURSIVE_CHILD.clear()  # a stale entry's context is gone
-        child = spark.newSession()
-        apply_engine_conf(child)
-        child.conf.set("spark.sql.cteRecursionRowLimit", str(1_000_000_000))
-        _RECURSIVE_CHILD[app_id] = child
-    _views(child, sf_dir, "part")
-    return child.sql(_SQL_RECURSIVE)
+    The raised limit is a declared query conf in the caller's session, so
+    every conf the caller sets reaches this query too. Spark reads the
+    limit when the query executes, and the next registered build resets
+    it to the 1M default, which then guards every other recursive query
+    in the same driver pass (ADVICE r5): materialize this DataFrame before
+    building the next query."""
+    _views(spark, sf_dir, "part")
+    return spark.sql(_SQL_RECURSIVE)
 
 
 # --- mv_incr_agg: incremental materialized-view maintenance ------------------

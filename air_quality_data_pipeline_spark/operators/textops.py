@@ -326,13 +326,15 @@ def llm_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- llm_tfidf ----------------------------------------------------------------
 
-_TFIDF_ORACLE = """
+# Term frequency per (doc_id, token) over a ``tok`` CTE; the llm_bm25_score
+# oracle counts the same cells.
+_TF_DUCK = """SELECT doc_id, token, COUNT(*) AS tf FROM tok GROUP BY doc_id, token"""
+
+_TFIDF_ORACLE = f"""
 WITH tok AS (
   SELECT doc_id, UNNEST(string_split(text, ' ')) AS token FROM documents
 ),
-tf AS (
-  SELECT doc_id, token, COUNT(*) AS tf FROM tok GROUP BY doc_id, token
-),
+tf AS ({_TF_DUCK}),
 df AS (
   SELECT token, COUNT(DISTINCT doc_id) AS doc_freq FROM tok GROUP BY token
 ),
@@ -1299,6 +1301,13 @@ def llm_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- llm_bpe_pair_counts: one BPE-merge iteration's statistics ---------------
 
+# Word frequencies of the corpus (words of 2+ chars), the vocabulary both
+# BPE oracles pair characters over.
+_VOCAB_DUCK = """SELECT t AS word, COUNT(*) AS freq
+  FROM documents, UNNEST(string_split(text, ' ')) AS u(t)
+  WHERE len(t) >= 2
+  GROUP BY t"""
+
 # The tokenizer-training primitive: BPE training repeatedly (1) counts
 # adjacent symbol pairs across the corpus vocabulary weighted by word
 # frequency, (2) merges the argmax pair. This operator is step (1) — the
@@ -1307,12 +1316,7 @@ def llm_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BPE_TOP = 20
 
 _BPE_ORACLE = f"""
-WITH vocab AS (
-  SELECT t AS word, COUNT(*) AS freq
-  FROM documents, UNNEST(string_split(text, ' ')) AS u(t)
-  WHERE len(t) >= 2
-  GROUP BY t
-),
+WITH vocab AS ({_VOCAB_DUCK}),
 pairs AS (
   SELECT substr(word, i, 2) AS pair, freq
   FROM vocab, UNNEST(range(1, len(word))) AS r(i)
@@ -1679,12 +1683,7 @@ def llm_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BPE2_TOP = 20
 
 _BPE2_ORACLE = f"""
-WITH vocab AS (
-  SELECT t AS word, COUNT(*) AS freq
-  FROM documents, UNNEST(string_split(text, ' ')) AS u(t)
-  WHERE len(t) >= 2
-  GROUP BY t
-),
+WITH vocab AS ({_VOCAB_DUCK}),
 charpairs AS (
   SELECT substr(word, i, 2) AS pair, CAST(SUM(freq) AS BIGINT) AS cnt
   FROM vocab, UNNEST(range(1, len(word))) AS r(i)
@@ -2044,7 +2043,7 @@ _BM25_ORACLE = f"""
 WITH tok AS (
   SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents
 ),
-tf AS (SELECT doc_id, token, COUNT(*) AS tf FROM tok GROUP BY doc_id, token),
+tf AS ({_TF_DUCK}),
 dfq AS (SELECT token, COUNT(*) AS doc_freq FROM tf GROUP BY token),
 stats AS (
   SELECT COUNT(*) AS n_docs,
@@ -2287,6 +2286,12 @@ def llm_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- llm_cdc_chunk: content-defined chunking ---------------------------------
 
+# Each document's space-split token array and its length, the base the
+# llm_cdc_chunk, llm_span_mask and llm_sft_format oracles slice.
+_TOKEN_ARRAY_DUCK = """SELECT doc_id, string_split(text, ' ') AS arr,
+         len(string_split(text, ' ')) AS n
+  FROM documents"""
+
 # Fixed-size chunking (llm_doc_chunk) breaks dedup the moment one token
 # shifts every boundary downstream; CONTENT-DEFINED chunking cuts where a
 # rolling fingerprint of the local content hits a criterion, so an edit
@@ -2302,10 +2307,7 @@ def llm_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CDC_MOD = 64
 
 _CDC_ORACLE = f"""
-WITH base AS (
-  SELECT doc_id, string_split(text, ' ') AS arr, len(string_split(text, ' ')) AS n
-  FROM documents
-),
+WITH base AS ({_TOKEN_ARRAY_DUCK}),
 b AS (
   SELECT doc_id, arr, n,
          CASE WHEN n >= 5 THEN
@@ -2554,11 +2556,7 @@ _SPAN_LEN = 3
 _SPAN_MOD = 5  # mask spans hashing to 0 (mod 5) ≈ 20%
 
 _SPAN_MASK_ORACLE = f"""
-WITH base AS (
-  SELECT doc_id, string_split(text, ' ') AS arr,
-         len(string_split(text, ' ')) AS n
-  FROM documents
-),
+WITH base AS ({_TOKEN_ARRAY_DUCK}),
 m AS (
   SELECT doc_id, n,
          list_transform(range(1, n + 1), i ->
@@ -2797,11 +2795,7 @@ _SFT_PROMPT_TOKENS = 16
 _SFT_SYSTEM = "You are a helpful assistant."
 
 _SFT_FORMAT_ORACLE = f"""
-WITH base AS (
-  SELECT doc_id, string_split(text, ' ') AS arr,
-         len(string_split(text, ' ')) AS n
-  FROM documents
-),
+WITH base AS ({_TOKEN_ARRAY_DUCK}),
 split_doc AS (
   SELECT doc_id, n,
          array_to_string(list_slice(arr, 1, {_SFT_PROMPT_TOKENS}), ' ') AS prompt,
@@ -4211,6 +4205,14 @@ def llm_bleu(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- llm_rater_kappa: inter-rater agreement between two quality gates ----------
 
+# Per-document token, distinct-token and char counts: the inputs of the
+# rater gates in the llm_rater_kappa and llm_fleiss_kappa oracles.
+_GATE_STATS_DUCK = """SELECT doc_id,
+         len(string_split(text, ' ')) AS n_tok,
+         len(list_distinct(string_split(text, ' '))) AS n_uniq,
+         strlen(text) AS n_chars
+  FROM documents WHERE text IS NOT NULL"""
+
 # When two independent quality raters (heuristic filters, model
 # classifiers, human annotators) label the same corpus, raw percent
 # agreement overstates consensus — both raters saying "keep" to almost
@@ -4222,14 +4224,8 @@ def llm_bleu(spark: SparkSession, sf_dir: str) -> DataFrame:
 # confusion table is exact, and kappa's closing ratio
 # (N*(n11+n00) - (a1*b1 + a0*b0)) / (N^2 - (a1*b1 + a0*b0)) sees exact
 # BIGINT operands — ROUND(9) only for the final division.
-_RATER_KAPPA_ORACLE = """
-WITH m AS (
-  SELECT doc_id,
-         len(string_split(text, ' ')) AS n_tok,
-         len(list_distinct(string_split(text, ' '))) AS n_uniq,
-         strlen(text) AS n_chars
-  FROM documents WHERE text IS NOT NULL
-),
+_RATER_KAPPA_ORACLE = f"""
+WITH m AS ({_GATE_STATS_DUCK}),
 r AS (
   SELECT doc_id,
          CASE WHEN n_tok >= 20 AND n_uniq * 10 >= 3 * n_tok THEN 1 ELSE 0 END AS ra,
@@ -5250,14 +5246,8 @@ def llm_boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
 # integer-arithmetic gates per document (lexical diversity, length
 # shape, vocabulary richness), so every per-item category count is an
 # exact BIGINT and kappa's closing ratio divides exact operands.
-_FLEISS_ORACLE = """
-WITH m AS (
-  SELECT doc_id,
-         len(string_split(text, ' ')) AS n_tok,
-         len(list_distinct(string_split(text, ' '))) AS n_uniq,
-         strlen(text) AS n_chars
-  FROM documents WHERE text IS NOT NULL
-),
+_FLEISS_ORACLE = f"""
+WITH m AS ({_GATE_STATS_DUCK}),
 r AS (
   SELECT doc_id,
          CAST(CASE WHEN n_tok >= 20 AND n_uniq * 10 >= 3 * n_tok

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..functions.exact import exact_round, exact_round_sql, exact_sum, exact_sum_sql
 from ..registry import register
-from ..session import scoped_persist
+from ..session import scoped_persist, scoped_view
 from ..tables import table
 
 # one fully-covered fixture day; the grid is FIXED-SIZE (20 users x 1440
@@ -500,7 +500,7 @@ def ts_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     independently — 1000 executors each smooth their own keys. Power-of-two
     weights + a shared left-associative expression make the floats
     bit-identical across engines (no decimal detour needed)."""
-    table(spark, sf_dir, "events").createOrReplaceTempView("events")
+    table(spark, sf_dir, "events").createOrReplaceTempView(scoped_view(spark, "events"))
     return spark.sql(_EWMA_SQL)
 
 
@@ -782,7 +782,7 @@ def ts_trend_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     data). 1000 executors each fit their own keys; no state, no
     iteration. The identical SQL text runs in DuckDB — float parity by
     construction (shared expression tree, ts_ewma note)."""
-    table(spark, sf_dir, "events").createOrReplaceTempView("events")
+    table(spark, sf_dir, "events").createOrReplaceTempView(scoped_view(spark, "events"))
     return spark.sql(_TREND_SLOPE_SQL)
 
 
@@ -1448,6 +1448,13 @@ def ts_theilsen(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- ts_changepoint: CUSUM argmax change-point per series ---------------------
 
+# Daily (event_type, 'YYYY-MM-DD') cells of floored micro-unit values, the
+# BIGINT series the ts_changepoint, ts_drawdown and ts_peak_detect oracles
+# scan.
+_DAILY_X_DUCK = """SELECT event_type, strftime(CAST(ts AS DATE), '%Y-%m-%d') AS day,
+         CAST(SUM(CAST(floor(value * 1000000.0) AS BIGINT)) AS BIGINT) AS x
+  FROM events GROUP BY event_type, strftime(CAST(ts AS DATE), '%Y-%m-%d')"""
+
 # Offline change-point estimation (the "when did the level shift" question
 # behind incident timelines and A/B launch audits): for each event_type's
 # daily-volume series x_1..x_n, the CUSUM statistic
@@ -1458,12 +1465,8 @@ def ts_theilsen(spark: SparkSession, sf_dir: str) -> DataFrame:
 # and value ≤ ~600, tot_micro reaches ~1.2e16 at sf100, keeping S under
 # 4e17, well inside int64; the cliff (tot_micro > 3e17) is three decades
 # past that.
-_CHANGEPOINT_ORACLE = """
-WITH daily AS (
-  SELECT event_type, strftime(CAST(ts AS DATE), '%Y-%m-%d') AS day,
-         CAST(SUM(CAST(floor(value * 1000000.0) AS BIGINT)) AS BIGINT) AS x
-  FROM events GROUP BY event_type, strftime(CAST(ts AS DATE), '%Y-%m-%d')
-),
+_CHANGEPOINT_ORACLE = f"""
+WITH daily AS ({_DAILY_X_DUCK}),
 cum AS (
   SELECT event_type, day, x,
          CAST(ROW_NUMBER() OVER w AS BIGINT) AS k,
@@ -1558,12 +1561,8 @@ def ts_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 # per event_type; drawdown_k = runmax(cum)_k − cum_k; the answer is the
 # worst (largest) drawdown with its trough day and the peak day it fell
 # from. All BIGINT — same overflow envelope as ts_changepoint.
-_DRAWDOWN_ORACLE = """
-WITH daily AS (
-  SELECT event_type, strftime(CAST(ts AS DATE), '%Y-%m-%d') AS day,
-         CAST(SUM(CAST(floor(value * 1000000.0) AS BIGINT)) AS BIGINT) AS x
-  FROM events GROUP BY event_type, strftime(CAST(ts AS DATE), '%Y-%m-%d')
-),
+_DRAWDOWN_ORACLE = f"""
+WITH daily AS ({_DAILY_X_DUCK}),
 curve AS (
   SELECT event_type, day, x,
          CAST(SUM(x) OVER w AS BIGINT) AS cum
@@ -1659,12 +1658,8 @@ def ts_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 # comparison is lag/lead on the bounded (type, day) cell table; BIGINT
 # micro-units end to end, so peak membership is bit-identical in both
 # engines (no float tie ambiguity).
-_PEAK_ORACLE = """
-WITH daily AS (
-  SELECT event_type, strftime(CAST(ts AS DATE), '%Y-%m-%d') AS day,
-         CAST(SUM(CAST(floor(value * 1000000.0) AS BIGINT)) AS BIGINT) AS x
-  FROM events GROUP BY event_type, strftime(CAST(ts AS DATE), '%Y-%m-%d')
-),
+_PEAK_ORACLE = f"""
+WITH daily AS ({_DAILY_X_DUCK}),
 nb AS (
   SELECT event_type, day, x,
          LAG(x)  OVER w AS prev_x,
@@ -1727,18 +1722,21 @@ def ts_peak_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- ts_markov_transitions: event-type transition matrix ----------------------
 
+# Each event with its user's previous event type (ties on ts broken by
+# event_id), shared by the ts_markov_transitions and ts_entropy_rate
+# oracles.
+_TRANSITIONS_DUCK = """SELECT user_id, event_type,
+         LAG(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_type
+  FROM events"""
+
 # The first-order Markov view of user behavior: for every consecutive pair
 # of events within a user's timeline, count (prev_type -> next_type) and
 # the conditional P(next|prev). Session-path analytics (what follows a
 # "view"?), bot signatures (self-loops), and the input grain for
 # graph_reciprocity's directed graph. The per-user ordering ties on ts are
 # broken by event_id, so lag() is a total order in both engines.
-_MARKOV_ORACLE = """
-WITH seq AS (
-  SELECT user_id, event_type,
-         LAG(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_type
-  FROM events
-),
+_MARKOV_ORACLE = f"""
+WITH seq AS ({_TRANSITIONS_DUCK}),
 pairs AS (
   SELECT prev_type, event_type AS next_type, COUNT(*) AS n_trans
   FROM seq WHERE prev_type IS NOT NULL
@@ -2060,6 +2058,15 @@ def ts_decay_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- ts_holt: Holt double exponential smoothing (level + trend) ---------------
 
+
+def _daily_micro_duck(col: str) -> str:
+    """Daily (event_type, DATE) cells: the exact DECIMAL sum of the day's
+    values, floored to micro-units as BIGINT column ``col``."""
+    return f"""SELECT event_type, CAST(ts AS DATE) AS day,
+         CAST(floor(SUM(CAST(value AS DECIMAL(18, 9))) * 1000000) AS BIGINT) AS {col}
+  FROM events GROUP BY event_type, CAST(ts AS DATE)"""
+
+
 # ts_forecast_baseline carries naive/seasonal-naive/drift;
 # ts_ewma smooths level only. Holt's linear-trend method is the next rung
 # every capacity-planning pipeline climbs: level and trend recursions
@@ -2076,12 +2083,8 @@ def ts_decay_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 # identical recursion as a RECURSIVE CTE over the day index instead —
 # the Spark side's aggregate() fold is a true left fold and needs no
 # workaround.
-_HOLT_ORACLE = """
-WITH RECURSIVE daily AS (
-  SELECT event_type, CAST(ts AS DATE) AS day,
-         CAST(floor(SUM(CAST(value AS DECIMAL(18, 9))) * 1000000) AS BIGINT) AS v
-  FROM events GROUP BY event_type, CAST(ts AS DATE)
-),
+_HOLT_ORACLE = f"""
+WITH RECURSIVE daily AS ({_daily_micro_duck('v')}),
 idx AS (
   SELECT event_type, v,
          ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY day) AS k
@@ -2167,12 +2170,8 @@ def ts_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the flag can never flip on a double ulp (the ts_seasonal 3-sigma-gate
 # recipe). Only the *reported* band edges are doubles, ROUND(6) from
 # exact operands.
-_BOLLINGER_ORACLE = """
-WITH daily AS (
-  SELECT event_type, CAST(ts AS DATE) AS day,
-         CAST(floor(SUM(CAST(value AS DECIMAL(18, 9))) * 1000000) AS BIGINT) AS v
-  FROM events GROUP BY event_type, CAST(ts AS DATE)
-),
+_BOLLINGER_ORACLE = f"""
+WITH daily AS ({_daily_micro_duck('v')}),
 w AS (
   SELECT event_type, day, v,
          SUM(CAST(v AS HUGEINT)) OVER w7 AS s1,
@@ -2256,12 +2255,8 @@ def ts_bollinger(spark: SparkSession, sf_dir: str) -> DataFrame:
 # double, ROUND(6) from exact operands; the zero-movement window
 # (gain_sum = loss_sum = 0) is pinned to the 50.0 convention in both
 # engines.
-_RSI_ORACLE = """
-WITH daily AS (
-  SELECT event_type, CAST(ts AS DATE) AS day,
-         CAST(floor(SUM(CAST(value AS DECIMAL(18, 9))) * 1000000) AS BIGINT) AS v
-  FROM events GROUP BY event_type, CAST(ts AS DATE)
-),
+_RSI_ORACLE = f"""
+WITH daily AS ({_daily_micro_duck('v')}),
 d AS (
   SELECT event_type, day,
          v - lag(v) OVER (PARTITION BY event_type ORDER BY day) AS delta
@@ -2707,11 +2702,7 @@ def ts_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
 _STOCH_WIN = 14
 
 _STOCH_ORACLE = f"""
-WITH daily AS (
-  SELECT event_type, CAST(ts AS DATE) AS day,
-         CAST(floor(SUM(CAST(value AS DECIMAL(18, 9))) * 1000000) AS BIGINT) AS vm
-  FROM events GROUP BY event_type, CAST(ts AS DATE)
-),
+WITH daily AS ({_daily_micro_duck('vm')}),
 env AS (
   SELECT event_type, day, vm,
          MIN(vm) OVER w AS lo, MAX(vm) OVER w AS hi,
@@ -2901,11 +2892,7 @@ def ts_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
 _VOL_WIN = 7
 
 _VOLATILITY_ORACLE = f"""
-WITH daily AS (
-  SELECT event_type, CAST(ts AS DATE) AS day,
-         CAST(floor(SUM(CAST(value AS DECIMAL(18, 9))) * 1000000) AS BIGINT) AS vm
-  FROM events GROUP BY event_type, CAST(ts AS DATE)
-),
+WITH daily AS ({_daily_micro_duck('vm')}),
 ret AS (
   SELECT event_type, day, vm,
          CASE WHEN vm > 0 AND lag(vm) OVER w > 0
@@ -3065,12 +3052,8 @@ def ts_outages(spark: SparkSession, sf_dir: str) -> DataFrame:
 # double sum of per-day ratios would be partitioning-dependent).
 # Zero-denominator days (forecast and actual both 0) pin a NULL term and
 # drop from the sMAPE count in both engines.
-_FC_EVAL_ORACLE = """
-WITH daily AS (
-  SELECT event_type, CAST(ts AS DATE) AS day,
-         CAST(floor(SUM(CAST(value AS DECIMAL(18, 9))) * 1000000) AS BIGINT) AS vm
-  FROM events GROUP BY event_type, CAST(ts AS DATE)
-),
+_FC_EVAL_ORACLE = f"""
+WITH daily AS ({_daily_micro_duck('vm')}),
 f AS (
   SELECT event_type, day, vm,
          lag(vm, 7) OVER (PARTITION BY event_type ORDER BY day) AS fc
@@ -3149,6 +3132,12 @@ def ts_forecast_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- ts_sax: symbolic aggregate approximation of daily series ------------------
 
+# Daily (event_type, DATE d) cells of floored micro-unit values qv, shared
+# by the ts_sax, ts_lag_features and ts_crossover oracles.
+_DAILY_QV_DUCK = """SELECT event_type, CAST(ts AS DATE) AS d,
+         CAST(SUM(CAST(floor(value * 1000000.0) AS BIGINT)) AS BIGINT) AS qv
+  FROM events GROUP BY 1, 2"""
+
 # SAX (Lin et al.) turns a numeric series into a short symbol string so
 # similarity search / motif mining over millions of series becomes string
 # algebra. Pipeline: daily totals (exact micro-integers) -> PAA over
@@ -3159,11 +3148,7 @@ def ts_forecast_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SAX_BP = ("-0.6744897501960817", "0.6744897501960817")
 
 _SAX_ORACLE = f"""
-WITH daily AS (
-  SELECT event_type, CAST(ts AS DATE) AS d,
-         CAST(SUM(CAST(floor(value * 1000000.0) AS BIGINT)) AS BIGINT) AS qv
-  FROM events GROUP BY 1, 2
-),
+WITH daily AS ({_DAILY_QV_DUCK}),
 idx AS (
   SELECT event_type, d, qv,
          CAST(d - DATE '2024-01-01' AS BIGINT) // 4 AS frame
@@ -3298,11 +3283,7 @@ _LAGFEAT_STD_SQL = """sqrt(greatest(0.0,
                           / CAST(r_n AS DOUBLE)) / (CAST(r_n AS DOUBLE) - 1.0)))
                / 1000000.0"""
 _LAGFEAT_ORACLE = f"""
-WITH daily AS (
-  SELECT event_type, CAST(ts AS DATE) AS d,
-         CAST(SUM(CAST(floor(value * 1000000.0) AS BIGINT)) AS BIGINT) AS qv
-  FROM events GROUP BY 1, 2
-),
+WITH daily AS ({_DAILY_QV_DUCK}),
 feat AS (
   SELECT event_type, d, qv,
          CAST(d - DATE '2024-01-01' AS BIGINT) % 7 AS day_cycle,
@@ -3393,6 +3374,17 @@ def ts_lag_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- ts_crossover: fast/slow moving-average crossing detector ------------------
 
+# The crossover flags over a ``sig`` (event_type, d, fast, slow) relation.
+# Both engines run this text: the ts_crossover builder's Spark SQL and its
+# DuckDB oracle.
+_XO_FLAGGED_SQL = """SELECT event_type, d,
+         ROUND(fast / 1000000.0, 9) AS fast_v,
+         ROUND(slow / 1000000.0, 9) AS slow_v,
+         CASE WHEN fast >= slow THEN 1 ELSE -1 END AS signal,
+         lag(CASE WHEN fast >= slow THEN 1 ELSE -1 END)
+           OVER (PARTITION BY event_type ORDER BY d) AS prev_signal
+  FROM sig"""
+
 # The classic regime-change event ("golden cross"): a fast EWMA crossing a
 # slow rolling mean flips the trend signal; only the flip rows are
 # emitted. The fast side reuses the ts_ewma bit-exactness recipe — all
@@ -3419,11 +3411,7 @@ _XO_NUM, _XO_DEN = _xover_ewma(
 )
 
 _XOVER_ORACLE = f"""
-WITH daily AS (
-  SELECT event_type, CAST(ts AS DATE) AS d,
-         CAST(SUM(CAST(floor(value * 1000000.0) AS BIGINT)) AS BIGINT) AS qv
-  FROM events GROUP BY 1, 2
-),
+WITH daily AS ({_DAILY_QV_DUCK}),
 sig AS (
   SELECT event_type, d, qv,
          ({_XO_NUM}) / ({_XO_DEN}) AS fast,
@@ -3434,15 +3422,7 @@ sig AS (
                   AS DOUBLE) AS slow
   FROM daily
 ),
-flagged AS (
-  SELECT event_type, d,
-         ROUND(fast / 1000000.0, 9) AS fast_v,
-         ROUND(slow / 1000000.0, 9) AS slow_v,
-         CASE WHEN fast >= slow THEN 1 ELSE -1 END AS signal,
-         lag(CASE WHEN fast >= slow THEN 1 ELSE -1 END)
-           OVER (PARTITION BY event_type ORDER BY d) AS prev_signal
-  FROM sig
-)
+flagged AS ({_XO_FLAGGED_SQL})
 SELECT event_type, CAST(d AS VARCHAR) AS d, fast_v, slow_v, signal,
        CASE WHEN signal = 1 THEN 'golden' ELSE 'death' END AS cross_type
 FROM flagged
@@ -3468,7 +3448,7 @@ def ts_crossover(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("qv")
     )
-    daily.createOrReplaceTempView("xo_daily")
+    daily.createOrReplaceTempView(scoped_view(spark, "xo_daily"))
     num, den = _xover_ewma(
         lambda k: f"lag(CAST(qv AS DOUBLE), {k}) {_XO_WIN}"
     )
@@ -3485,15 +3465,7 @@ def ts_crossover(spark: SparkSession, sf_dir: str) -> DataFrame:
                                          ROW) AS DOUBLE) AS slow
           FROM xo_daily
         ),
-        flagged AS (
-          SELECT event_type, d,
-                 ROUND(fast / 1000000.0, 9) AS fast_v,
-                 ROUND(slow / 1000000.0, 9) AS slow_v,
-                 CASE WHEN fast >= slow THEN 1 ELSE -1 END AS signal,
-                 lag(CASE WHEN fast >= slow THEN 1 ELSE -1 END)
-                   OVER (PARTITION BY event_type ORDER BY d) AS prev_signal
-          FROM sig
-        )
+        flagged AS ({_XO_FLAGGED_SQL})
         SELECT event_type, CAST(d AS STRING) AS d, fast_v, slow_v, signal,
                CASE WHEN signal = 1 THEN 'golden' ELSE 'death' END AS cross_type
         FROM flagged
@@ -3503,6 +3475,14 @@ def ts_crossover(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- ts_hurst: rescaled-range (R/S) long-memory exponent ------------------------
+
+# Hourly (event_type, hour index from 2024-01-01) cells of floored
+# micro-unit values, shared by the ts_hurst and ts_spectral_power oracles.
+_HOURLY_DUCK = """SELECT event_type,
+         CAST(CAST(ts AS DATE) - DATE '2024-01-01' AS BIGINT) * 24
+           + CAST(hour(ts) AS BIGINT) AS hidx,
+         CAST(SUM(CAST(floor(value * 1000000.0) AS BIGINT)) AS BIGINT) AS v
+  FROM events GROUP BY 1, 2"""
 
 # Does the series trend-persist (H > 0.5), mean-revert (H < 0.5), or
 # walk randomly (H = 0.5)? Classical Hurst R/S analysis over the hourly
@@ -3515,13 +3495,7 @@ def ts_crossover(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LN2 = "0.6931471805599454"
 
 _HURST_ORACLE = f"""
-WITH hourly AS (
-  SELECT event_type,
-         CAST(CAST(ts AS DATE) - DATE '2024-01-01' AS BIGINT) * 24
-           + CAST(hour(ts) AS BIGINT) AS hidx,
-         CAST(SUM(CAST(floor(value * 1000000.0) AS BIGINT)) AS BIGINT) AS v
-  FROM events GROUP BY 1, 2
-),
+WITH hourly AS ({_HOURLY_DUCK}),
 chunked AS (
   SELECT h.event_type, s.s, h.hidx // s.s AS chunk, h.hidx, h.v
   FROM hourly h CROSS JOIN (SELECT unnest([8, 16, 32]) AS s) s
@@ -3736,7 +3710,7 @@ def ts_pacf(spark: SparkSession, sf_dir: str) -> DataFrame:
     |types| cell grain; the closed-form order-3 recursion is row-local
     double algebra on identical exact-ratio operands (ROUND(9))."""
     ev = table(spark, sf_dir, "events")
-    ev.createOrReplaceTempView("pacf_events")
+    ev.createOrReplaceTempView(scoped_view(spark, "pacf_events"))
     return spark.sql(_PACF_ORACLE.replace("FROM events", "FROM pacf_events"))
 
 
@@ -3754,13 +3728,7 @@ def ts_pacf(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TWO_PI = "6.283185307179586"
 
 _SPECTRAL_ORACLE = f"""
-WITH hourly AS (
-  SELECT event_type,
-         CAST(CAST(ts AS DATE) - DATE '2024-01-01' AS BIGINT) * 24
-           + CAST(hour(ts) AS BIGINT) AS hidx,
-         CAST(SUM(CAST(floor(value * 1000000.0) AS BIGINT)) AS BIGINT) AS v
-  FROM events GROUP BY 1, 2
-),
+WITH hourly AS ({_HOURLY_DUCK}),
 phase AS (
   SELECT event_type, p.period, hidx % p.period AS ph,
          CAST(SUM(v) AS BIGINT) AS pv
@@ -3876,13 +3844,8 @@ def ts_spectral_power(spark: SparkSession, sf_dir: str) -> DataFrame:
 # with perplexity 2^H the "effective branching factor". All counts are
 # exact BIGINTs; each of the <= |types|^2 = 25 cell terms nano-quantizes
 # its libm log2 before the bounded order-free fold (ts_hurst recipe).
-_ENTROPY_RATE_ORACLE = """
-WITH seq AS (
-  SELECT user_id, event_type,
-         LAG(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-           AS prev_type
-  FROM events
-),
+_ENTROPY_RATE_ORACLE = f"""
+WITH seq AS ({_TRANSITIONS_DUCK}),
 pairs AS (
   SELECT prev_type, event_type AS next_type,
          CAST(COUNT(*) AS BIGINT) AS c

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.geo import HAVERSINE_SQL, SYNTH_LAT_SQL, SYNTH_LON_SQL
 from ..registry import register
+from ..session import scoped_view
 from ..tables import table
 
 _PART_DIST = HAVERSINE_SQL.format(
@@ -116,7 +117,9 @@ def udf_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spark.udtf.register("aqps_paginate", Paginate)
     nation = table(spark, sf_dir, "nation")
-    nation.filter(F.col("n_nationkey") < 3).createOrReplaceTempView("aqps_udtf_input")
+    nation.filter(F.col("n_nationkey") < 3).createOrReplaceTempView(
+        scoped_view(spark, "aqps_udtf_input")
+    )
     return spark.sql(
         "SELECT p.city, p.page FROM aqps_udtf_input, "
         "LATERAL aqps_paginate(n_name, n_nationkey + 1) p"
@@ -174,7 +177,7 @@ def udtf_split(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield i, tok
 
     spark.udtf.register("udtf_split_tokens", SplitTokens)
-    table(spark, sf_dir, "documents").createOrReplaceTempView("documents_v")
+    table(spark, sf_dir, "documents").createOrReplaceTempView(scoped_view(spark, "documents_v"))
     return spark.sql(
         """
         SELECT d.doc_id, t.pos, t.token

@@ -26,7 +26,14 @@ Limits: stream micro-batch jobs run under their own ``runId`` group and
 are not counted. The job group is set here, not in ``register()``:
 perfbench sets a per-phase group around the builder (perfbench/run.py),
 which a group set inside the wrapper would overwrite, leaving perfbench's
-build jobs uncharged.
+build jobs uncharged. A ``graph_*`` record depends on which graph queries
+ran before it: the co-purchase edge memo (operators/graph.py) is kept
+across queries here, as in a driver pass, while bench.py evicts it before
+every timed run. Once an earlier query has materialized the memo, its
+cached relation reports its real size and more joins on it plan as
+broadcasts, so shapes and times differ from a run of the query alone.
+Evicting it per query would cost a cold edge build each time (23.0-27.1 s
+against 15.5-18.1 s for the 23 graph queries at sf0.01).
 
 Usage: python scripts/sweep_all.py [--runs 2] [--out FILE] [--queries q1,q2]
                                    [--sf-dir DIR [--sf-dir BIG_DIR]]

@@ -605,15 +605,16 @@ def test_sql_recursive_plans_recursion_not_unrolling(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
-def test_sql_recursive_row_limit_is_child_session_scoped(spark, sf_dir):
-    """sql_recursive raises cteRecursionRowLimit to 1e9 — but on a CHILD
-    session only: the shared session must keep the 1M default guard so a
-    runaway recursion in any OTHER query is still caught (ADVICE r5)."""
-    before = spark.conf.get("spark.sql.cteRecursionRowLimit")
+def test_sql_recursive_row_limit_is_query_scoped(spark, sf_dir):
+    """sql_recursive raises cteRecursionRowLimit to 1e9 in the caller's own
+    session, as a declared query conf: every OTHER registered query must
+    still run under the 1M default guard, so a runaway recursion there is
+    still caught (ADVICE r5)."""
     df = SPECS["sql_recursive"].builder(spark, sf_dir)
-    assert df.count() > 0  # executes under the child session's raised limit
-    assert spark.conf.get("spark.sql.cteRecursionRowLimit") == before
-    assert before != str(1_000_000_000)
+    assert df.sparkSession is spark
+    assert df.count() > 0
+    SPECS["agg_stats"].builder(spark, sf_dir)
+    assert spark.conf.get("spark.sql.cteRecursionRowLimit") == "1000000"
 
 
 def test_snk_zorder_pushes_both_dimensions(spark, sf_dir):

@@ -3,6 +3,7 @@
 driver's ``CORRECTNESS_r<N>.json`` history (see registry.py). The order tests
 plant history files in ``tmp_path``."""
 
+import inspect
 import json
 import os
 import pathlib
@@ -122,6 +123,45 @@ def test_survey_section2_matches_registry():
     assert not ghost_rows, f"SURVEY §2 table rows with no registered query: {ghost_rows}"
 
 
+# A CTE head, ``name AS (`` or ``name AS MATERIALIZED (``; a named window
+# (``WINDOW w AS (PARTITION BY ...)``) matches too but is not a relation.
+_CTE_HEAD = re.compile(r"\b\w+\s+AS\s+(?:MATERIALIZED\s+)?\(", re.IGNORECASE)
+_WINDOW_SPEC = re.compile(r"(?:PARTITION|ORDER)\s+BY\b|ROWS\b|RANGE\b", re.IGNORECASE)
+
+
+def _cte_bodies(sql: str):
+    """The whitespace-collapsed text inside each CTE head's matching paren."""
+    for m in _CTE_HEAD.finditer(sql):
+        depth = 0
+        for j in range(m.end() - 1, len(sql)):
+            depth += {"(": 1, ")": -1}.get(sql[j], 0)
+            if depth == 0:
+                yield " ".join(sql[m.end() : j].split())
+                break
+
+
+def test_oracles_spell_each_shared_relation_once():
+    """Oracles compose like their builders: a relation that two oracles of
+    one module share is one named DuckDB fragment they interpolate. So no
+    CTE body of 60+ characters in an assembled oracle may occur twice in
+    its module's whitespace-collapsed source, or one edit to the relation
+    would have to be repeated at every copy."""
+    sources: dict[str, str] = {}
+    copies: dict[str, int] = {}
+    for spec in QUERIES.values():
+        if spec.oracle is None:
+            continue
+        module = spec.builder.__module__
+        if module not in sources:
+            sources[module] = " ".join(inspect.getsource(sys.modules[module]).split())
+        for body in _cte_bodies(spec.oracle):
+            if len(body) >= 60 and not _WINDOW_SPEC.match(body):
+                n = sources[module].count(body)
+                if n > 1:
+                    copies[f"{module}: {body}"] = n
+    assert not copies, f"CTE bodies spelled more than once: {copies}"
+
+
 def test_close_round_freshness_gate(tmp_path):
     """The round-close seal refuses when more registered operators lack a
     passing driver row than one 50-slot window can sample."""
@@ -166,10 +206,10 @@ def test_declared_confs_reset_by_next_build(spark, sf_dir):
 
 
 def test_every_build_releases_scoped_persists(spark, sf_dir):
-    """sql_recursive runs on a child session, but its build must still
-    release the previous query's scoped persists on the shared one."""
+    """Every registered build, sql_recursive's included, releases the
+    previous query's scoped persists."""
     jsc = spark.sparkContext._jsc
-    SPECS["sql_recursive"].builder(spark, sf_dir)  # memoizes its child session
+    SPECS["sql_recursive"].builder(spark, sf_dir)
     SPECS["win_ntile"].builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
     persisted = jsc.getPersistentRDDs().size()
     SPECS["sql_recursive"].builder(spark, sf_dir)
@@ -212,6 +252,22 @@ def test_next_build_drops_scoped_tables(spark, sf_dir):
     assert len(names) == 2 and jb.count() > 0
     SPECS["agg_stats"].builder(spark, sf_dir)
     assert not [t.name for t in spark.catalog.listTables() if t.name in names]
+
+
+def test_next_build_drops_builder_temp_views(spark, sf_dir):
+    """Temp views a builder registers for its SQL text are query-scoped:
+    the next registered build drops them, so none outlives its query."""
+    def temp_views() -> set[str]:
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    registered = set()
+    for name in ("sql_q1", "ts_crossover", "udf_table"):
+        assert SPECS[name].builder(spark, sf_dir).count() > 0
+        registered |= temp_views()
+    views = {"lineitem", "xo_daily", "aqps_udtf_input"}
+    assert views <= registered
+    SPECS["agg_stats"].builder(spark, sf_dir)
+    assert not temp_views() & views
 
 
 def test_open_cost_lets_a_few_mb_file_span_the_cores(spark, tmp_path):
